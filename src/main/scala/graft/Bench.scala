@@ -163,13 +163,13 @@ object Bench {
     var err: Option[String] = None
     val runs = (1 to iters).map { _ =>
       // Harness hygiene, not caching: drop the previous run's leaked
-      // localCheckpoint round state (pinned session caches excepted)
-      // BEFORE the timer starts — each iteration reconstructs its
-      // DataFrame from the parquet inputs, so no measured work is
-      // ever reused; the checkpoint WRITE stays inside the timed
-      // region. See IterState.releaseAllExceptPinned for the r13
-      // eviction-churn forensics that motivated this.
-      graft.graph.IterState.releaseAllExceptPinned(spark)
+      // graft checkpoints (pinned session caches excepted) BEFORE the
+      // timer starts — each iteration reconstructs its DataFrame from
+      // the parquet inputs, so no measured work is ever reused; the
+      // checkpoint WRITE stays inside the timed region. See
+      // Materialize.releaseOwned for the r13 eviction-churn forensics
+      // that motivated this.
+      graft.ops.Materialize.releaseOwned(spark)
       drainListenerBus(spark)
       val before = listener.snap
       val (cg0, jit0) = compileSnap()

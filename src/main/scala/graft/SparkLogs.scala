@@ -7,11 +7,12 @@ import org.apache.logging.log4j.core.filter.RegexFilter
 /** Log hygiene for the driver-run mains.
   *
   * The iterative graph ops (PageRank / ConnectedComponents /
-  * LabelPropagation / Bfs / Hierarchy) follow a deliberate memory
-  * discipline: each round's state is `localCheckpoint(true)`-ed
-  * (eager — fully materialized before use) and the SUPERSEDED round's
-  * blocks are explicitly unpersisted, so peak storage is two rounds,
-  * not `iters` rounds — the property that matters when the per-round
+  * LabelPropagation / Bfs / Hierarchy) follow the
+  * [[graft.ops.Materialize]] memory discipline: each round's state is
+  * a local checkpoint and the SUPERSEDED round's blocks are explicitly
+  * released (`Materialize.release`; the harness sweeps leftovers with
+  * `Materialize.releaseOwned`), so peak storage is two rounds, not
+  * `iters` rounds — the property that matters when the per-round
   * state is 100 TB-scale. Spark 4's `RDD.unpersist` logs an
   * unconditional WARN ("was locally checkpointed, its lineage has
   * been truncated and cannot be recomputed") for ANY locally-

@@ -51,11 +51,11 @@ object Verify {
       case None        => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
-      // release prior queries' leaked localCheckpoint round state,
-      // pinned session caches excepted (same hygiene as Bench —
-      // accumulated blocks poison later queries' execution-memory
-      // grants; see IterState.releaseAllExceptPinned)
-      graft.graph.IterState.releaseAllExceptPinned(spark)
+      // release prior queries' leaked graft checkpoints, pinned
+      // session caches excepted (same hygiene as Bench — accumulated
+      // blocks poison later queries' execution-memory grants; see
+      // Materialize.releaseOwned)
+      graft.ops.Materialize.releaseOwned(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case scala.util.control.NonFatal(e) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
 import graft.text.TextAnalysis
 
 /** Deduplication operators for the training-data surface: exact,
@@ -132,18 +133,21 @@ object Dedup {
     *    collisions;
     *  - verification is two id-keyed array joins + one narrow
     *    `array_intersect` per candidate, never a per-shingle pair
-    *    explosion.
+    *    explosion;
+    *  - building the frame may run one job: the per-doc rarity arrays
+    *    are checkpointed when the input is large, as graft-owned blocks
+    *    that [[graft.ops.Materialize.releaseOwned]] reclaims.
     */
   /** Shared prefix-filter substrate for [[ngramJaccard]] and
     * [[containmentPairs]]: hashed (optionally df-capped) shingles plus
     * each doc's shingle-hash array in GLOBAL RARITY order — (document
     * frequency asc, hash asc), total and deterministic — so a prefix
     * of the array is exactly the rarest shingles the prefix-filter
-    * theorems quantify over. Returns `arrs = (id, hs, n)`,
-    * eagerly materialized; the caller derives its own prefix length
-    * (the slack and the length-filter differ between the Jaccard and
-    * containment forms) and, when it needs the flat posting list,
-    * re-derives it as `explode(hs)` — hs holds exactly the doc's
+    * theorems quantify over. Returns `arrs = (id, hs, n)`, eagerly
+    * checkpointed when the input is large; the caller derives its own
+    * prefix length (the slack and the length-filter differ between the
+    * Jaccard and containment forms) and, when it needs the flat posting
+    * list, re-derives it as `explode(hs)` — hs holds exactly the doc's
     * post-cap hashes, so the explode ≡ the (id, h) relation without
     * another gram pass. One definition so a fix to the rarity order,
     * the cap, or the slack cannot silently miss one of the two
@@ -170,22 +174,10 @@ object Dedup {
     // exchanges have different children), measured cheaper than a
     // second sequential checkpoint barrier at every SF probed.
     //
-    // SIZE-GATED, like Spark's own broadcast threshold: the checkpoint
-    // is a barrier that serializes otherwise-concurrent plan branches,
-    // so on a corpus small enough that eight parallel gram passes fit
-    // one short job it LOSES wall (close sf0.1 A/B: containment
-    // 1.50 → 2.16 s eager vs lazy) while at the ×10 leg it wins
-    // outright (9.87 → 8.17 s, run_ms −18%). The probe is the
-    // optimizer's size ESTIMATE of the input subtree (file bytes —
-    // metadata only, no job); the crossover sits well below one
-    // executor-core's worth of scan work, so the default only keeps
-    // toy corpora lazy. Parameterised for deployments via
-    // spark.graft.dedup.materializeIndexMinBytes.
-    val matMin = df.sparkSession.conf
-      .getOption("spark.graft.dedup.materializeIndexMinBytes")
-      .map(_.toLong).getOrElse(4L << 20)
-    val materialize =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >= matMin
+    // SIZE-GATED on the input's estimate (file bytes — metadata only,
+    // no job) at Materialize.PrefixIndexMinBytes; the constant carries
+    // the measured break-even. When the gate fires the blocks are
+    // graft-owned, so the harness's releaseOwned reclaims them.
     val sh0 = df.select(col(idCol),
       graft.functions.GramHashes.gramHashesDistinct(col(textCol), k))
     val sh = maxDf match {
@@ -202,7 +194,8 @@ object Dedup {
       .select(col(idCol),
         expr("transform(__s, s -> s.h)").as("hs"),
         size(col("__s")).as("n"))
-    if (materialize) arrs.localCheckpoint(true) else arrs
+    Materialize.checkpointIfLarge(arrs, Materialize.PrefixIndexMinBytes,
+      sizedBy = Some(df))
   }
 
   def ngramJaccard(df: DataFrame, threshold: Double = 0.8, k: Int = 3,

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Ops
+import graft.ops.{Materialize, Ops}
 
 /** Empirical scaling probe: replicate the sf0.1 lineitem N× with
   * disjoint key ranges (so group/join cardinalities scale too) and time
@@ -546,7 +546,7 @@ object ScaleProbe {
           .withColumn("embedding", expr(
             s"transform(embedding, (x, j) -> " +
               s"CASE WHEN pmod(hash($i, j), 2) = 0 THEN -x ELSE x END)"))
-      }.reduce(_ unionByName _).localCheckpoint(true)
+      }.reduce(_ unionByName _).transform(Materialize.checkpoint(_))
       for (k <- Seq(64, 256)) {
         val t0 = System.nanoTime()
         val n = graft.sim.Similarity.kCenterGreedy(corpus16k, k).count()

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Bounded-depth breadth-first search over an edge list: minimum hop
   * distance from a seed set — the "link distance from trusted sources"
   * primitive crawl-curation pipelines score documents with, and the
@@ -36,14 +38,14 @@ object Bfs {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"))
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     for (round <- 1 to maxDepth) {
       val next = dist.filter(col("dist") === round - 1)
         .join(e, dist("node") === e("src"))
@@ -51,11 +53,11 @@ object Bfs {
         .withColumn("dist", lit(round.toLong))
       val merged = dist.unionByName(next)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-      IterState.release(dist)
+        .transform(Materialize.checkpoint(_))
+      Materialize.release(dist)
       dist = merged
     }
-    IterState.release(e)
+    Materialize.release(e)
     dist
   }
 
@@ -88,12 +90,12 @@ object Bfs {
       .select(col(nodeCol).as("node"), col(edgeCol).as("edge"))
       .filter(col("node").isNotNull && col("edge").isNotNull)
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val nodes = inc.select("node").distinct()
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"))
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     for (round <- 1 to maxDepth) {
       val frontierEdges = dist.filter(col("dist") === round - 1)
         .join(inc, Seq("node"))
@@ -103,11 +105,11 @@ object Bfs {
         .withColumn("dist", lit(round.toLong))
       val merged = dist.unionByName(next)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-      IterState.release(dist)
+        .transform(Materialize.checkpoint(_))
+      Materialize.release(dist)
       dist = merged
     }
-    IterState.release(inc)
+    Materialize.release(inc)
     dist
   }
 }

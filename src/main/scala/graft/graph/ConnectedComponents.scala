@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Connected components over an edge list — the clustering step a
   * dedup pipeline needs between "near-dup PAIRS" (Dedup/Similarity
   * output) and "keep one document per duplicate CLUSTER": transitive
@@ -22,9 +24,10 @@ import org.apache.spark.sql.functions._
   *    variant (Kiveris et al., "Connected components in MapReduce and
   *    beyond", SoCC 2014) only pays off on long-chain graphs, which
   *    dedup edges are not.
-  *  - Lineage is cut with `localCheckpoint` each round — without it
-  *    the plan doubles per iteration and the optimizer re-walks the
-  *    whole history (classic iterative-Spark trap).
+  *  - Lineage is cut with a [[graft.ops.Materialize]] checkpoint each
+  *    round — without it the plan doubles per iteration and the
+  *    optimizer re-walks the whole history (classic iterative-Spark
+  *    trap).
   *  - The per-round shuffle is keyed by node id; skew equals max
   *    degree, which for near-dup graphs is bounded by the candidate
   *    caps upstream (`maxDf` / `maxBucket` in [[graft.dedup.Dedup]]).
@@ -44,14 +47,14 @@ object ConnectedComponents {
     val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
       .distinct()
-      .localCheckpoint(true) // reused every round — compute once
+      .transform(Materialize.checkpoint(_)) // reused every round
     // LAZY checkpoint: the labelSum collect below materializes the
     // blocks in the same job that answers the convergence test — one
     // job per round instead of two (the Hierarchy r14 discipline;
     // per-job fixed cost dominates these loops at small SF)
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("component", col("id"))
-      .localCheckpoint(false)
+      .transform(Materialize.checkpoint(_, eager = false))
     // Convergence detection without a labels-vs-labels compare join:
     // min-propagation is monotone (labels only ever DECREASE), so the
     // label sum strictly decreases every non-converged round and is
@@ -64,11 +67,9 @@ object ConnectedComponents {
         .collect()(0).getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
     var prevSum = labelSum(labels)
-    // localCheckpoint pins each round's blocks in executor storage;
-    // superseded rounds are explicitly unpersisted below (their data
-    // lives only in those blocks — safe because once `stepped` is
+    // Superseded rounds are released below (once `stepped` is
     // materialized nothing references the prior round again). The
-    // RETURNED labels stay cached deliberately: callers typically
+    // RETURNED labels stay checkpointed deliberately: callers typically
     // consume them several times (join back, count, write).
     var iter = 0
     var converged = false
@@ -82,17 +83,18 @@ object ConnectedComponents {
         .union(labels)
         .groupBy("id")
         .agg(min("component").as("component"))
-        .localCheckpoint(false) // cut lineage each round
+        // cut lineage each round
+        .transform(Materialize.checkpoint(_, eager = false))
       // materializes the lazy checkpoint AND tests convergence in one
       // job; labels' blocks are still live for the lineage until here
       val s = labelSum(stepped)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      IterState.release(labels)
+      Materialize.release(labels)
       labels = stepped
       iter += 1
     }
-    IterState.release(sym)
+    Materialize.release(sym)
     if (!converged) throw new IllegalStateException(
       s"connected components did not converge in $maxIter rounds " +
         "(graph diameter exceeds maxIter)")

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Hierarchy flattening — the recursive-CTE capability (org charts,
   * bill-of-materials, category trees) expressed as iterative keyed
   * joins, since Spark has no `WITH RECURSIVE`.
@@ -18,9 +20,10 @@ import org.apache.spark.sql.functions._
   *  - Each round is ONE equi-join keyed on the ancestor id over the
   *    full node set — no driver-side traversal, no collect; total work
   *    O(N log D) join rows.
-  *  - Lineage is cut with `localCheckpoint` per round and superseded
-  *    rounds are unpersisted — the iterative-Spark plan-doubling trap
-  *    (see [[ConnectedComponents]], same discipline).
+  *  - Lineage is cut with a [[graft.ops.Materialize]] checkpoint per
+  *    round and superseded rounds are released — the iterative-Spark
+  *    plan-doubling trap (see [[ConnectedComponents]], same
+  *    discipline).
   *  - Join skew equals in-degree of the PARTIAL ancestor pointers,
   *    which pointer doubling spreads: after round k a node's pointer
   *    lands 2^k levels up, so hot roots only concentrate in the last
@@ -63,7 +66,7 @@ object Hierarchy {
         col(parentCol).cast("long").as("anc"),
         when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"),
         col(idCol).cast("string").as("path"))
-      .localCheckpoint(false)
+      .transform(Materialize.checkpoint(_, eager = false))
     def unresolved(df: DataFrame): Long =
       df.filter(col("anc").isNotNull).count()
     var remaining = unresolved(state)
@@ -85,15 +88,12 @@ object Hierarchy {
           when(col("b_path").isNull, col("path"))
             .otherwise(concat(col("b_path"), lit("/"), col("path")))
             .as("path"))
-        .localCheckpoint(false)
+        .transform(Materialize.checkpoint(_, eager = false))
       // the count materializes the lazy checkpoint (one job for both)
       remaining = unresolved(stepped)
-      // IterState.release, not Dataset.unpersist: the latter goes
-      // through the CacheManager, which never registered the
-      // localCheckpoint blocks — a silent no-op that would retain
-      // every superseded round until GC-driven cleanup. Released only
-      // now: stepped's blocks exist, nothing reads state's again.
-      IterState.release(state)
+      // Released only now: stepped's blocks exist, nothing reads
+      // state's again.
+      Materialize.release(state)
       state = stepped
       iter += 1
     }

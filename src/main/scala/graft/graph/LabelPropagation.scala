@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Synchronous weighted label propagation (Raghavan, Albert & Kumara,
   * "Near linear time algorithm to detect community structures in
   * large-scale networks", Phys. Rev. E 2007) — community detection
@@ -48,12 +50,12 @@ object LabelPropagation {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     var labels = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     for (_ <- 1 to iters) {
       // weight of each candidate label at each node this round
       val flow = e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
@@ -68,11 +70,11 @@ object LabelPropagation {
       val stepped = labels.join(pick, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint(true)
-      IterState.release(labels)
+        .transform(Materialize.checkpoint(_))
+      Materialize.release(labels)
       labels = stepped
     }
-    IterState.release(e)
+    Materialize.release(e)
     labels
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Weighted PageRank (Brin & Page, "The anatomy of a large-scale
   * hypertextual Web search engine", WWW 1998) over an edge list —
   * power iteration with damping and dangling-mass redistribution.
@@ -14,9 +16,10 @@ import org.apache.spark.sql.functions._
   * grouped sum — the same shape as
   * [[ConnectedComponents]], and the same iterative-Spark discipline:
   *  - the out-degree-normalized edge list (`frac = w / out_w`) is
-  *    computed ONCE and localCheckpoint'd, rounds only touch it read-only;
-  *  - each round's ranks are localCheckpoint'd to cut lineage, and the
-  *    superseded round's blocks are explicitly unpersisted;
+  *    computed ONCE and checkpointed ([[graft.ops.Materialize]]),
+  *    rounds only touch it read-only;
+  *  - each round's ranks are checkpointed to cut lineage, and the
+  *    superseded round's blocks are explicitly released;
   *  - dangling mass (rank parked on nodes with no out-edges) is folded
   *    back uniformly, so total rank stays 1 and the iteration is a
   *    proper stochastic-matrix power step.
@@ -40,11 +43,11 @@ object PageRank {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("wt") > 0)
       .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val n = nodes.count()
     if (n == 0) return nodes.withColumn("rank", lit(0.0))
     // out-normalize once: each edge carries the fraction of its source's
@@ -52,11 +55,11 @@ object PageRank {
     val eNorm = e
       .join(e.groupBy("src").agg(sum("wt").as("__outw")), "src")
       .select(col("src"), col("dst"), (col("wt") / col("__outw")).as("frac"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val hasOut = eNorm.select(col("src").as("node")).distinct()
       .withColumn("__has_out", lit(1))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
+    var ranks = Materialize.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
     // Sinkless graphs (every node has an out-edge — symmetrized graphs
     // always qualify: q_textrank, q_ppr_terms) take the UNROLLED path
     // (VERDICT r12 #5): the dangling term is identically 0, so the
@@ -108,17 +111,14 @@ object PageRank {
                     col("__dang") / lit(n.toDouble))).as("rank"))
           }
       }
-      val stepped = cur.localCheckpoint(true)
-      IterState.release(ranks)
+      val stepped = Materialize.checkpoint(cur)
+      Materialize.release(ranks)
       ranks = stepped
       i += steps
     }
-    IterState.release(eNorm)
-    IterState.release(hasOut)
-    IterState.release(e)
     // the final ranks frame is itself checkpointed — nothing references
     // the intermediate frames anymore
-    IterState.release(nodes)
+    Materialize.release(eNorm, hasOut, e, nodes)
     ranks
   }
 
@@ -160,16 +160,16 @@ object PageRank {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("wt") > 0)
       .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     // teleport distribution: uniform over the seeds that exist in the
     // graph (restarting on a non-node would leak rank mass)
     val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val nSeeds = seedNodes.count()
     require(nSeeds > 0, "personalized PageRank needs >=1 seed in the graph")
     val sW = seedNodes.withColumn("__sw", lit(1.0 / nSeeds))
@@ -189,7 +189,7 @@ object PageRank {
     val eBall = ball match {
       case Some(b) => e
         .join(b.select(col("node").as("src")), Seq("src"), "left_semi")
-        .localCheckpoint(true)
+        .transform(Materialize.checkpoint(_))
       case None => e
     }
     val eNormFull = eBall
@@ -199,7 +199,7 @@ object PageRank {
       case Some(b) => eNormFull
         .join(b.select(col("node").as("dst")), Seq("dst"), "left_semi")
       case None => eNormFull
-    }).localCheckpoint(true)
+    }).transform(Materialize.checkpoint(_))
     // dangling = no out-edges in the FULL graph: a boundary node whose
     // out-edges all leave the ball is NOT dangling — its mass exits,
     // exactly as in the full run — only true sinks teleport back.
@@ -208,11 +208,11 @@ object PageRank {
     val hasOut = eBall.select(col("src").as("node")).distinct()
       .join(dom, Seq("node"), "left_semi")
       .withColumn("__has_out", lit(1))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     // start AT the teleport distribution (the walk's stationary prior)
     var ranks = dom.join(sW, Seq("node"), "left")
       .select(col("node"), coalesce(col("__sw"), lit(0.0)).as("rank"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     // sinkless ⇒ dangling ≡ 0 ⇒ single-use round lineage ⇒ five rounds
     // per materialization (same argument, cadence and r13 depth
     // measurement as [[run]]; a boundary node whose edges all leave
@@ -253,18 +253,13 @@ object PageRank {
                   .as("rank"))
           }
       }
-      val stepped = cur.localCheckpoint(true)
-      IterState.release(ranks)
+      val stepped = Materialize.checkpoint(cur)
+      Materialize.release(ranks)
       ranks = stepped
       i += steps
     }
-    IterState.release(eNorm)
-    IterState.release(hasOut)
-    IterState.release(e)
-    if (ball.isDefined) IterState.release(eBall)
-    IterState.release(seedNodes)
-    IterState.release(nodes)
-    ball.foreach(b => IterState.release(b))
+    Materialize.release(eNorm, hasOut, e, seedNodes, nodes)
+    ball.foreach(b => Materialize.release(eBall, b))
     ranks
   }
 }

@@ -56,37 +56,6 @@ object Ops {
       df.repartition(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
-  /** Eager `localCheckpoint` when the optimizer's size ESTIMATE of the
-    * subtree is large enough that re-executing it once per consumer
-    * costs more than one materialization barrier — the
-    * [[graft.dedup.Dedup]] prefixIndex size gate generalized (guide
-    * §1.2/§5). Spark's ReuseExchange dedups only IDENTICAL exchange
-    * pairs; a multi-consumer subtree whose consumers key differently
-    * re-executes once per consumer without this.
-    *
-    * CALLER NOTES (the prefixIndex contract): when the gate fires this
-    * runs a Spark job at DataFrame-CONSTRUCTION time, and the persisted
-    * blocks are never released by the operator itself — the returned
-    * frame must outlive every consumer. Library callers composing many
-    * pipelines in one session should release superseded results
-    * (`IterState.release`) or run with the gate raised
-    * (`spark.graft.materializeMinBytes`, default 256 KB; the probe is
-    * metadata-only — no job). The default is LOWER than the
-    * prefixIndex gate's 4 MB because the break-even differs: there the
-    * barrier serializes otherwise-concurrent plan branches, here it
-    * replaces whole re-executions of a CPU-dense subtree (measured
-    * r14, q_curate at sf0.1/32c: run_ms 3.8 s lazy vs 2.6 s
-    * materialized; sf0.01-class inputs sit at the break-even).
-    */
-  def checkpointIfLarge(df: DataFrame): DataFrame = {
-    val minBytes = df.sparkSession.conf
-      .getOption("spark.graft.materializeMinBytes")
-      .map(_.toLong).getOrElse(256L << 10)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes)
-      df.localCheckpoint(true)
-    else df
-  }
-
   /** P1: ordered column projection. */
   def project(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(cols.map(col): _*)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.ops.Materialize
 import graft.text.TextAnalysis
 
 /** End-to-end training-data curation: the composition a pretraining
@@ -102,9 +103,10 @@ object TrainingPipeline {
     // profile: the scan+score segment was executed 3× per q_curate
     // run). Projected to the columns the pipeline still needs, so the
     // checkpointed blocks stay narrow.
-    val exact = graft.ops.Ops.checkpointIfLarge(
+    val exact = Materialize.checkpointIfLarge(
       Dedup.exact(inLang).select(
-        "doc_id", "text", "lang_pred", "quality_score"))
+        "doc_id", "text", "lang_pred", "quality_score"),
+      Materialize.MultiConsumerMinBytes)
     // near-dup: inverted-index candidates, drop the larger id per pair.
     // Pair-based dropping is deliberately single-pass (no iteration on
     // the curation hot path): it guarantees no surviving PAIR exceeds

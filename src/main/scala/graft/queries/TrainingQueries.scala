@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.io.Tables
+import graft.ops.Materialize
 import graft.sim.{Pca, Similarity}
 import graft.text.TextAnalysis
 
@@ -139,23 +140,27 @@ object TrainingQueries {
     * restricted to pairs touching a new doc, which proves the
     * incremental plan loses nothing.
     *
-    * The old-corpus signature index is SESSION-CACHED (content-tagged
-    * localCheckpoint, the [[ngramClusterComponents]] discipline): in
-    * production that index is parquet persisted between daily runs —
-    * its build is not part of any run's cost — so the first plan in a
-    * session pays the build and every later run scans the pinned
-    * blocks. Before r11 this query re-embedded the 80%-corpus
-    * signature pass TWICE per run (band probe + verification join; no
-    * persist boundary → no common-subtree reuse) and cost more than
-    * the full q_dedup_minhash rebuild — the honest incremental run
-    * cost is sign-the-batch once + two index-scan joins.
+    * The old-corpus signature index is SESSION-CACHED
+    * ([[graft.ops.Materialize.sessionCached]], content-tagged and
+    * pinned, like [[ngramClusterComponents]]): in production that index
+    * is parquet persisted between daily runs — its build is not part of
+    * any run's cost — so the first plan in a session pays the build and
+    * every later run scans the pinned blocks. The batch signatures are
+    * checkpointed at DataFrame construction; those blocks are
+    * graft-owned and reclaimed by [[graft.ops.Materialize.releaseOwned]]
+    * between queries, not by this operator. Before r11 this query
+    * re-embedded the 80%-corpus signature pass TWICE per run (band probe
+    * + verification join; no persist boundary → no common-subtree
+    * reuse) and cost more than the full q_dedup_minhash rebuild — the
+    * honest incremental run cost is sign-the-batch once + two
+    * index-scan joins.
     */
   def dedupMinhashIncr(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val batch = docs.filter(pmod(col("doc_id"), lit(5L)) === 4)
     // sign the batch ONCE and materialize — production appends these
     // rows to the persisted index anyway, so the run cost is honest
-    val newSigs = Dedup.minhashSignatures(batch).localCheckpoint()
+    val newSigs = Materialize.checkpoint(Dedup.minhashSignatures(batch))
     val oldSigs = minhashOldIndex(s, d)
     Dedup.minhashIncrementalSigned(newSigs,
         Dedup.minhashBands(oldSigs), oldSigs)
@@ -166,30 +171,13 @@ object TrainingQueries {
     * [[dedupMinhashIncr]] — the in-memory stand-in for the parquet
     * band/signature index a production pipeline persists between
     * incremental runs ([[graft.io.Bucketing]] is the disk layout).
-    * Content-tagged exactly like [[ngramClusterComponents]]'s cache so
-    * a regenerated corpus can never serve stale signatures.
+    * Content-tagged by [[graft.ops.Materialize.sessionCached]] so a
+    * regenerated corpus can never serve stale signatures.
     */
-  private val minhashIdxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]
-
   private def minhashOldIndex(s: SparkSession, d: String): DataFrame =
-    minhashIdxCache.synchronized {
-      val it = minhashIdxCache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val tag = docsContentTag(d)
-      val cur = minhashIdxCache.get((s, d))
-      if (cur != null && cur._1 == tag) cur._2
-      else {
-        if (cur != null) graft.graph.IterState.release(cur._2)
-        val old = Tables.documents(s, d)
-          .filter(pmod(col("doc_id"), lit(5L)) < 4)
-        val sigs = Dedup.minhashSignatures(old).localCheckpoint()
-        // exempt from the harness's between-query block release — this
-        // lineage-cut frame is consumed by LATER queries by design
-        graft.graph.IterState.pin(sigs)
-        minhashIdxCache.put((s, d), (tag, sigs))
-        sigs
-      }
+    Materialize.sessionCached(s, "minhash-index", s"$d/documents.parquet") {
+      Materialize.checkpoint(Dedup.minhashSignatures(Tables.documents(s, d)
+        .filter(pmod(col("doc_id"), lit(5L)) < 4)))
     }
 
   /** Incremental embedding near-dup: the `vec_id % 5 == 4` slice
@@ -1631,7 +1619,9 @@ object TrainingQueries {
     * per-doc mean log-prob. Everything is a keyed agg or a broadcast
     * join against model tables whose size is vocab-bounded, so the
     * plan is corpus-linear; "train" and "score" are the same frames a
-    * production run would persist and reuse.
+    * production run would persist and reuse. Building the frame runs one
+    * job (the bigram checkpoint below); its blocks are graft-owned and
+    * reclaimed by [[graft.ops.Materialize.releaseOwned]].
     */
   def lmScore(s: SparkSession, d: String): DataFrame = {
     // r13 (guide §2.4 remove shuffles outright): adjacent bigrams come
@@ -1643,8 +1633,8 @@ object TrainingQueries {
     // the materialization order changes, and every consumer below is
     // an order-insensitive aggregate/join. The relation feeds FOUR
     // consumers (c12, c1, the vocab count, the per-doc join), so it is
-    // localCheckpoint'd to tokenize once, not four times (same
-    // discipline as the graph operators' round state).
+    // checkpointed to tokenize once, not four times (same discipline as
+    // the graph operators' round state).
     val pairArr = expr(
       """CASE WHEN size(__toks) >= 2 THEN
         |  transform(sequence(0, size(__toks) - 2),
@@ -1655,7 +1645,7 @@ object TrainingQueries {
         graft.text.TextAnalysis.tokens(col("text")).as("__toks"))
       .withColumn("e", explode(pairArr))
       .select(col("doc_id"), col("e.w").as("w"), col("e.w2").as("w2"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     val c12 = bg.groupBy("w", "w2").agg(count(lit(1)).as("c12"))
     val c1 = bg.groupBy("w").agg(count(lit(1)).as("c1"))
     val v = bg.agg(countDistinct("w").as("v"))
@@ -1834,71 +1824,27 @@ object TrainingQueries {
     * built — VERDICT r9 #3); the persisted-index discipline
     * ([[graft.io.Bucketing]], [[Dedup.minhashBands]]) applies
     * verbatim: build the relation ONCE per (session, corpus) — the
-    * closure output is an eager localCheckpoint, its blocks pinned in
-    * executor storage — and let every consumer scan those blocks
-    * instead of running a second closure. The cache key
-    * carries a file content tag (name:length:mtime, the
-    * [[graft.Bench.splitCopy]] discipline) so a regenerated corpus at
-    * the same path can never serve stale clusters; the superseded
-    * relation is unpersisted on refresh. At 100 TB this relation is
-    * what a pipeline lands to parquet between stages — the in-memory
-    * persist is the single-job degenerate case of that layout.
+    * closure output is a checkpoint, its blocks pinned in executor
+    * storage — and let every consumer scan those blocks instead of
+    * running a second closure. [[graft.ops.Materialize.sessionCached]]
+    * keys the entry by the documents file's content tag, so a
+    * regenerated corpus at the same path can never serve stale
+    * clusters; the superseded relation is released on refresh, and the
+    * harness's between-query sweep leaves the pinned one alone. At
+    * 100 TB this relation is what a pipeline lands to parquet between
+    * stages — the in-memory persist is the single-job degenerate case
+    * of that layout.
     */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]
-
-  private def docsContentTag(d: String): String = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    // RECURSIVE walk (ADVICE r10): a parquet dir can nest partition
-    // subdirs; a top-level-only listing would tag them all as one
-    // unchanged entry. Paths are repo-relative inside the root so a
-    // rename anywhere in the tree changes the tag.
-    def walk(x: java.io.File, prefix: String): Seq[String] =
-      if (x.isFile) Seq(s"$prefix${x.getName}:${x.length}:${x.lastModified}")
-      else Option(x.listFiles()).getOrElse(Array.empty[java.io.File])
-        .sortBy(_.getName).toSeq
-        .flatMap(c => walk(c, s"$prefix${x.getName}/"))
-    val entries = walk(f, "")
-    if (entries.isEmpty)
-      // non-local-filesystem dir (hdfs://, s3a://, …): no cheap content
-      // tag exists, so DISABLE caching rather than risk serving a stale
-      // closure for a regenerated corpus — a unique tag never matches
-      s"uncacheable:${java.util.UUID.randomUUID()}"
-    else entries.mkString("|")
-  }
-
   def ngramClusterComponents(s: SparkSession, d: String): DataFrame =
-    clusterCache.synchronized {
-      // Evict entries keyed by stopped sessions (ADVICE r10): their
-      // pinned checkpoint blocks are already gone with the executors,
-      // but the map references would keep DataFrames/sessions reachable
-      // for the life of the JVM across session restarts.
-      val it = clusterCache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val tag = docsContentTag(d)
-      val cur = clusterCache.get((s, d))
-      if (cur != null && cur._1 == tag) cur._2.withColumnRenamed("id", "doc_id")
-      else {
-        import graft.graph.ConnectedComponents
-        // release the superseded relation's pinned localCheckpoint
-        // blocks instead of waiting for driver GC + ContextCleaner.
-        // The cache holds the BARE checkpoint leaf (the rename is
-        // applied on return) because IterState.release only resolves
-        // a LogicalRDD leaf, not a Project over one.
-        if (cur != null) graft.graph.IterState.release(cur._2)
-        val docs = Tables.documents(s, d)
-        val pairs = Dedup.ngramJaccard(docs, threshold = 0.8)
-        // CC.run returns an EAGER localCheckpoint-backed frame: the
-        // closure is computed here, once, and its blocks stay pinned
-        // in executor storage — no extra persist layer needed
-        val comps = ConnectedComponents.run(pairs, "doc_a", "doc_b")
-        // exempt from the harness's between-query block release — this
-        // lineage-cut frame is consumed by LATER queries by design
-        graft.graph.IterState.pin(comps)
-        clusterCache.put((s, d), (tag, comps))
-        comps.withColumnRenamed("id", "doc_id")
-      }
-    }
+    Materialize.sessionCached(s, "ngram-clusters", s"$d/documents.parquet") {
+      // CC.run returns a localCheckpoint-backed frame: the closure is
+      // computed here, once. The cache holds that BARE checkpoint leaf
+      // (pin and release resolve a LogicalRDD root, not a Project over
+      // one), so the rename is applied on return.
+      graft.graph.ConnectedComponents.run(
+        Dedup.ngramJaccard(Tables.documents(s, d), threshold = 0.8),
+        "doc_a", "doc_b")
+    }.withColumnRenamed("id", "doc_id")
 
   /** Dedup clustering: near-dup pairs (n-gram Jaccard ≥ 0.8) →
     * transitive closure via [[graft.graph.ConnectedComponents]] → one
@@ -1908,8 +1854,8 @@ object TrainingQueries {
     * shared [[ngramClusterComponents]] relation: whichever of this /
     * [[dedupReps]] runs first in a session pays the build (visible as
     * iteration 1 in the bench walls array), every later plan reads the
-    * persisted relation — the production amortization, measured as it
-    * would actually run.
+    * pinned session-cache entry ([[graft.ops.Materialize.sessionCached]])
+    * — the production amortization, measured as it would actually run.
     */
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)

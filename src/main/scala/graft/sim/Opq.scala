@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.array_dot
+import graft.ops.Materialize
 
 /** Parametric Optimized Product Quantization (Ge, He, Ke & Sun,
   * "Optimized Product Quantization", CVPR 2013, §4 "OPQ-P"): rotate the
@@ -83,7 +84,7 @@ object Opq {
     // recompute trap as the round-1 simhash/assignCells plans, measured
     // at 13 s vs ~2 s for plain PQ at sf0.1. After it, encode/train
     // read a stored array exactly like they do from parquet.
-    val rc = rot(corpus).localCheckpoint(true)
+    val rc = Materialize.checkpoint(rot(corpus))
     val cb = ProductQuantizer.train(rc, m, ksub, iters, vecCol, idCol)
     ProductQuantizer.topK(
       ProductQuantizer.encode(rc, cb, vecCol), rot(queries), cb,

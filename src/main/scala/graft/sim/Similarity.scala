@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{array_cosine, array_dot, array_l2}
+import graft.ops.Materialize
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`), expression-only (codegen-friendly, no UDF).
@@ -946,7 +947,7 @@ object Similarity {
     * literal), vs the naive re-fold over all r selected centers which
     * is O(k²·n·d) with an O(k·d)-literal plan — irrelevant at k=8,
     * the whole game at a real coreset k in the thousands. Round state
-    * follows the [[graft.graph.IterState]] discipline (eager
+    * follows the [[graft.ops.Materialize]] discipline (eager
     * `localCheckpoint` per round, superseded blocks released → peak
     * storage two rounds); only the 1-row argmax ever reaches the
     * driver. Exactly equivalent to the re-fold: `1 − x` is monotone
@@ -981,7 +982,7 @@ object Similarity {
     var state = cu.filter(col("id") =!= seedId)
       .withColumn("mind",
         lit(1.0) - array_dot(col("u"), typedLit(seedVec.toSeq)))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint(_))
     try {
       while (selected.size < k) {
         val next = state
@@ -998,13 +999,13 @@ object Similarity {
           val folded = state.filter(col("id") =!= nid)
             .withColumn("mind", least(col("mind"),
               lit(1.0) - array_dot(col("u"), typedLit(nvec.toSeq))))
-            .localCheckpoint(true)
-          graft.graph.IterState.release(state)
+            .transform(Materialize.checkpoint(_))
+          Materialize.release(state)
           state = folded
         }
       }
       selectedDf(spark, selected)
-    } finally graft.graph.IterState.release(state)
+    } finally Materialize.release(state)
   }
 
   private def selectedDf(spark: org.apache.spark.sql.SparkSession,
