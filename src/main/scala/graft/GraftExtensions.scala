@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import graft.functions.{ArrayCosine, ArrayDot, JaroWinklerSim, MisraGriesSketch, SimHash64, TokenShingles, TopKPairs, UnicodeNfc}
 
 /** `SparkSessionExtensions` hook: registers the graft native functions
-  * so SQL users get `array_dot`/`array_cosine` without touching the
-  * Scala API. Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `.withExtensions(new GraftExtensions)`.
+  * (so SQL users get `array_dot`/`array_cosine` without touching the
+  * Scala API), [[graft.plans.AsofJoinStrategy]] and
+  * [[graft.plans.ApproxDistinctRewrite]], once, when a session is built.
+  * [[GraftSession]] sets `spark.sql.extensions=graft.GraftExtensions`
+  * on every session it builds; other deployments activate it with the
+  * same setting or `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Synthesize an sfN-shaped dataset (N× sf0.1) for the decade bench
   * legs: every table replicated with DISJOINT key ranges — and, for
@@ -42,13 +44,7 @@ object MakeSf1 {
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] = args.drop(2).headOption
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, 32)
 
     // With a table subset, pre-existing NON-selected tables in the out
     // dir are left untouched — a prior build at a different reps value

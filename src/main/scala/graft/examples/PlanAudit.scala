@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Physical-plan audit over the whole declared surface: for every
   * `SparkEntry.queries` entry, count the plan features that decide
@@ -161,15 +161,8 @@ object PlanAudit {
   }
 
   private def runAqeMode(sfDir: String, detailPath: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4, 32,
+      Seq("spark.sql.adaptive.enabled" -> "true"))
     val ranked = topByWall(detailPath, 20)
     require(ranked.nonEmpty, s"no detail entries parsed from $detailPath")
     val rows = aqeAudit(spark, sfDir, ranked)
@@ -226,15 +219,8 @@ object PlanAudit {
       return
     }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4, 4,
+      Seq("spark.sql.adaptive.enabled" -> "false"))
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       audit(name, fn(spark, sfDir).queryExecution.executedPlan)
     }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.{Materialize, Ops}
 
 /** Empirical scaling probe: replicate the sf0.1 lineitem N× with
@@ -17,13 +18,7 @@ object ScaleProbe {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "8").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
 
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val maxKey = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1

@@ -2,8 +2,7 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.io.Sinks
 import graft.sync.SyncJob
 
@@ -19,14 +18,7 @@ import graft.sync.SyncJob
   */
 object SyncDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("sync-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4, 4)
     import spark.implicits._
 
     val src = Files.createTempDirectory("sync_src")

@@ -33,10 +33,10 @@ object Tables {
     *
     *  - TIMESTAMP: already an instant — pass through.
     *  - TIMESTAMP_NTZ: naive wall-clock whose writer meant UTC; the
-    *    cast reinterprets it in the session zone, and every entry
-    *    point pins `spark.sql.session.timeZone=UTC`, so this is a pure
-    *    relabeling (DuckDB reads the same file as naive-UTC → oracle
-    *    hashes unaffected).
+    *    cast reinterprets it in the session zone, and every
+    *    [[graft.GraftSession]] pins `spark.sql.session.timeZone=UTC`,
+    *    so this is a pure relabeling (DuckDB reads the same file as
+    *    naive-UTC → oracle hashes unaffected).
     *  - LONG: an epoch count, nanos or micros. Discriminated per
     *    COLUMN when the caller supplies `nanosHint` (from the parquet
     *    footer's logical-type annotation — see [[parquetTsNanos]]);

@@ -18,11 +18,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * count(distinct) only, and OFF by default (the correctness gate
   * always runs exact).
   *
-  * Registered two ways: through [[graft.GraftExtensions]] for
-  * config-activated SQL deployments, and usable per-session via
-  * `spark.experimental.extraOptimizations` (it reads the flag from
-  * the active session's conf at optimization time, so it can sit in
-  * the rule list permanently).
+  * Installed by [[graft.GraftExtensions]], so every
+  * [[graft.GraftSession]] session (and any session configured with
+  * `spark.sql.extensions=graft.GraftExtensions`) carries it. It reads
+  * the flag from the active session's conf at optimization time, so
+  * it sits in the rule list permanently and is inert while off.
   */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
   val Flag = "spark.graft.approxCountDistinct"

@@ -44,9 +44,9 @@ case class AsofJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinPlan]] onto [[AsofJoinExec]]. Register via
-  * `spark.experimental.extraStrategies` or
-  * [[graft.GraftExtensions]] (`injectPlannerStrategy`).
+/** Plans [[AsofJoinPlan]] onto [[AsofJoinExec]]. Installed by
+  * [[graft.GraftExtensions]] (`injectPlannerStrategy`); on a session
+  * without the extension, [[AsofJoin.register]] adds it.
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -178,16 +178,17 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
 object AsofJoin {
   import org.apache.spark.sql.graftshim.PlanBridge
 
-  /** Ensure [[AsofJoinStrategy]] is registered on `spark` (idempotent;
-    * `experimental.extraStrategies` is the public per-session hook, and
-    * [[graft.GraftExtensions]] also injects it for SQL-configured
-    * sessions).
+  /** Ensure [[AsofJoinStrategy]] plans on `spark`. A no-op when the
+    * session's planner already carries it — every session built with
+    * [[graft.GraftExtensions]] (all [[graft.GraftSession]] sessions)
+    * does, so theirs is never mutated at runtime. A caller's plain
+    * session gets it through `experimental.extraStrategies`, the public
+    * per-session hook (idempotent: the planner then carries it).
     */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsofJoinStrategy
-  }
+  def register(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(AsofJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsofJoinStrategy
 
   /** Native as-of join: `left` enriched with `payloadCols` of the
     * latest `right` row per `keyCols` with `right.tsCol <= left.tsCol`.

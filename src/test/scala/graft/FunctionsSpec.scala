@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.functions.{EmbeddingCentroid, VectorFunctions}
@@ -10,6 +12,24 @@ import graft.functions.VectorFunctions.{array_cosine, array_dot}
   */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A child session with `name` dropped from its function registry,
+    * so only a runtime `register` can make SQL resolve it again (the
+    * suite session's extension installs every native function).
+    */
+  private def sessionWithout(name: String): SparkSession = {
+    val s = spark.newSession()
+    assert(s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name)))
+    s
+  }
+
+  private def assertUnresolved(s: SparkSession, sql: String, name: String): Unit = {
+    val e = intercept[AnalysisException](s.sql(sql).collect())
+    // scalar calls fail as UNRESOLVED_ROUTINE, LATERAL VIEW generators
+    // as ROUTINE_NOT_FOUND
+    assert(Set("UNRESOLVED_ROUTINE", "ROUTINE_NOT_FOUND")(e.getCondition) &&
+      e.getMessage.contains(name), e.getMessage)
+  }
 
   private def vecs = Seq(
     (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
@@ -41,10 +61,11 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("SQL registration exposes array_cosine to spark.sql") {
-    VectorFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT array_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
-      .collect()(0).getDouble(0)
+    val q = "SELECT array_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c"
+    val s = sessionWithout("array_cosine")
+    assertUnresolved(s, q, "array_cosine")
+    VectorFunctions.register(s)
+    val r = s.sql(q).collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
@@ -155,37 +176,27 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions: SQL surface incl. sketch aggregates end-to-end") {
-    import org.apache.spark.sql.SparkSession
-    val root = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // same JVM/SparkContext, fresh session so the extensions hook
-      // actually runs (getOrCreate would return the shared session)
-      val s2 = SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .withExtensions(new graft.GraftExtensions)
-        .getOrCreate()
-      val mg = s2.sql(
-        "SELECT misra_gries(c, 2) AS m FROM VALUES ('a'),('a'),('b'),('a') t(c)")
-        .collect()(0).getAs[Map[String, Long]](0)
-      assert(mg === Map("a" -> 3L, "b" -> 1L))
-      val tk = s2.sql(
-        "SELECT top_k_pairs(s, i, 2) AS t FROM VALUES " +
-          "(1.0D, 1L), (3.0D, 2L), (2.0D, 3L) t(s, i)")
-        .collect()(0).getSeq[org.apache.spark.sql.Row](0)
-        .map(r => (r.getDouble(0), r.getLong(1)))
-      assert(tk === Seq((3.0, 2L), (2.0, 3L)))
-      // non-literal bound must fail loudly, not mis-plan
-      val e = intercept[Exception] {
-        s2.sql("SELECT top_k_pairs(s, i, CAST(i AS INT)) FROM VALUES " +
-          "(1.0D, 1L) t(s, i)").collect()
-      }
-      assert(e.getMessage.contains("literal"), e.getMessage)
-    } finally {
-      SparkSession.setDefaultSession(root)
-      SparkSession.setActiveSession(root)
+    // the suite session is a GraftSession: the extension is installed
+    val mg = spark.sql(
+      "SELECT misra_gries(c, 2) AS m FROM VALUES ('a'),('a'),('b'),('a') t(c)")
+      .collect()(0).getAs[Map[String, Long]](0)
+    assert(mg === Map("a" -> 3L, "b" -> 1L))
+    val tk = spark.sql(
+      "SELECT top_k_pairs(s, i, 2) AS t FROM VALUES " +
+        "(1.0D, 1L), (3.0D, 2L), (2.0D, 3L) t(s, i)")
+      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getDouble(0), r.getLong(1)))
+    assert(tk === Seq((3.0, 2L), (2.0, 3L)))
+    // a child session carries the extension too, no runtime registration
+    val dot = spark.newSession()
+      .sql("SELECT array_dot(array(1D,2D), array(3D,4D))").head().getDouble(0)
+    assert(dot === 11.0)
+    // non-literal bound must fail loudly, not mis-plan
+    val e = intercept[Exception] {
+      spark.sql("SELECT top_k_pairs(s, i, CAST(i AS INT)) FROM VALUES " +
+        "(1.0D, 1L) t(s, i)").collect()
     }
+    assert(e.getMessage.contains("literal"), e.getMessage)
   }
 
   test("MisraGries: superset of true heavy hitters, bounded undercount") {
@@ -217,11 +228,14 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("unicode_nfc: SQL registration and codegen path agree with eval") {
-    graft.functions.TextNormFunctions.register(spark)
-    val r = spark.sql("SELECT unicode_nfc('Café' ) AS n").collect()(0)
+    val q = "SELECT unicode_nfc('Café' ) AS n"
+    val s = sessionWithout("unicode_nfc")
+    assertUnresolved(s, q, "unicode_nfc")
+    graft.functions.TextNormFunctions.register(s)
+    val r = s.sql(q).collect()(0)
     assert(r.getString(0) === "Café")
     // wide row forces whole-stage codegen; compare vs interpreted result
-    val df = spark.range(50).selectExpr(
+    val df = s.range(50).selectExpr(
       "unicode_nfc(concat('Áx', id)) AS n")
     assert(df.collect().forall(_.getString(0).startsWith("Áx")))
   }
@@ -288,12 +302,15 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("token_shingles works from SQL via LATERAL VIEW") {
-    graft.functions.TokenShingles.register(spark)
-    Seq((7L, "w x y z")).toDF("id", "t").createOrReplaceTempView("ts_docs")
-    val rows = spark.sql(
-      """SELECT id, s.pos, s.shingle
-        |FROM ts_docs LATERAL VIEW token_shingles(t, 2) s
-        |ORDER BY pos""".stripMargin).collect()
+    val q = """SELECT id, s.pos, s.shingle
+      |FROM ts_docs LATERAL VIEW token_shingles(t, 2) s
+      |ORDER BY pos""".stripMargin
+    val s = sessionWithout("token_shingles")
+    s.createDataFrame(Seq((7L, "w x y z"))).toDF("id", "t")
+      .createOrReplaceTempView("ts_docs")
+    assertUnresolved(s, q, "token_shingles")
+    graft.functions.TokenShingles.register(s)
+    val rows = s.sql(q).collect()
     assert(rows.map(_.getString(2)).toSeq === Seq("w x", "x y", "y z"))
   }
 }

@@ -134,76 +134,22 @@ class MaterializeSpec extends SparkSpec {
     // A stopped session needs a SparkContext of its own, and this JVM's
     // is shared by every suite: run the probe in a child JVM.
     withDocsCopy { dir =>
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.toArray.map(_.toString)
-        .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
-      val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
-        jvmArgs ++ Seq("-cp", sys.props("java.class.path"),
-          StoppedSessionProbe.getClass.getName.stripSuffix("$"),
-          s"$dir/documents.parquet")
-      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      val p = pb.start()
-      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-      assert(p.waitFor() === 0, out)
+      val out = childJvm(StoppedSessionProbe, s"$dir/documents.parquet")
       assert(out.contains("entries stopped-before=1 stopped-after=0 live=1"), out)
     }
-  }
-
-  /** Scala source with comments removed; string and char literals kept. */
-  private def codeOf(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var depth = 0 // nested block comments
-    var quote: String = null // open string delimiter
-    def at(s: String) = src.startsWith(s, i)
-    while (i < src.length) {
-      val c = src.charAt(i)
-      if (depth > 0) {
-        if (at("/*")) { depth += 1; i += 2 }
-        else if (at("*/")) { depth -= 1; i += 2 }
-        else { if (c == '\n') out += c; i += 1 }
-      } else if (quote != null) {
-        if (quote == "\"" && c == '\\') {
-          out ++= src.slice(i, i + 2); i += 2
-        } else if (at(quote)) {
-          out ++= quote; i += quote.length; quote = null
-        } else { out += c; i += 1 }
-      } else if (at("//")) {
-        while (i < src.length && src.charAt(i) != '\n') i += 1
-      } else if (at("/*")) { depth = 1; i += 2 }
-      else if (at("\"\"\"")) { quote = "\"\"\""; out ++= quote; i += 3 }
-      else if (c == '"') { quote = "\""; out += c; i += 1 }
-      else if (at("'\\")) {
-        val end = src.indexOf('\'', i + 3)
-        out ++= src.slice(i, end + 1); i = end + 1
-      } else if (c == '\'' && i + 2 < src.length && src.charAt(i + 2) == '\'') {
-        out ++= src.slice(i, i + 3); i += 3
-      } else { out += c; i += 1 }
-    }
-    out.toString
   }
 
   test("comment stripping sees code, not comments") {
     val src = "val a = \"x//y\" // z.localCheckpoint(\n" +
       "/* a /* nested */ .localCheckpoint( */ val q = '\"'\n" +
       "b.localCheckpoint(true) /** c.localCheckpoint( */"
-    assert(".localCheckpoint\\(".r.findAllIn(codeOf(src)).size === 1)
-    assert(codeOf(src).contains("\"x//y\""))
+    assert(".localCheckpoint\\(".r.findAllIn(SourceGuard.codeOf(src)).size === 1)
+    assert(SourceGuard.codeOf(src).contains("\"x//y\""))
   }
 
   test("only the materialization seam calls localCheckpoint in main code") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def scalaFiles(d: File): Seq[File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
-    val callers = scalaFiles(root).filter { f =>
-      val src = new String(Files.readAllBytes(f.toPath), "UTF-8")
-      codeOf(src).contains(".localCheckpoint(")
-    }.map(f => root.toPath.relativize(f.toPath).toString).sorted
-    assert(callers === Seq("graft/ops/Materialize.scala"))
+    assert(SourceGuard.mainFilesCalling(".localCheckpoint(") ===
+      Seq("graft/ops/Materialize.scala"))
   }
 }
 
@@ -212,11 +158,7 @@ class MaterializeSpec extends SparkSpec {
   * prints the entry counts.
   */
 object StoppedSessionProbe {
-  private def session(): SparkSession = SparkSession.builder()
-    .master("local[1]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "1")
-    .getOrCreate()
+  private def session(): SparkSession = GraftSession.local(1, 1)
 
   def main(args: Array[String]): Unit = {
     val source = args(0)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
@@ -62,11 +64,7 @@ class PlansSpec extends SparkSpec {
       .select(col("user_id"), col("ts"), col("event_id").as("signup_event_id"))
     val df = AsofJoin.asof(purchases, signups, Seq("user_id"), "ts",
       Seq("signup_event_id"))
-    df.count() // finalize any adaptive plan
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val plan = PlansSpec.executedPlan(df)
     assert(plan.collect { case e: AsofJoinExec => e }.nonEmpty,
       s"expected AsofJoinExec in:\n$plan")
     val exchanges = plan.collect {
@@ -75,10 +73,24 @@ class PlansSpec extends SparkSpec {
     assert(exchanges.size === 2, s"expected 2 exchanges, got:\n$plan")
   }
 
+  test("asof on a graft session plans natively without mutating extraStrategies") {
+    val l = Seq((1L, 5L)).toDF("k", "t")
+    val r = Seq((1L, 4L, 9L)).toDF("k", "t", "v")
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(PlansSpec.asofExecs(AsofJoin.asof(l, r, Seq("k"), "t", Seq("v"))) === 1)
+    assert(spark.experimental.extraStrategies.isEmpty)
+  }
+
+  test("asof on a plain session without the extension still plans natively") {
+    // a session of its own needs a SparkContext of its own: child JVM
+    val out = childJvm(PlainSessionAsofProbe)
+    assert(out.contains("asof-execs=1 extra-strategies=1 rows=1"), out)
+  }
+
   test("approx-distinct rule: flag swaps exact count(distinct) for HLL") {
+    // a child session, so the flag flip stays local; the rule itself
+    // is the one GraftExtensions installs
     val s2 = spark.newSession()
-    s2.experimental.extraOptimizations =
-      Seq(graft.plans.ApproxDistinctRewrite)
     def q() = graft.io.Tables.events(s2, sfDir)
       .groupBy("event_type")
       .agg(org.apache.spark.sql.functions.countDistinct("user_id")
@@ -101,5 +113,43 @@ class PlansSpec extends SparkSpec {
           exact(k) <= 0.15, s"$k: $approx vs ${exact(k)}")
       }
     } finally s2.conf.set(graft.plans.ApproxDistinctRewrite.Flag, "false")
+  }
+}
+
+object PlansSpec {
+  /** The plan `df` executed, AQE's wrapper unwrapped. */
+  def executedPlan(df: DataFrame): SparkPlan = {
+    df.count() // finalize any adaptive plan
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  }
+
+  def asofExecs(df: DataFrame): Int =
+    executedPlan(df).collect { case e: AsofJoinExec => e }.size
+}
+
+/** Child-JVM probe: a caller's own session, built without
+  * [[GraftExtensions]], runs two as-of joins and prints how many
+  * AsofJoinExec the last one planned and how many strategies
+  * `AsofJoin.register` added.
+  */
+object PlainSessionAsofProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "1")
+      .getOrCreate()
+    import spark.implicits._
+    val l = Seq((1L, 5L)).toDF("k", "t")
+    val r = Seq((1L, 4L, 9L)).toDF("k", "t", "v")
+    AsofJoin.asof(l, r, Seq("k"), "t", Seq("v")).count()
+    val df = AsofJoin.asof(l, r, Seq("k"), "t", Seq("v"))
+    println(s"asof-execs=${PlansSpec.asofExecs(df)} " +
+      s"extra-strategies=${spark.experimental.extraStrategies.size} " +
+      s"rows=${df.count()}")
+    spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.io.Tables
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Loader policy gate for the `ts` column (VERDICT r4 item 2): the
   * driver has shipped `events.parquet` with a different physical
@@ -115,13 +115,20 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("NTZ normalizes identically whether inference is on or off") {
-    // The driver entry points pin inferTimestampNTZ=false (ts arrives
-    // TIMESTAMP directly); the default-config path arrives NTZ and
-    // takes the cast branch. Same instants either way.
-    val onPath = instants("ntz") // suite session: inference default=on
+    // Every graft session pins inferTimestampNTZ=false, so ts arrives
+    // TIMESTAMP directly; Spark's default (on) arrives NTZ and takes
+    // the cast branch. Same instants either way.
     val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    spark.conf.set(key, "false")
-    try assert(instants("ntz") == onPath)
-    finally spark.conf.unset(key)
+    val pinned = spark.conf.get(key)
+    assert(pinned === "false")
+    def rawTs = spark.read.parquet(s"$dir/ntz/events.parquet").schema("ts").dataType
+    assert(rawTs === TimestampType)
+    val offPath = instants("ntz")
+    spark.conf.set(key, "true")
+    try {
+      assert(rawTs === TimestampNTZType)
+      assert(Tables.events(spark, s"$dir/ntz").schema("ts").dataType === TimestampType)
+      assert(instants("ntz") === offPath)
+    } finally spark.conf.set(key, pinned)
   }
 }
