@@ -86,10 +86,10 @@ object GraftSession {
   /** Message-targeted log hygiene, installed once per JVM.
     *
     * The iterative graph ops (PageRank / ConnectedComponents /
-    * LabelPropagation / Bfs / Hierarchy) follow the
-    * [[graft.ops.Materialize]] memory discipline: each round's state is
-    * a local checkpoint and the SUPERSEDED round's blocks are explicitly
-    * released (`Materialize.release`; the harness sweeps leftovers with
+    * LabelPropagation / Bfs / Hierarchy) run on
+    * [[graft.ops.Materialize.rounds]]: each round's state is a local
+    * checkpoint and the SUPERSEDED round's blocks are explicitly
+    * released (the harness sweeps leftovers with
     * `Materialize.releaseOwned`), so peak storage is two rounds, not
     * `iters` rounds — the property that matters when the per-round
     * state is 100 TB-scale. Spark 4's `RDD.unpersist` logs an

@@ -16,12 +16,10 @@ import graft.ops.Materialize
   * d has true min-distance d (all shorter paths would have surfaced
   * in earlier rounds), so frontier-only expansion is exact — each
   * node is expanded at most once across the whole run, making total
-  * work O(edges reachable) rather than O(edges × depth). Same
-  * iterative-Spark discipline as [[ConnectedComponents]]: lineage cut
-  * with `localCheckpoint` per round, superseded blocks unpersisted,
-  * no driver-side state. The round shuffle is keyed by node id; skew
-  * equals max out-degree — cap hub fan-out upstream if the graph has
-  * stop-token-grade hubs.
+  * work O(edges reachable) rather than O(edges × depth). Rounds run on
+  * [[graft.ops.Materialize.rounds]], with no driver-side state. The
+  * round shuffle is keyed by node id; skew equals max out-degree — cap
+  * hub fan-out upstream if the graph has stop-token-grade hubs.
   */
 object Bfs {
 
@@ -35,30 +33,17 @@ object Bfs {
                   srcCol: String = "src", dstCol: String = "dst",
                   seedCol: String = "node", maxDepth: Int = 6): DataFrame = {
     require(maxDepth >= 0, s"need maxDepth >= 0: $maxDepth")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .transform(Materialize.checkpoint(_))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"))
-      .withColumn("dist", lit(0L))
-      .transform(Materialize.checkpoint(_))
-    for (round <- 1 to maxDepth) {
-      val next = dist.filter(col("dist") === round - 1)
-        .join(e, dist("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .withColumn("dist", lit(round.toLong))
-      val merged = dist.unionByName(next)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .transform(Materialize.checkpoint(_))
-      Materialize.release(dist)
-      dist = merged
+    Materialize.rounds { r =>
+      val e = r.scratch(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node")))
+        .distinct()
+      hops(r, nodes, seeds, seedCol, maxDepth)(
+        _.join(e, col("node") === col("src")).select(col("dst").as("node")))
     }
-    Materialize.release(e)
-    dist
   }
 
   /** Hop distance over a HYPERGRAPH given as an incidence list
@@ -86,30 +71,30 @@ object Bfs {
                        seedCol: String = "node",
                        maxDepth: Int = 6): DataFrame = {
     require(maxDepth >= 0, s"need maxDepth >= 0: $maxDepth")
-    val inc = incidence
-      .select(col(nodeCol).as("node"), col(edgeCol).as("edge"))
-      .filter(col("node").isNotNull && col("edge").isNotNull)
-      .distinct()
-      .transform(Materialize.checkpoint(_))
-    val nodes = inc.select("node").distinct()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"))
-      .withColumn("dist", lit(0L))
-      .transform(Materialize.checkpoint(_))
-    for (round <- 1 to maxDepth) {
-      val frontierEdges = dist.filter(col("dist") === round - 1)
-        .join(inc, Seq("node"))
-        .select("edge").distinct()
-      val next = frontierEdges.join(inc, Seq("edge"))
-        .select("node").distinct()
-        .withColumn("dist", lit(round.toLong))
-      val merged = dist.unionByName(next)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .transform(Materialize.checkpoint(_))
-      Materialize.release(dist)
-      dist = merged
+    Materialize.rounds { r =>
+      val inc = r.scratch(incidence
+        .select(col(nodeCol).as("node"), col(edgeCol).as("edge"))
+        .filter(col("node").isNotNull && col("edge").isNotNull)
+        .distinct())
+      hops(r, inc.select("node").distinct(), seeds, seedCol, maxDepth)(
+        _.join(inc, Seq("node")).select("edge").distinct()
+          .join(inc, Seq("edge")).select("node"))
     }
-    Materialize.release(inc)
-    dist
   }
+
+  /** The one BFS loop: `dist` starts at the seeds present in `nodes`,
+    * and round d min-merges `expand(frontier)` — the nodes one hop from
+    * those first reached in round d − 1 — at distance d.
+    */
+  private def hops(r: Materialize.Rounds, nodes: DataFrame, seeds: DataFrame,
+                   seedCol: String, maxDepth: Int)
+                  (expand: DataFrame => DataFrame): DataFrame =
+    r.loop(seeds.select(col(seedCol).as("node")).distinct()
+        .join(nodes, Seq("node"))
+        .withColumn("dist", lit(0L)), maxDepth) { (dist, round) =>
+      val next = expand(dist.filter(col("dist") === round - 1)).distinct()
+        .withColumn("dist", lit(round.toLong))
+      dist.unionByName(next)
+        .groupBy("node").agg(min("dist").as("dist"))
+    }
 }

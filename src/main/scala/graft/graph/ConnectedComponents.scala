@@ -24,10 +24,8 @@ import graft.ops.Materialize
   *    variant (Kiveris et al., "Connected components in MapReduce and
   *    beyond", SoCC 2014) only pays off on long-chain graphs, which
   *    dedup edges are not.
-  *  - Lineage is cut with a [[graft.ops.Materialize]] checkpoint each
-  *    round — without it the plan doubles per iteration and the
-  *    optimizer re-walks the whole history (classic iterative-Spark
-  *    trap).
+  *  - Rounds run on [[graft.ops.Materialize.rounds]], which cuts
+  *    lineage each round and frees round state under its one policy.
   *  - The per-round shuffle is keyed by node id; skew equals max
   *    degree, which for near-dup graphs is bounded by the candidate
   *    caps upstream (`maxDf` / `maxBucket` in [[graft.dedup.Dedup]]).
@@ -43,61 +41,42 @@ object ConnectedComponents {
     * labeling silently merges/splits clusters — fail loud instead).
     */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-          maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+          maxIter: Int = 20): DataFrame = Materialize.rounds { r =>
+    val sym = r.scratch(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .distinct()
-      .transform(Materialize.checkpoint(_)) // reused every round
-    // LAZY checkpoint: the labelSum collect below materializes the
-    // blocks in the same job that answers the convergence test — one
-    // job per round instead of two (the Hierarchy r14 discipline;
-    // per-job fixed cost dominates these loops at small SF)
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .transform(Materialize.checkpoint(_, eager = false))
+      .distinct()) // reused every round
     // Convergence detection without a labels-vs-labels compare join:
     // min-propagation is monotone (labels only ever DECREASE), so the
     // label sum strictly decreases every non-converged round and is
     // stable exactly at the fixpoint. decimal(38,0) so huge id sums
     // cannot overflow (sum of 10^12 ids × 2^63 fits in 38 digits).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
+    var prevSum: Option[java.math.BigDecimal] = None
+    def settled(df: DataFrame): Boolean = {
       // sum over an EMPTY frame is NULL — map to 0 so a no-edge input
       // converges on the first round instead of NPEing the comparison
-      Option(df.agg(sum(col("component").cast("decimal(38,0)")).as("s"))
+      val s = Option(df.agg(sum(col("component").cast("decimal(38,0)")))
         .collect()(0).getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    // Superseded rounds are released below (once `stepped` is
-    // materialized nothing references the prior round again). The
-    // RETURNED labels stay checkpointed deliberately: callers typically
-    // consume them several times (join back, count, write).
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+      val same = prevSum.exists(_.compareTo(s) == 0)
+      prevSum = Some(s)
+      same
+    }
+    // The RETURNED labels stay checkpointed deliberately: callers
+    // typically consume them several times (join back, count, write).
+    r.until(sym.select(col("a").as("id")).distinct()
+        .withColumn("component", col("id")), maxIter)(settled,
+      throw new IllegalStateException(
+        s"connected components did not converge in $maxIter rounds " +
+          "(graph diameter exceeds maxIter)")) { (labels, _) =>
       // one keyed join + one aggregate per round: neighbors' labels and
       // each node's own label union-fold through the same min — the
       // symmetric edge list guarantees every node reaches the aggregate
-      val stepped = sym
+      sym
         .join(labels, sym("a") === labels("id"))
         .select(col("b").as("id"), col("component"))
         .union(labels)
         .groupBy("id")
         .agg(min("component").as("component"))
-        // cut lineage each round
-        .transform(Materialize.checkpoint(_, eager = false))
-      // materializes the lazy checkpoint AND tests convergence in one
-      // job; labels' blocks are still live for the lineage until here
-      val s = labelSum(stepped)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      Materialize.release(labels)
-      labels = stepped
-      iter += 1
     }
-    Materialize.release(sym)
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $maxIter rounds " +
-        "(graph diameter exceeds maxIter)")
-    labels
   }
 }

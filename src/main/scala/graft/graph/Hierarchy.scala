@@ -20,10 +20,8 @@ import graft.ops.Materialize
   *  - Each round is ONE equi-join keyed on the ancestor id over the
   *    full node set — no driver-side traversal, no collect; total work
   *    O(N log D) join rows.
-  *  - Lineage is cut with a [[graft.ops.Materialize]] checkpoint per
-  *    round and superseded rounds are released — the iterative-Spark
-  *    plan-doubling trap (see [[ConnectedComponents]], same
-  *    discipline).
+  *  - Rounds run on [[graft.ops.Materialize.rounds]], which cuts
+  *    lineage each round and frees round state under its one policy.
   *  - Join skew equals in-degree of the PARTIAL ancestor pointers,
   *    which pointer doubling spreads: after round k a node's pointer
   *    lands 2^k levels up, so hot roots only concentrate in the last
@@ -45,38 +43,36 @@ object Hierarchy {
     * rather than looping forever).
     */
   def resolve(nodes: DataFrame, idCol: String, parentCol: String,
-              maxIter: Int = 20): DataFrame = {
+              maxIter: Int = 20): DataFrame = Materialize.rounds { r =>
     // State invariant: `anc` = highest known ancestor (null once the
     // root is reached), `depth` = edges from id up to anc (or to the
     // root when anc is null), `path` = ids from anc EXCLUSIVE down to
     // id inclusive — so when anc resolves to null, path is the full
     // root-inclusive chain.
-    // LAZY localCheckpoint + count-as-materializer (r14, VERDICT r13
-    // #4): the eager form ran TWO jobs per round — one to materialize
-    // the checkpoint, one for the convergence count — and at small SF
-    // this query's wall was almost entirely that per-job fixed cost
-    // (driver 8-core: 4.19 s wall vs 1.25 s task time). A lazy
-    // checkpoint is materialized by the FIRST action over it, so the
-    // convergence count both persists the round's blocks and answers
-    // the loop test in ONE job. Order matters: the superseded round is
-    // released only AFTER the count (the new round's lineage reads the
-    // old round's blocks until its own are persisted).
-    var state = nodes.select(
+    // The convergence count is the action that materializes each lazy
+    // round (VERDICT r13 #4: the eager form ran two jobs per round, and
+    // at small SF this query's wall was almost entirely that per-job
+    // fixed cost — driver 8-core: 4.19 s wall vs 1.25 s task time).
+    var remaining = 0L
+    def settled(df: DataFrame): Boolean = {
+      remaining = df.filter(col("anc").isNotNull).count()
+      remaining == 0
+    }
+    r.until(nodes.select(
         col(idCol).cast("long").as("id"),
         col(parentCol).cast("long").as("anc"),
         when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"),
-        col(idCol).cast("string").as("path"))
-      .transform(Materialize.checkpoint(_, eager = false))
-    def unresolved(df: DataFrame): Long =
-      df.filter(col("anc").isNotNull).count()
-    var remaining = unresolved(state)
-    var iter = 0
-    while (remaining > 0 && iter < maxIter) {
+        col(idCol).cast("string").as("path")), maxIter)(settled,
+      throw new IllegalArgumentException(
+        s"hierarchy not settled after $maxIter doubling rounds " +
+          s"($remaining nodes unresolved) — depth > " +
+          s"${1L << (maxIter - 1)} or a cycle")
+    ) { (state, _) =>
       // jump: every unresolved node adopts its ancestor's ancestor,
       // splicing the ancestor's path segment in FRONT of its own
       val b = state.select(col("id").as("b_id"), col("anc").as("b_anc"),
         col("depth").as("b_depth"), col("path").as("b_path"))
-      val stepped = state.join(b, state("anc") === b("b_id"), "left")
+      state.join(b, state("anc") === b("b_id"), "left")
         .select(col("id"),
           // resolved rows never match (null join key) — b_* stay null
           // and anc stays null. A DANGLING parent (no matching node
@@ -88,18 +84,6 @@ object Hierarchy {
           when(col("b_path").isNull, col("path"))
             .otherwise(concat(col("b_path"), lit("/"), col("path")))
             .as("path"))
-        .transform(Materialize.checkpoint(_, eager = false))
-      // the count materializes the lazy checkpoint (one job for both)
-      remaining = unresolved(stepped)
-      // Released only now: stepped's blocks exist, nothing reads
-      // state's again.
-      Materialize.release(state)
-      state = stepped
-      iter += 1
-    }
-    require(remaining == 0,
-      s"hierarchy not settled after $maxIter doubling rounds " +
-        s"($remaining nodes unresolved) — depth > ${1L << (maxIter - 1)} or a cycle")
-    state.select("id", "depth", "path")
+    }.select("id", "depth", "path")
   }
 }

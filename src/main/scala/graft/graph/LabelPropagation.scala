@@ -23,13 +23,12 @@ import graft.ops.Materialize
   * fixpoint test may never fire; bounded rounds are the standard fix.
   *
   * Per round: one keyed join (labels × edges) + one grouped sum + one
-  * per-node argmax window over ≤ |distinct neighbor labels| rows —
-  * the same per-round shape and checkpoint discipline as
-  * [[ConnectedComponents]] / [[PageRank]]: lineage cut each round,
-  * superseded blocks unpersisted, no driver-side graph state. At
-  * 100 TB the round shuffle is keyed by node id; skew equals max
-  * in-degree — cap hub fan-in upstream (drop stop-token nodes) the
-  * same way dedup caps hot shingles.
+  * per-node argmax window over ≤ |distinct neighbor labels| rows — the
+  * same per-round shape as [[ConnectedComponents]] / [[PageRank]], on
+  * the same [[graft.ops.Materialize.rounds]] loop, with no driver-side
+  * graph state. At 100 TB the round shuffle is keyed by node id; skew
+  * equals max in-degree — cap hub fan-in upstream (drop stop-token
+  * nodes) the same way dedup caps hot shingles.
   */
 object LabelPropagation {
 
@@ -46,35 +45,29 @@ object LabelPropagation {
     // integer weights stay exact as doubles up to 2^53, so the
     // integer-weighted oracle queries are unaffected
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .transform(Materialize.checkpoint(_))
-    var labels = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .withColumn("label", col("id"))
-      .transform(Materialize.checkpoint(_))
-    for (_ <- 1 to iters) {
-      // weight of each candidate label at each node this round
-      val flow = e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(sum("wt").as("__ws"))
-      val win = Window.partitionBy("id")
-        .orderBy(col("__ws").desc, col("label").asc)
-      val pick = flow.withColumn("__rn", row_number().over(win))
-        .filter(col("__rn") === 1)
-        .select(col("id"), col("label").as("__new"))
-      // nodes with no in-edges keep their current label
-      val stepped = labels.join(pick, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("__new"), col("label")).as("label"))
-        .transform(Materialize.checkpoint(_))
-      Materialize.release(labels)
-      labels = stepped
+    Materialize.rounds { r =>
+      val e = r.scratch(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .groupBy("src", "dst").agg(sum("wt").as("wt")))
+      r.loop(e.select(col("src").as("id"))
+          .union(e.select(col("dst").as("id")))
+          .distinct()
+          .withColumn("label", col("id")), iters) { (labels, _) =>
+        // weight of each candidate label at each node this round
+        val flow = e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .groupBy(col("dst").as("id"), col("label"))
+          .agg(sum("wt").as("__ws"))
+        val win = Window.partitionBy("id")
+          .orderBy(col("__ws").desc, col("label").asc)
+        val pick = flow.withColumn("__rn", row_number().over(win))
+          .filter(col("__rn") === 1)
+          .select(col("id"), col("label").as("__new"))
+        // nodes with no in-edges keep their current label
+        labels.join(pick, Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("__new"), col("label")).as("label"))
+      }
     }
-    Materialize.release(e)
-    labels
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Materialize
@@ -13,13 +13,10 @@ import graft.ops.Materialize
   * co-occurrence graph (q_textrank).
   *
   * Per round: ONE keyed join (ranks × out-normalized edges) + one
-  * grouped sum — the same shape as
-  * [[ConnectedComponents]], and the same iterative-Spark discipline:
+  * grouped sum — the same shape as [[ConnectedComponents]], on the same
+  * [[graft.ops.Materialize.rounds]] loop:
   *  - the out-degree-normalized edge list (`frac = w / out_w`) is
-  *    computed ONCE and checkpointed ([[graft.ops.Materialize]]),
-  *    rounds only touch it read-only;
-  *  - each round's ranks are checkpointed to cut lineage, and the
-  *    superseded round's blocks are explicitly released;
+  *    computed ONCE as round scratch, rounds only touch it read-only;
   *  - dangling mass (rank parked on nodes with no out-edges) is folded
   *    back uniformly, so total rank stays 1 and the iteration is a
   *    proper stochastic-matrix power step.
@@ -38,88 +35,21 @@ object PageRank {
           damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1,
       s"need iters>=1, 0<damping<1: $iters/$damping")
-    val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("wt") > 0)
-      .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .transform(Materialize.checkpoint(_))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .transform(Materialize.checkpoint(_))
-    val n = nodes.count()
-    if (n == 0) return nodes.withColumn("rank", lit(0.0))
-    // out-normalize once: each edge carries the fraction of its source's
-    // outgoing weight; rounds then need no join against out-degrees
-    val eNorm = e
-      .join(e.groupBy("src").agg(sum("wt").as("__outw")), "src")
-      .select(col("src"), col("dst"), (col("wt") / col("__outw")).as("frac"))
-      .transform(Materialize.checkpoint(_))
-    val hasOut = eNorm.select(col("src").as("node")).distinct()
-      .withColumn("__has_out", lit(1))
-      .transform(Materialize.checkpoint(_))
-    var ranks = Materialize.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
-    // Sinkless graphs (every node has an out-edge — symmetrized graphs
-    // always qualify: q_textrank, q_ppr_terms) take the UNROLLED path
-    // (VERDICT r12 #5): the dangling term is identically 0, so the
-    // round body references the previous ranks exactly ONCE and
-    // several rounds can chain inside one materialization with no
-    // duplicated subtree — cutting the per-round fixed job cost that
-    // dominates these queries' wall at small SF. Unroll depth 5
-    // measured best at the r13 close (2 vs 5 vs 10 on q_ppr_terms:
-    // 4.36 / 3.59 / 3.91 s — past 5 the deeper plan's analysis and
-    // codegen outgrow the saved job latency); at scale it only
-    // changes recovery granularity, since the base frames stay
-    // checkpointed. With sinks, `ranks` feeds BOTH the dangling
-    // aggregate and the contribution join, so each round must
-    // materialize (unrolling would re-execute the previous round
-    // inside the broadcast branch); cadence only — per-round semantics
-    // are bit-identical either way.
-    val sinkless = hasOut.count() == n
-    val unroll = if (sinkless) 5 else 1
-    var i = 0
-    while (i < iters) {
-      val steps = math.min(unroll, iters - i)
-      var cur = ranks
-      for (_ <- 1 to steps) {
-        // rank parked on sinks this round, redistributed uniformly: a
-        // ONE-ROW broadcast cross join instead of a driver collect, so
-        // each round is a single job (the checkpoint action) — an
-        // iterative driver loop pays per-job scheduling latency ×
-        // iters, and halving the job count halves that fixed cost
-        val contrib = cur.select(col("node").as("__src"), col("rank"))
-          .join(eNorm.select(col("src").as("__src"), col("dst"),
-            col("frac")), Seq("__src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("frac")).as("__c"))
-        cur =
-          if (sinkless)
-            nodes.join(contrib, Seq("node"), "left")
-              .select(col("node"),
-                (lit((1.0 - damping) / n) +
-                  lit(damping) * coalesce(col("__c"), lit(0.0))).as("rank"))
-          else {
-            val dangling = cur.join(hasOut, Seq("node"), "left")
-              .filter(col("__has_out").isNull)
-              .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
-            nodes.join(contrib, Seq("node"), "left")
-              .crossJoin(broadcast(dangling))
-              .select(col("node"),
-                (lit((1.0 - damping) / n) +
-                  lit(damping) * (coalesce(col("__c"), lit(0.0)) +
-                    col("__dang") / lit(n.toDouble))).as("rank"))
-          }
+    Materialize.rounds { r =>
+      val e = r.scratch(weighted(edges, srcCol, dstCol, weightCol))
+      val nodes = r.scratch(nodesOf(e))
+      val n = nodes.count()
+      if (n == 0) Materialize.checkpoint(nodes.withColumn("rank", lit(0.0)))
+      else {
+        val eNorm = r.scratch(outNormalized(e))
+        val hasOut = r.scratch(eNorm.select(col("src").as("node")).distinct()
+          .withColumn("__has_out", lit(1)))
+        iterate(r, nodes, n, eNorm, hasOut, None,
+          nodes.withColumn("rank", lit(1.0 / n)), iters, damping,
+          restart = lit((1.0 - damping) / n),
+          danglingShare = col("__dang") / lit(n.toDouble))
       }
-      val stepped = Materialize.checkpoint(cur)
-      Materialize.release(ranks)
-      ranks = stepped
-      i += steps
     }
-    // the final ranks frame is itself checkpointed — nothing references
-    // the intermediate frames anymore
-    Materialize.release(eNorm, hasOut, e, nodes)
-    ranks
   }
 
   /** Personalized PageRank (random walk with restart): the teleport
@@ -127,11 +57,11 @@ object PageRank {
     * lands ONLY on the seed set instead of uniformly, so rank
     * concentrates in the seeds' neighborhood. The related-item /
     * query-expansion primitive (Haveliwala, "Topic-sensitive
-    * PageRank", WWW 2002). Same per-round shape and checkpoint
-    * discipline as [[run]]: one keyed join + one grouped sum per
-    * round; the seed indicator is a broadcast-size left join (the
-    * seed set is a query, not a corpus). Seeds not present in the
-    * graph are ignored; seeds must intersect the node set.
+    * PageRank", WWW 2002). Same power iteration as [[run]]: one keyed
+    * join + one grouped sum per round; the seed indicator is a
+    * broadcast-size left join (the seed set is a query, not a corpus).
+    * Seeds not present in the graph are ignored; seeds must intersect
+    * the node set.
     *
     * `radius = Some(r)`: iterate only over the seeds' r-hop ball
     * (frontier-bounded [[Bfs]] expansion, computed once) instead of
@@ -155,111 +85,136 @@ object PageRank {
                    radius: Option[Int] = None): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1,
       s"need iters>=1, 0<damping<1: $iters/$damping")
+    Materialize.rounds { r =>
+      val e = r.scratch(weighted(edges, srcCol, dstCol, weightCol))
+      val nodes = r.scratch(nodesOf(e))
+      // teleport distribution: uniform over the seeds that exist in the
+      // graph (restarting on a non-node would leak rank mass)
+      val seedNodes = r.scratch(seeds.select(col(seedCol).as("node"))
+        .distinct().join(nodes, Seq("node")))
+      val nSeeds = seedNodes.count()
+      require(nSeeds > 0, "personalized PageRank needs >=1 seed in the graph")
+      val sW = seedNodes.withColumn("__sw", lit(1.0 / nSeeds))
+      // the seeds' r-hop ball, when bounded (frontier-only expansion:
+      // each node expanded once, total work O(edges reachable)); the
+      // returned frame is already checkpointed by Bfs — reuse it as-is
+      val ball = radius.map(rad =>
+        r.own(Bfs.hopDistance(e, seedNodes, maxDepth = rad)))
+      // iteration domain: ball nodes if bounded, all nodes otherwise
+      val dom = ball.map(_.select("node")).getOrElse(nodes)
+      // When bounded, restrict to ball-SOURCE edges BEFORE the
+      // out-weight aggregation: a src semi-join keeps each surviving
+      // source's COMPLETE out-edge set, so the full-graph denominators
+      // — the faithful-truncation requirement — are unchanged, while
+      // the one-time aggregation+join shuffles O(ball-incident edges)
+      // instead of the whole graph.
+      val eBall = ball.fold(e)(b => r.scratch(
+        e.join(b.select(col("node").as("src")), Seq("src"), "left_semi")))
+      val eNormFull = outNormalized(eBall)
+      val eNorm = r.scratch(ball.fold(eNormFull)(b =>
+        eNormFull
+          .join(b.select(col("node").as("dst")), Seq("dst"), "left_semi")))
+      // dangling = no out-edges in the FULL graph: a boundary node whose
+      // out-edges all leave the ball is NOT dangling — its mass exits,
+      // exactly as in the full run — only true sinks teleport back.
+      // (eBall suffices: a dom node's out-edges, if any, all survive the
+      // src semi-join; nor does truncation manufacture a sink, so a
+      // sinkless graph keeps the unrolled cadence.)
+      val hasOut = r.scratch(eBall.select(col("src").as("node")).distinct()
+        .join(dom, Seq("node"), "left_semi")
+        .withColumn("__has_out", lit(1)))
+      val sw = coalesce(col("__sw"), lit(0.0))
+      // start AT the teleport distribution (the walk's stationary prior)
+      iterate(r, dom, dom.count(), eNorm, hasOut, Some(sW),
+        dom.join(sW, Seq("node"), "left").select(col("node"), sw.as("rank")),
+        iters, damping,
+        restart = sw * lit(1.0 - damping),
+        danglingShare = col("__dang") * sw)
+    }
+  }
+
+  /** `(src, dst, wt)`: non-null endpoints, positive weights, parallel
+    * edges summed.
+    */
+  private def weighted(edges: DataFrame, srcCol: String, dstCol: String,
+                       weightCol: Option[String]): DataFrame = {
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val e = edges
+    edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("wt"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("wt") > 0)
       .groupBy("src", "dst").agg(sum("wt").as("wt"))
-      .transform(Materialize.checkpoint(_))
-    val nodes = e.select(col("src").as("node"))
+  }
+
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .transform(Materialize.checkpoint(_))
-    // teleport distribution: uniform over the seeds that exist in the
-    // graph (restarting on a non-node would leak rank mass)
-    val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"))
-      .transform(Materialize.checkpoint(_))
-    val nSeeds = seedNodes.count()
-    require(nSeeds > 0, "personalized PageRank needs >=1 seed in the graph")
-    val sW = seedNodes.withColumn("__sw", lit(1.0 / nSeeds))
-    // the seeds' r-hop ball, when bounded (frontier-only expansion:
-    // each node expanded once, total work O(edges reachable)); the
-    // returned frame is already checkpointed by Bfs — reuse it as-is
-    val ball = radius.map(r =>
-      Bfs.hopDistance(e, seedNodes, maxDepth = r))
-    // iteration domain: ball nodes if bounded, all nodes otherwise
-    val dom = ball.map(_.select("node")).getOrElse(nodes)
-    // When bounded, restrict to ball-SOURCE edges BEFORE the
-    // out-weight aggregation: a src semi-join keeps each surviving
-    // source's COMPLETE out-edge set, so the full-graph denominators
-    // — the faithful-truncation requirement — are unchanged, while
-    // the one-time aggregation+join shuffles O(ball-incident edges)
-    // instead of the whole graph.
-    val eBall = ball match {
-      case Some(b) => e
-        .join(b.select(col("node").as("src")), Seq("src"), "left_semi")
-        .transform(Materialize.checkpoint(_))
-      case None => e
-    }
-    val eNormFull = eBall
-      .join(eBall.groupBy("src").agg(sum("wt").as("__outw")), "src")
+
+  /** Out-normalize once: each edge carries the fraction of its source's
+    * outgoing weight, so rounds need no join against out-degrees.
+    */
+  private def outNormalized(e: DataFrame): DataFrame =
+    e.join(e.groupBy("src").agg(sum("wt").as("__outw")), "src")
       .select(col("src"), col("dst"), (col("wt") / col("__outw")).as("frac"))
-    val eNorm = (ball match {
-      case Some(b) => eNormFull
-        .join(b.select(col("node").as("dst")), Seq("dst"), "left_semi")
-      case None => eNormFull
-    }).transform(Materialize.checkpoint(_))
-    // dangling = no out-edges in the FULL graph: a boundary node whose
-    // out-edges all leave the ball is NOT dangling — its mass exits,
-    // exactly as in the full run — only true sinks teleport back.
-    // (eBall suffices: a dom node's out-edges, if any, all survive the
-    // src semi-join.)
-    val hasOut = eBall.select(col("src").as("node")).distinct()
-      .join(dom, Seq("node"), "left_semi")
-      .withColumn("__has_out", lit(1))
-      .transform(Materialize.checkpoint(_))
-    // start AT the teleport distribution (the walk's stationary prior)
-    var ranks = dom.join(sW, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__sw"), lit(0.0)).as("rank"))
-      .transform(Materialize.checkpoint(_))
-    // sinkless ⇒ dangling ≡ 0 ⇒ single-use round lineage ⇒ five rounds
-    // per materialization (same argument, cadence and r13 depth
-    // measurement as [[run]]; a boundary node whose edges all leave
-    // the ball still has out-edges in eBall, so ball truncation never
-    // manufactures a sink)
-    val sinkless = hasOut.count() == dom.count()
+
+  /** The one power iteration, `iters` rounds from `init` over the
+    * `nDom` nodes of `dom`: rank' = `restart` + d · (contribution +
+    * `danglingShare`), where `danglingShare` reads the round's sink
+    * mass `__dang` and both may read `__sw` from `seedWeights`.
+    *
+    * Sinkless domains (every node has an out-edge — symmetrized graphs
+    * always qualify: q_textrank, q_ppr_terms) take the UNROLLED path
+    * (VERDICT r12 #5): the dangling term is identically 0, so the
+    * round body references the previous ranks exactly ONCE and
+    * several rounds can chain inside one materialization with no
+    * duplicated subtree — cutting the per-round fixed job cost that
+    * dominates these queries' wall at small SF. Unroll depth 5
+    * measured best at the r13 close (2 vs 5 vs 10 on q_ppr_terms:
+    * 4.36 / 3.59 / 3.91 s — past 5 the deeper plan's analysis and
+    * codegen outgrow the saved job latency); at scale it only
+    * changes recovery granularity, since the base frames stay
+    * checkpointed. With sinks, the ranks feed BOTH the dangling
+    * aggregate and the contribution join, so each round must
+    * materialize (unrolling would re-execute the previous round
+    * inside the broadcast branch); cadence only — per-round semantics
+    * are bit-identical either way.
+    */
+  private def iterate(r: Materialize.Rounds, dom: DataFrame, nDom: Long,
+                      eNorm: DataFrame, hasOut: DataFrame,
+                      seedWeights: Option[DataFrame], init: DataFrame,
+                      iters: Int, damping: Double,
+                      restart: Column, danglingShare: Column): DataFrame = {
+    val sinkless = hasOut.count() == nDom
     val unroll = if (sinkless) 5 else 1
-    var i = 0
-    while (i < iters) {
-      val steps = math.min(unroll, iters - i)
-      var cur = ranks
-      for (_ <- 1 to steps) {
-        // same one-row broadcast fold as [[run]]: one job per round
-        val contrib = cur.select(col("node").as("__src"), col("rank"))
-          .join(eNorm.select(col("src").as("__src"), col("dst"),
-            col("frac")), Seq("__src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("frac")).as("__c"))
-        cur =
-          if (sinkless)
-            dom.join(contrib, Seq("node"), "left")
-              .join(sW, Seq("node"), "left")
-              .select(col("node"),
-                (coalesce(col("__sw"), lit(0.0)) * lit(1.0 - damping) +
-                  lit(damping) * coalesce(col("__c"), lit(0.0)))
-                  .as("rank"))
-          else {
-            val dangling = cur.join(hasOut, Seq("node"), "left")
-              .filter(col("__has_out").isNull)
-              .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
-            dom.join(contrib, Seq("node"), "left")
-              .join(sW, Seq("node"), "left")
-              .crossJoin(broadcast(dangling))
-              .select(col("node"),
-                (coalesce(col("__sw"), lit(0.0)) * lit(1.0 - damping) +
-                  lit(damping) * (coalesce(col("__c"), lit(0.0)) +
-                    col("__dang") * coalesce(col("__sw"), lit(0.0))))
-                  .as("rank"))
-          }
+    def step(cur: DataFrame): DataFrame = {
+      // rank parked on sinks this round, redistributed: a ONE-ROW
+      // broadcast cross join instead of a driver collect, so each round
+      // is a single job (the checkpoint action) — an iterative driver
+      // loop pays per-job scheduling latency × iters, and halving the
+      // job count halves that fixed cost
+      val contrib = cur.select(col("node").as("__src"), col("rank"))
+        .join(eNorm.select(col("src").as("__src"), col("dst"),
+          col("frac")), Seq("__src"))
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("rank") * col("frac")).as("__c"))
+      val base = seedWeights.foldLeft(dom.join(contrib, Seq("node"), "left"))(
+        _.join(_, Seq("node"), "left"))
+      if (sinkless)
+        base.select(col("node"),
+          (restart + lit(damping) * coalesce(col("__c"), lit(0.0))).as("rank"))
+      else {
+        val dangling = cur.join(hasOut, Seq("node"), "left")
+          .filter(col("__has_out").isNull)
+          .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
+        base.crossJoin(broadcast(dangling))
+          .select(col("node"),
+            (restart + lit(damping) *
+              (coalesce(col("__c"), lit(0.0)) + danglingShare)).as("rank"))
       }
-      val stepped = Materialize.checkpoint(cur)
-      Materialize.release(ranks)
-      ranks = stepped
-      i += steps
     }
-    Materialize.release(eNorm, hasOut, e, seedNodes, nodes)
-    ball.foreach(b => Materialize.release(eBall, b))
-    ranks
+    r.loop(init, (iters + unroll - 1) / unroll) { (ranks, round) =>
+      val steps = math.min(unroll, iters - (round - 1) * unroll)
+      (1 to steps).foldLeft(ranks)((cur, _) => step(cur))
+    }
   }
 }

@@ -6,14 +6,14 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one materialization seam. graft plans stay lazy except at
   * deliberate lineage cuts, and every cut goes through [[checkpoint]]:
-  * iterative round state (graph operators, k-center greedy: each round
-  * checkpointed, the SUPERSEDED one [[release]]d, so peak storage is
-  * two rounds), multiply-consumed build-time relations (some behind the
-  * one size gate [[checkpointIfLarge]]) and cross-query state
-  * ([[sessionCached]]). [[checkpoint]] records each backing RDD in a
-  * weak identity registry, so the harness's between-query sweep
-  * [[releaseOwned]] frees exactly what graft created — never a
-  * caller's own `persist()` or `localCheckpoint`.
+  * iterative round state (the graph operators run on [[rounds]]; the
+  * driver-collect k-center loop releases its own), multiply-consumed
+  * build-time relations (some behind the one size gate
+  * [[checkpointIfLarge]]) and cross-query state ([[sessionCached]]).
+  * [[checkpoint]] records each backing RDD in a weak identity registry,
+  * so the harness's between-query sweep [[releaseOwned]] frees exactly
+  * what graft created — never a caller's own `persist()` or
+  * `localCheckpoint`.
   */
 private[graft] object Materialize {
 
@@ -55,14 +55,95 @@ private[graft] object Materialize {
     }
 
   /** `localCheckpoint(eager)`, registered as graft-owned. Lazy leaves
-    * the job to the first action over the frame (Hierarchy and
-    * ConnectedComponents fold it into their convergence test: one job
-    * per round, not two).
+    * the job to the first action over the frame.
     */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val cut = df.localCheckpoint(eager)
     rdd(cut).foreach(r => synchronized(owned.add(r)))
     cut
+  }
+
+  /** One iterative operator's storage, owned by [[rounds]]: the
+    * `scratch` frames its rounds read and its round state.
+    *
+    * The round policy, stated once: every round is cut by a
+    * [[checkpoint]] — without it the plan doubles per round and the
+    * optimizer re-walks the whole history — and the SUPERSEDED round is
+    * [[release]]d only after the new one is materialized (until then
+    * the new round's lineage reads the old round's blocks), so peak
+    * round storage is two rounds, not `maxRounds`. A [[loop]] of fixed
+    * length checkpoints eagerly; a convergence loop ([[until]])
+    * checkpoints LAZILY and lets its test be the action that
+    * materializes the round, so each round is one Spark job, not two
+    * (r14: per-job fixed cost dominated these loops at small SF). The
+    * final round is the operator's result and outlives it; scratch is
+    * released when the operator returns, and on ANY exception every
+    * scratch frame and round state is released before it propagates.
+    */
+  final class Rounds private[Materialize] () {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** [[checkpoint]] (eager) a frame the rounds read; released when
+      * the operator returns.
+      */
+    def scratch(df: DataFrame): DataFrame = own(checkpoint(df))
+
+    /** Take an already checkpointed frame (another operator's result)
+      * as scratch.
+      */
+    def own(df: DataFrame): DataFrame = { held += df; df }
+
+    private[Materialize] def releaseScratch(): Unit = release(held.toSeq: _*)
+
+    /** `rounds` steps from `init`; `step(state, round)` gets rounds
+      * numbered from 1.
+      */
+    def loop(init: DataFrame, rounds: Int)
+            (step: (DataFrame, Int) => DataFrame): DataFrame =
+      iterate(init, rounds, eager = true, _ => false, ())(step)
+
+    /** Step from `init` until `settled` holds, testing `init` too;
+      * `stuck` fails loud when it still does not after `maxRounds`
+      * steps. `settled` must run an action over its frame: it is what
+      * materializes the lazily checkpointed round.
+      */
+    def until(init: DataFrame, maxRounds: Int)
+             (settled: DataFrame => Boolean, stuck: => Nothing)
+             (step: (DataFrame, Int) => DataFrame): DataFrame =
+      iterate(init, maxRounds, eager = false, settled, stuck)(step)
+
+    private def iterate(init: DataFrame, maxRounds: Int, eager: Boolean,
+                        settled: DataFrame => Boolean, stuck: => Unit)
+                       (step: (DataFrame, Int) => DataFrame): DataFrame = {
+      var state = checkpoint(init, eager)
+      var next: DataFrame = null
+      try {
+        var done = settled(state)
+        var round = 0
+        while (!done && round < maxRounds) {
+          round += 1
+          next = checkpoint(step(state, round), eager)
+          done = settled(next)
+          release(state)
+          state = next
+          next = null
+        }
+        if (!done) stuck
+        state
+      } catch {
+        case t: Throwable =>
+          release(Seq(state, next).filter(_ != null): _*)
+          throw t
+      }
+    }
+  }
+
+  /** Run one iterative operator: `body` builds its scratch and rounds
+    * on the [[Rounds]] it is given, under the policy stated there.
+    */
+  def rounds(body: Rounds => DataFrame): DataFrame = {
+    val r = new Rounds
+    try body(r) finally r.releaseScratch()
   }
 
   /** Free superseded checkpoints (non-blocking). Not `Dataset.unpersist`:

@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.ConnectedComponents
+import graft.graph.{Bfs, ConnectedComponents, Hierarchy, LabelPropagation,
+  PageRank}
 
-/** Connected-components correctness: transitive closure, component
-  * labeling by minimum member, convergence guard.
+/** Graph operator correctness (connected components, PageRank and its
+  * personalized form, BFS, hierarchy, label propagation) and the round
+  * loop's storage and job discipline.
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -55,9 +58,11 @@ class GraphSpec extends SparkSpec {
   test("non-convergence within maxIter fails loud") {
     // a 12-node path needs ~11 min-propagation rounds; cap at 3
     val chain = (1L until 12L).map(i => (i, i + 1))
+    val before = persistedIds
     intercept[IllegalStateException] {
       ConnectedComponents.run(chain.toDF("src", "dst"), maxIter = 3)
     }
+    assert(persistedIds -- before === Set.empty, "round state leaked")
   }
 
   /** Driver-side PageRank power iteration with the same recurrence
@@ -171,6 +176,14 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val want = pprOracle(edges, Set("a"), iters = 6) // ghost dropped
     got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, k) }
+    // every seed outside the graph: fail loud, leave nothing persisted
+    val before = persistedIds
+    val e = intercept[IllegalArgumentException] {
+      graft.graph.PageRank.personalized(edges.toDF("src", "dst", "w"),
+        Seq("ghost").toDF("node"), weightCol = Some("w"), iters = 6)
+    }
+    assert(e.getMessage.contains(">=1 seed in the graph"), e.getMessage)
+    assert(persistedIds -- before === Set.empty, "scratch leaked")
   }
 
   test("bounded PPR: faithful truncation — within-ball ranks exact " +
@@ -284,20 +297,24 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     val nodes = Seq((1L, Option(2L)), (2L, Option(1L)), (3L, Option.empty[Long]))
       .toDF("id", "parent")
+    val before = persistedIds
     val e = intercept[IllegalArgumentException] {
       graft.graph.Hierarchy.resolve(nodes, "id", "parent", maxIter = 6).count()
     }
     assert(e.getMessage.contains("not settled"))
+    assert(persistedIds -- before === Set.empty, "round state leaked")
   }
 
   test("hierarchy: dangling parent is not mistaken for a root") {
     import spark.implicits._
     val nodes = Seq((1L, Option.empty[Long]), (2L, Option(99L)))
       .toDF("id", "parent")
+    val before = persistedIds
     val e = intercept[IllegalArgumentException] {
       graft.graph.Hierarchy.resolve(nodes, "id", "parent", maxIter = 4).count()
     }
     assert(e.getMessage.contains("not settled"))
+    assert(persistedIds -- before === Set.empty, "round state leaked")
   }
 
   // --- label propagation ---
@@ -369,5 +386,65 @@ class GraphSpec extends SparkSpec {
         Seq("zzz", "a").toDF("node"), maxDepth = 2)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("a" -> 0L, "b" -> 1L))
+  }
+
+  // --- the round loop ---
+
+  test("connected components and hierarchy run one Spark job per round") {
+    // Counts actions: without AQE a lazy checkpoint runs nothing at
+    // plan time, and without broadcast joins no build side is collected,
+    // so each job is one action. The convergence test must be the
+    // action that materializes the round; an eager round would be two.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s2.implicits._
+    // CC on the path 1-2-…-n converges in n rounds (n − 1 to carry
+    // label 1 to the far end, one more to see the sum hold), after one
+    // job for its edge scratch and one testing the initial labels
+    def ccJobs(n: Int): Int = jobsDuring(ConnectedComponents.run(
+      (1L until n).map(i => (i, i + 1)).toDF("src", "dst")))._2
+    assert(ccJobs(4) === 2 + 4)
+    assert(ccJobs(8) === 2 + 8)
+    // pointer doubling settles a chain of d parent links in
+    // ceil(log2 d) + 1 rounds, after one job testing the initial state
+    def hierarchyJobs(d: Int): Int = jobsDuring(Hierarchy.resolve(
+      (0L to d).map(i => (i, if (i == 0) None else Some(i - 1)))
+        .toDF("id", "parent"), "id", "parent"))._2
+    assert(hierarchyJobs(2) === 1 + 2)
+    assert(hierarchyJobs(16) === 1 + 5)
+  }
+
+  test("iterative operators leave exactly their result persisted") {
+    // a 4-path, both directions, plus one sink so PageRank steps
+    // round by round
+    val g = symmetrize(Seq("a" -> "b", "b" -> "c", "c" -> "d"))
+      .union(Seq("d" -> "e").toDF("src", "dst"))
+    val seeds = Seq("a").toDF("node")
+    val noEdges = Seq.empty[(String, String)].toDF("src", "dst")
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "connected components" -> (() => ConnectedComponents.run(
+        Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst"))),
+      "hierarchy" -> (() => Hierarchy.resolve(
+        Seq((1L, Option.empty[Long]), (2L, Some(1L)), (3L, Some(2L)))
+          .toDF("id", "parent"), "id", "parent")),
+      "label propagation" -> (() => LabelPropagation.run(g)),
+      "hop distance" -> (() => Bfs.hopDistance(g, seeds, maxDepth = 2)),
+      "hyperedge hop distance" -> (() => Bfs.hopDistanceHyper(
+        Seq(("a", 1L), ("b", 1L), ("b", 2L), ("c", 2L)).toDF("node", "edge"),
+        seeds, maxDepth = 2)),
+      "pagerank" -> (() => PageRank.run(g, iters = 3)),
+      "pagerank, no edges" -> (() => PageRank.run(noEdges)),
+      "personalized pagerank" ->
+        (() => PageRank.personalized(g, seeds, iters = 3)),
+      "personalized pagerank, bounded" ->
+        (() => PageRank.personalized(g, seeds, iters = 3, radius = Some(1))))
+    calls.foreach { case (name, call) =>
+      val before = persistedIds
+      val out = call()
+      assert(persistedIds -- before === Set(rddId(out)), name)
+      out.count() // scratch released, result still readable
+      spark.sparkContext.getPersistentRDDs(rddId(out)).unpersist(false)
+    }
   }
 }

@@ -2,10 +2,6 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graftshim.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -19,30 +15,6 @@ import graft.queries.TrainingQueries
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
-
-  private def persistedIds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  private def rddId(df: DataFrame): Int =
-    df.queryExecution.analyzed.collectLeaves().collectFirst {
-      case lr: LogicalRDD => lr.rdd.id
-    }.get
-
-  /** Spark jobs submitted while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** A private copy of the documents table, so the test can change its
     * content tag without touching the shared fixture.
@@ -150,6 +122,9 @@ class MaterializeSpec extends SparkSpec {
   test("only the materialization seam calls localCheckpoint in main code") {
     assert(SourceGuard.mainFilesCalling(".localCheckpoint(") ===
       Seq("graft/ops/Materialize.scala"))
+    // iterative operators free round state through the round loop only
+    assert(SourceGuard.mainFilesCalling("Materialize.release(")
+      .filter(_.startsWith("graft/graph/")) === Nil)
   }
 }
 

@@ -1,8 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftshim.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test base: one lazy SparkSession per JVM (suites share it —
@@ -22,6 +27,32 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4, 4, suiteConf)
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Ids of the RDDs the suite's SparkContext holds persisted. */
+  def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Id of the first checkpointed RDD under `df`'s plan. */
+  def rddId(df: DataFrame): Int =
+    df.queryExecution.analyzed.collectLeaves().collectFirst {
+      case lr: LogicalRDD => lr.rdd.id
+    }.get
+
+  /** Spark jobs submitted while `body` runs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 
   /** Runs `probe`'s main in a child JVM on this JVM's classpath and
     * module flags, for checks that need a SparkContext of their own;
