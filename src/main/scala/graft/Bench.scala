@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.graftshim.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark. Emits ONE JSON line:
@@ -40,11 +36,9 @@ import org.apache.spark.sql.SparkSession
   *    the MINIMUM wall — the standard defense when the environment
   *    injects multi-second stalls unrelated to plan cost; per-iteration
   *    walls are kept in `detail` so a stall is visible, not hidden;
-  *  - a SparkListener accumulates task metrics (executorRunTime,
-  *    executorCpuTime, jvmGCTime, task count) per query, reported from
-  *    the best iteration: a query whose wall ≫ task run time stalled
-  *    outside Spark (scheduler/JVM/host); run ≫ cpu means the executor
-  *    threads were starved or blocked, gc isolates collector pauses;
+  *  - the harness listener ([[Harness.TaskMetrics]]) sums task
+  *    metrics (executor run/CPU/GC time, task count, spill, shuffle,
+  *    retries) per query, reported from the best iteration;
   *  - failures are LOUD: a throwing query records its actual elapsed
   *    wall (never a fake fast time) plus the exception in `errors`, and
   *    the process exits 0 only because a partial bench is still useful
@@ -52,66 +46,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Accumulates executor-side task metrics between snapshots. */
-  final class MetricsListener extends SparkListener {
-    val runMs = new LongAdder; val cpuNs = new LongAdder
-    val gcMs = new LongAdder; val tasks = new LongAdder
-    // Variance-attribution evidence (VERDICT r11 #2): the sf10
-    // q_item_sim walls swung 47.7–136 s on identical config with
-    // cpu_ms itself tripling, and "external host load" could not be
-    // distinguished from a real mechanism (stage retries re-running
-    // work, memory pressure forcing spills + re-reads) because the
-    // detail JSON carried neither. These five counters settle it per
-    // query: a quiet run shows zero retries/failures and stable spill;
-    // a host-load run shows the SAME zeros with only wall inflated; a
-    // memory-pressure run shows spill growth; a retry storm shows
-    // retried>0 with run_ms inflated by the re-executed tasks.
-    val spillMemB = new LongAdder; val spillDiskB = new LongAdder
-    val shufReadB = new LongAdder; val shufWriteB = new LongAdder
-    val retried = new LongAdder // speculative/retried task attempts
-    val failed = new LongAdder  // tasks ending in a non-success reason
-    // whole-stage resubmissions (fetch failure): their tasks run at
-    // attemptNumber 0, so the task counter alone would miss them
-    val stageRetries = new LongAdder
-    override def onStageSubmitted(
-        s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      if (s.stageInfo.attemptNumber > 0) stageRetries.increment()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        runMs.add(m.executorRunTime)
-        cpuNs.add(m.executorCpuTime)
-        gcMs.add(m.jvmGCTime)
-        tasks.increment()
-        spillMemB.add(m.memoryBytesSpilled)
-        spillDiskB.add(m.diskBytesSpilled)
-        shufReadB.add(m.shuffleReadMetrics.totalBytesRead)
-        shufWriteB.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-      if (t.taskInfo != null) {
-        if (t.taskInfo.attemptNumber > 0) retried.increment()
-        // genuine failures only: `killed` covers speculative duplicates
-        // and tasks reaped when a sibling stage fails — counting them
-        // via !successful would inflate the failure evidence
-        if (t.taskInfo.failed) failed.increment()
-      }
-    }
-    def snap: Array[Long] =
-      Array(runMs.sum, cpuNs.sum / 1000000L, gcMs.sum, tasks.sum,
-        spillMemB.sum >> 20, spillDiskB.sum >> 20,
-        shufReadB.sum >> 20, shufWriteB.sum >> 20,
-        retried.sum, failed.sum, stageRetries.sum)
-  }
-
-  /** `codegenN` / `jitMs`: per-iteration deltas of the whole-stage-
-    * codegen compilation COUNT (CodegenMetrics, exact) and the JVM
-    * JIT's total compile time (CompilationMXBean) — the round-4 r3→r4
-    * forensics: q_agg_sum/q_join_salted swung 2.4–3.5× run-to-run
-    * with identical plans, and BASELINE.md §4's collation stall showed
-    * the mechanism is compile-queue pressure landing on whichever
-    * query runs while C2 is busy. These two columns attribute a slow
-    * ITERATION to "new codegen in this iteration" vs "JIT background
-    * load", instead of leaving the spread unexplained.
+  /** `codegenN` / `jitMs`: per-iteration whole-stage-codegen
+    * compilation counts and JVM JIT compile ms ([[Harness.Driven]]) —
+    * the round-4 r3→r4 forensics: q_agg_sum/q_join_salted swung
+    * 2.4–3.5× run-to-run with identical plans, and BASELINE.md §4's
+    * collation stall showed the mechanism is compile-queue pressure
+    * landing on whichever query runs while C2 is busy.
     */
   final case class QueryResult(best: Double, walls: Seq[Double],
                                metrics: Array[Long], err: Option[String],
@@ -125,19 +65,17 @@ object Bench {
     def hardFailed: Boolean = okFlags.nonEmpty && !okFlags.exists(identity)
   }
 
-  /** Best-effort listener drain: `LiveListenerBus.waitUntilEmpty` has a
-    * built-in 10 s timeout that THROWS — under exactly the stall
-    * conditions this harness measures. Metrics being slightly stale is
-    * acceptable; aborting the bench (or mislabeling a successful query
-    * as failed) is not.
+  /** A query's metric array from one drive's stage buckets: run, cpu
+    * and gc ms, tasks, spill (memory, disk) and shuffle (read, write)
+    * MiB, retried and failed tasks, stage resubmissions.
     */
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    catch {
-      // interrupts must not be silently eaten — restore the flag
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      case scala.util.control.NonFatal(_) => ()
-    }
+  def totals(stages: Seq[Harness.Stage]): Array[Long] = {
+    def sum(f: Harness.Stage => Long): Long = stages.map(f).sum
+    Array(sum(_.runMs), sum(_.cpuNs) / 1000000L, sum(_.gcMs), sum(_.tasks),
+      sum(_.spillMemB) >> 20, sum(_.spillDiskB) >> 20,
+      sum(_.shuffleReadB) >> 20, sum(_.shuffleWriteB) >> 20,
+      sum(_.retried), sum(_.failed), stages.count(_.attempt > 0).toLong)
+  }
 
   /** Run one query `iters` times; min wall + metrics over the
     * SUCCESSFUL iterations (a transient failure must not contribute a
@@ -145,61 +83,15 @@ object Bench {
     * the MAXIMUM elapsed — a broken query must never look fast — and
     * the exception is carried in `err`.
     */
-  /** Compile-pressure snapshot: (codegen compilations so far, JVM JIT
-    * total compile ms so far). Count from the codahale histogram is
-    * exact; the JIT bean can be absent on exotic JVMs → -1 sentinel.
-    */
-  private def compileSnap(): (Long, Long) = {
-    val cg = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
-    val bean = java.lang.management.ManagementFactory.getCompilationMXBean
-    val jit = if (bean != null && bean.isCompilationTimeMonitoringSupported)
-      bean.getTotalCompilationTime else -1L
-    (cg, jit)
-  }
-
-  def runQuery(spark: SparkSession, listener: MetricsListener, iters: Int)
+  def runQuery(spark: SparkSession, metrics: Harness.TaskMetrics, iters: Int)
               (run: () => Unit): QueryResult = {
-    var err: Option[String] = None
-    val runs = (1 to iters).map { _ =>
-      // Harness hygiene, not caching: drop the previous run's leaked
-      // graft checkpoints (pinned session caches excepted) BEFORE the
-      // timer starts — each iteration reconstructs its DataFrame from
-      // the parquet inputs, so no measured work is ever reused; the
-      // checkpoint WRITE stays inside the timed region. See
-      // Materialize.releaseOwned for the r13 eviction-churn forensics
-      // that motivated this.
-      graft.ops.Materialize.releaseOwned(spark)
-      drainListenerBus(spark)
-      val before = listener.snap
-      val (cg0, jit0) = compileSnap()
-      val t0 = System.nanoTime()
-      try {
-        run()
-        val wall = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark)
-        val after = listener.snap
-        val (cg1, jit1) = compileSnap()
-        (wall, after.zip(before).map { case (a, b) => a - b }, true,
-          cg1 - cg0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
-      } catch {
-        // NonFatal only: an OOM/StackOverflow corrupts the JVM — every
-        // later query's wall would be garbage published as a valid
-        // measurement. Let fatal errors kill the bench; partial-bench
-        // behavior is for QUERY failures.
-        case scala.util.control.NonFatal(e) =>
-          err = Some(s"${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-          val (cg1, jit1) = compileSnap()
-          ((System.nanoTime() - t0) / 1e9, Array(0L, 0L, 0L, 0L), false,
-            cg1 - cg0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
-      }
-    }
-    val walls = runs.map(_._1)
-    val ok = runs.filter(_._3)
-    val best = if (ok.nonEmpty) ok.minBy(_._1) else runs.maxBy(_._1)
-    QueryResult(best._1, walls, best._2, err,
-      runs.map(_._4), runs.map(_._5), runs.map(_._3))
+    val runs = (1 to iters).map(_ => Harness.drive(spark, metrics)(run()))
+    val ok = runs.filter(_.ok)
+    val best = if (ok.nonEmpty) ok.minBy(_.wallS) else runs.maxBy(_.wallS)
+    QueryResult(best.wallS, runs.map(_.wallS),
+      if (best.ok) totals(best.stages) else Array(0L, 0L, 0L, 0L),
+      runs.flatMap(_.failure).lastOption.map(Harness.describe(_, 300)),
+      runs.map(_.codegenN), runs.map(_.jitMs), runs.map(_.ok))
   }
 
   private def jsonNum(d: Double): String =
@@ -365,75 +257,10 @@ object Bench {
     (line, detailJson)
   }
 
-  /** Re-lay every sfDir table as `nFiles`-file parquet under /tmp and
-    * return the copy's path (BASELINE.md §9–10, VERDICT r6 item 6):
-    * the driver's testdata is ONE row group per table, so any
-    * CPU-dense narrow query serializes on a single task and ~8 s of
-    * apparent bench time is input-layout artifact, not plan cost.
-    * `SPARK_GRAFT_SPLIT_COPY=1` runs the same bench against the
-    * split layout so both points are comparable round-over-round.
-    * The copy is content-addressed by source dir and cached behind a
-    * _SUCCESS marker — rebuilding costs ~20 s, reuse is free.
-    */
-  private def splitCopy(spark: SparkSession, sfDir: String,
-                        nFiles: Int): String = {
-    val listed = Option(new java.io.File(sfDir).listFiles())
-      .getOrElse(sys.error(s"SPARK_GRAFT_SF_DIR does not exist: $sfDir"))
-    val tables = listed.filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    require(tables.nonEmpty, s"no *.parquet tables under $sfDir")
-    // content-keyed, not path-keyed: the driver regenerates testdata
-    // at the SAME path every round, so a path-only cache would serve
-    // the previous round's rows forever (same tag discipline as the
-    // bucketed-layout cache in CoreQueries.bucketedJoin)
-    val listing = tables
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(sfDir, "|", s"|$nFiles")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
-    val dst = s"/tmp/graft_split_$tag"
-    val done = java.nio.file.Paths.get(dst, "_SUCCESS")
-    if (!java.nio.file.Files.exists(done)) {
-      tables.map(_.getName).foreach { t =>
-        spark.read.parquet(s"$sfDir/$t").repartition(nFiles)
-          .write.mode("overwrite").parquet(s"$dst/$t")
-      }
-      java.nio.file.Files.createFile(done)
-    }
-    dst
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDirRaw = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
-    val split = sys.env.get("SPARK_GRAFT_SPLIT_COPY").exists(_ == "1")
-    // shuffle width defaults to the thread count (the harness contract)
-    // but can be scaled independently for scale-factor legs: the §12
-    // sf1 probe runs with partitions sized to the data, not the box,
-    // exactly as a real deployment would
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
-    // State-store A/B knob (VERDICT r11 #5): `rocksdb` swaps every
-    // stateful streaming query onto the disk-backed RocksDB provider so
-    // the q_stream_* rows can be cost-attributed against the default
-    // HDFS-backed in-memory store at the ×100 leg. Unset = default.
-    val stateStore = sys.env.get("SPARK_GRAFT_STATESTORE") match {
-      case Some("rocksdb") => Some("org.apache.spark.sql.execution." +
-        "streaming.state.RocksDBStateStoreProvider")
-      case Some("") | None => None
-      // fail fast on a typo ('RocksDB', 'rocks') — silently falling
-      // through would report default-HDFS numbers labeled as RocksDB
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_STATESTORE: unrecognized value '$other' " +
-          "(expected 'rocksdb' or unset)")
-    }
-    val conf = stateStore.toSeq
-      .map("spark.sql.streaming.stateStore.providerClass" -> _)
-    val spark = GraftSession.local(cpus.toInt, parts.toInt, conf)
-    val sfDir = if (split) splitCopy(spark, sfDirRaw, cpus.toInt) else sfDirRaw
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val st = Harness.settings
+    val spark = Harness.session()
+    val metrics = Harness.listen(spark)
 
     // Warm the JVM/codegen/parquet-reader paths so the first timed query
     // doesn't absorb one-time startup cost (JIT, codegen compiler init).
@@ -441,7 +268,7 @@ object Bench {
     // corrupt warm-up file must degrade to a cold first query, never
     // abort the bench before a single timed query ran.
     try {
-      spark.read.parquet(s"$sfDir/nation.parquet")
+      spark.read.parquet(s"${st.sfDir}/nation.parquet")
         .groupBy("n_regionkey").count().count()
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warm-up skipped: $e") }
@@ -465,49 +292,37 @@ object Bench {
       "count(distinct split(concat('aé bé', id), ' ')[0])",
       "count(distinct trim(concat(' aβ ', id)))").count()
 
-    val only = SparkEntry.only("bench")
-    // Timing executes via a noop-format WRITE, not count(): under a
-    // bare count aggregate Catalyst prunes every projected expression
-    // and eliminates final sorts, so projection-shaped queries (md5,
-    // math/date/string function families) were timed as bare row-count
-    // scans — measured 0.21 s vs 2.40 s real cost for q_math_funcs at
-    // sf0.1. The noop sink forces every output column's computation
-    // and discards rows executor-side (no driver collect, no disk).
-    // Methodology v2 — totals are NOT comparable with pre-r5-close
-    // points (BASELINE.md §6 carries the bridge).
+    // Methodology v2 (noop-write timing, see Harness.noop) — totals are
+    // NOT comparable with pre-r5-close points (BASELINE.md §6 carries
+    // the bridge).
     val results: Seq[(String, QueryResult)] =
-      SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          name -> runQuery(spark, listener, iters)(() =>
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        }
+      Harness.select("bench").map { case (name, fn) =>
+        name -> runQuery(spark, metrics, st.iters)(() =>
+          Harness.noop(fn(spark, st.sfDir)))
+      }
 
     // Calibration leg (VERDICT r10 #6): when the main run is NOT at the
     // close config (local[4]), re-time the fixed headline subset at
-    // local[4]/partitions=4 in this same JVM so the emitted point is
-    // interpretable without a documented thread-band factor. Dev
-    // subsets (SPARK_GRAFT_ONLY) skip it; SPARK_GRAFT_CALIB=0 opts out.
+    // local[4]/partitions=4, default settings, in this same JVM so the
+    // emitted point is interpretable without a documented thread-band
+    // factor. Dev subsets (SPARK_GRAFT_ONLY) skip it.
     val calib: Option[(Int, Seq[(String, QueryResult)])] =
-      if (cpus == "4" || only.nonEmpty ||
-          sys.env.get("SPARK_GRAFT_CALIB").contains("0")) None
+      if (st.cpus == 4 || st.only.nonEmpty) None
       else {
         spark.stop()
-        val cs = GraftSession.local(4, 4)
-        val cl = new MetricsListener
-        cs.sparkContext.addSparkListener(cl)
+        val cs = Harness.session(4, 4, Nil)
+        val cm = Harness.listen(cs)
         val cres = headline
           .flatMap(k => SparkEntry.queries.get(k).map(k -> _))
           .map { case (name, fn) =>
-            name -> runQuery(cs, cl, iters = 2)(() =>
-              fn(cs, sfDir).write.format("noop").mode("overwrite").save())
+            name -> runQuery(cs, cm, iters = 2)(() => Harness.noop(fn(cs, st.sfDir)))
           }
         cs.stop()
         Some((4, cres))
       }
 
-    val (line, detailJson) = renderOutputs(results, sfDir, iters,
-      cpus.toInt, calib)
+    val (line, detailJson) = renderOutputs(results, st.sfDir, st.iters,
+      st.cpus, calib)
     // The stdout line is the primary contract — print it FIRST so a
     // detail-file write failure (non-writable cwd) can't discard the
     // whole bench after every query already ran.

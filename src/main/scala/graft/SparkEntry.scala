@@ -19,24 +19,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.argMaxBestYear(spark, "/root/testdata/sf0.001")
 
-  /** Dev focus filter shared by Bench and Verify:
-    * `SPARK_GRAFT_ONLY=q_a,q_b` selects a subset of [[queries]]; unset
-    * selects everything, so a full run always covers the whole surface.
-    * A typo'd name silently matching nothing would masquerade as a fast
-    * or clean run, so unknown names are reported on stderr under `[tag]`.
-    */
-  def only(tag: String): Option[Set[String]] = {
-    val names = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    names.foreach { ns =>
-      val unknown = ns -- queries.keySet
-      if (unknown.nonEmpty) System.err.println(
-        s"[$tag] SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    names
-  }
-
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_agg_sum"      -> (CoreQueries.aggSum _),

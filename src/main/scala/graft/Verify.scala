@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,27 +10,8 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus, cpus)
-    new java.io.File(outDir).mkdirs()
-    val only = SparkEntry.only("verify")
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
-      // release prior queries' leaked graft checkpoints, pinned
-      // session caches excepted (same hygiene as Bench — accumulated
-      // blocks poison later queries' execution-memory grants; see
-      // Materialize.releaseOwned)
-      graft.ops.Materialize.releaseOwned(spark)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case scala.util.control.NonFatal(e) =>
-        // class name + null-safe message (a bare NPE printed "null"
-        // with nothing to triage on)
-        System.err.println(s"[verify] $name failed: " +
-          s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
-      }
-    }
+    val spark = Harness.session()
+    dump(spark, sfDir, outDir, Harness.select("verify"))
     // shared escaper (graft.Json): a tab or CR in builder-authored SQL
     // would otherwise make the driver's json.load fail and silently
     // zero the round's correctness.
@@ -38,5 +20,24 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Each query's result as one-file parquet under `outDir/<name>`.
+    * Returns the failures as (name, "Class: message"), each also printed
+    * as `[verify] <name> failed: …`; a failure never stops the rest.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, Harness.Query)]): Seq[(String, String)] = {
+    new java.io.File(outDir).mkdirs()
+    val metrics = Harness.listen(spark)
+    try queries.flatMap { case (name, fn) =>
+      Harness.drive(spark, metrics)(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
+        .failure.map { e =>
+          val msg = Harness.describe(e)
+          System.err.println(s"[verify] $name failed: $msg")
+          name -> msg
+        }
+    } finally spark.sparkContext.removeSparkListener(metrics)
   }
 }

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.Harness
 import graft.ops.{Materialize, Ops}
 
 /** Empirical scaling probe: replicate the sf0.1 lineitem N× with
@@ -11,14 +11,19 @@ import graft.ops.{Materialize, Ops}
   * the core operators. Near-linear growth here is the evidence that the
   * plans would survive a real scale-up — superlinear growth flags an
   * operator whose shuffle or build side grows with the square of input.
-  * `SPARK_GRAFT_SCALE=16 sbt "runMain graft.examples.ScaleProbe"`
+  * `sbt "runMain graft.examples.ScaleProbe [scale] [section]"`: scale
+  * defaults to 8; `section` (core | main | basket | decade | incr |
+  * quality | kcenter) runs one section so a new leg can be re-measured
+  * without the ~10 min full sweep. Session and input come from
+  * [[graft.Harness]].
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "8").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
+    val n = args.headOption.fold(8)(_.toInt)
+    val probeOnly = args.lift(1)
+    val sfDir = Harness.settings.sfDir
+    val cpus = Harness.settings.cpus
+    val spark = Harness.session()
 
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val maxKey = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1
@@ -35,10 +40,6 @@ object ScaleProbe {
       println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2fs  ($rows rows)")
     }
 
-    // `SPARK_GRAFT_PROBE=<tag>` runs one section (core | main | basket
-    // | decade) so a new leg can be re-measured without the ~10 min
-    // full sweep; unset runs everything, as before.
-    val probeOnly = sys.env.get("SPARK_GRAFT_PROBE")
     def section(tag: String)(body: => Unit): Unit =
       if (probeOnly.forall(_ == tag)) body
 
@@ -280,7 +281,7 @@ object ScaleProbe {
       try {
         for (t <- Seq("region", "nation", "customer", "supplier", "part",
             "orders", "lineitem", "events", "documents", "embeddings")) {
-          spark.read.parquet(s"$sfDir/$t.parquet").repartition(cpus.toInt)
+          spark.read.parquet(s"$sfDir/$t.parquet").repartition(cpus)
             .write.mode("overwrite").parquet(s"$multiDir/$t.parquet")
         }
         def noopTime(q: String, dir: String): Double = {
@@ -355,7 +356,7 @@ object ScaleProbe {
           (col("id") % (m * 4)).as("pk"), expr(s"id div $b").as("ok"))
         time(f"basket-explode pairs (b=$b%-2d)")({
           inc.groupBy("ok").agg(collect_set(col("pk")).as("parts"))
-            .repartition(cpus.toInt)
+            .repartition(cpus)
             .select(explode(expr(
               """flatten(transform(parts,
                 |  x -> transform(filter(parts, y -> y != x),

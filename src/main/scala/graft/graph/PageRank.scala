@@ -189,9 +189,11 @@ object PageRank {
     def step(cur: DataFrame): DataFrame = {
       // rank parked on sinks this round, redistributed: a ONE-ROW
       // broadcast cross join instead of a driver collect, so each round
-      // is a single job (the checkpoint action) — an iterative driver
-      // loop pays per-job scheduling latency × iters, and halving the
-      // job count halves that fixed cost
+      // is a single action (the checkpoint) — an iterative driver loop
+      // pays per-job scheduling latency × iters, and halving the action
+      // count halves that fixed cost. Under AQE the action's shuffle-map
+      // stages and broadcasts still run as jobs of their own (see the
+      // round policy in Materialize)
       val contrib = cur.select(col("node").as("__src"), col("rank"))
         .join(eNorm.select(col("src").as("__src"), col("dst"),
           col("frac")), Seq("__src"))

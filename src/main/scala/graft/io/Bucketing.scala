@@ -53,6 +53,16 @@ object Bucketing {
       s"CREATE DATABASE IF NOT EXISTS $db LOCATION '${location.replace("'", "''")}'")
   }
 
+  /** The database graft's own bucketed layouts live in, created on first
+    * use with its files in `graft_bkt_wh` under the JVM temp dir.
+    */
+  def graftDatabase(spark: SparkSession): String = {
+    val db = "graft_bkt"
+    ensureDatabase(spark, db, new java.io.File(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bkt_wh").getPath)
+    db
+  }
+
   /** Content tag for a bucketed layout keyed to its SOURCE DATA: an
     * 8-hex MD5 over the source files' (name, length, mod_time)
     * listing, not just the path — regenerated data at the same path

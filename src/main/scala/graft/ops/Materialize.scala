@@ -74,11 +74,15 @@ private[graft] object Materialize {
     * round storage is two rounds, not `maxRounds`. A [[loop]] of fixed
     * length checkpoints eagerly; a convergence loop ([[until]])
     * checkpoints LAZILY and lets its test be the action that
-    * materializes the round, so each round is one Spark job, not two
-    * (r14: per-job fixed cost dominated these loops at small SF). The
-    * final round is the operator's result and outlives it; scratch is
-    * released when the operator returns, and on ANY exception every
-    * scratch frame and round state is released before it propagates.
+    * materializes the round, so each round is one action, not two
+    * (r14: per-job fixed cost dominated these loops at small SF). Under
+    * AQE, on in every graft session, that action's shuffle-map stages
+    * and broadcasts run as jobs of their own: measured 4 jobs per CC
+    * round and 5 per Hierarchy round. GraphSpec's one-job-per-round pin
+    * holds only with AQE off. The final round is the operator's result
+    * and outlives it; scratch is released when the operator returns,
+    * and on ANY exception every scratch frame and round state is
+    * released before it propagates.
     */
   final class Rounds private[Materialize] () {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -181,7 +185,7 @@ private[graft] object Materialize {
         "before projecting/renaming it")
   }
 
-  /** Harness hygiene between timed queries (Bench/Verify): unpersist
+  /** Harness hygiene between queries ([[graft.Harness.drive]]): unpersist
     * every graft-owned, unpinned RDD of this context. Operators leave
     * state they cannot free themselves (the returned frame must outlive
     * the caller's action); across a full-suite session those blocks fill

@@ -855,10 +855,7 @@ object AnalyticsQueries {
   def itemSimBucketedPersisted(s: SparkSession, d: String): DataFrame = {
     import graft.functions.SketchAggregates
     val w = pairWidth(s, d)
-    val db = "graft_bkt"
-    val loc = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bkt_wh").getPath
-    graft.io.Bucketing.ensureDatabase(s, db, loc)
+    val db = graft.io.Bucketing.graftDatabase(s)
     // bucket count must equal the pair side's repartition width for
     // the co-partitioned zero-exchange probes, so it is part of the
     // layout identity alongside the source snapshot (width itself

@@ -421,27 +421,14 @@ object CoreQueries {
     * the bucket columns unify under one join column.
     */
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val db = "graft_bkt"
-    val loc = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bkt_wh").getPath
-    graft.io.Bucketing.ensureDatabase(s, db, loc)
-    // The layout is a WRITE-side artifact keyed to its source DATA:
-    // lay out once per source snapshot, then every query — including
-    // bench re-iterations — pays only the recurring exchange-free
-    // join, which is exactly the amortization bucketing exists to buy.
-    // The tag hashes the source files' (name, length, mod_time)
-    // listing, NOT just the path: regenerated data at the same path
-    // (the driver does this every round) gets a fresh tag, so a
-    // long-lived session can never serve the old snapshot's layout.
-    val listing = graft.io.Catalog
-      .listRaw(s"$d/orders.parquet", s.sparkContext.hadoopConfiguration)
-      .++(graft.io.Catalog.listRaw(s"$d/customer.parquet",
-        s.sparkContext.hadoopConfiguration))
-      .map { case (n, _, len, mod) => s"$n:$len:$mod" }.sorted
-      .mkString(d, "|", "")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
+    val db = graft.io.Bucketing.graftDatabase(s)
+    // The layout is a WRITE-side artifact keyed to its source DATA
+    // ([[graft.io.Bucketing.snapshotTag]]): lay out once per source
+    // snapshot, then every query — including bench re-iterations —
+    // pays only the recurring exchange-free join, which is exactly the
+    // amortization bucketing exists to buy.
+    val tag = graft.io.Bucketing.snapshotTag(
+      s, Seq(s"$d/orders.parquet", s"$d/customer.parquet"))
     val (ot, ct) = (s"$db.orders_bkt_$tag", s"$db.customer_bkt_$tag")
     if (!s.catalog.tableExists(ot))
       graft.io.Bucketing.writeBucketed(

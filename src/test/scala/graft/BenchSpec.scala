@@ -5,11 +5,7 @@ package graft
   */
 class BenchSpec extends SparkSpec {
 
-  private def listener = {
-    val l = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
+  private def listener = Harness.listen(spark)
 
   test("a throwing query reports its true elapsed wall plus the error") {
     val r = Bench.runQuery(spark, listener, iters = 2) { () =>
