@@ -309,7 +309,7 @@ object Bench {
     val calib: Option[(Int, Seq[(String, QueryResult)])] =
       if (st.cpus == 4 || st.only.nonEmpty) None
       else {
-        spark.stop()
+        Harness.stop(spark)
         val cs = Harness.session(4, 4, Nil)
         val cm = Harness.listen(cs)
         val cres = headline
@@ -317,7 +317,7 @@ object Bench {
           .map { case (name, fn) =>
             name -> runQuery(cs, cm, iters = 2)(() => Harness.noop(fn(cs, st.sfDir)))
           }
-        cs.stop()
+        Harness.stop(cs)
         Some((4, cres))
       }
 
@@ -339,7 +339,7 @@ object Bench {
       case e: Exception =>
         System.err.println(s"[bench] detail file write failed: $e")
     }
-    spark.stop()
+    Harness.stop(spark)
     val nErrs = results.count(_._2.err.isDefined)
     if (nErrs > 0) System.err.println(
       s"[bench] $nErrs queries FAILED — see errors key")

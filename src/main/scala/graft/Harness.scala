@@ -222,6 +222,15 @@ object Harness {
       if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0, failure)
   }
 
+  /** End a run: free what its last query left — [[drive]] frees only
+    * what came BEFORE each query (graft's checkpoints, a stream drain's
+    * view or parquet landing) — then stop the session.
+    */
+  def stop(spark: SparkSession): Unit = {
+    graft.ops.Materialize.releaseOwned(spark)
+    spark.stop()
+  }
+
   /** Class name plus null-safe message, cut to `limit` chars (a bare NPE
     * printed "null" with nothing to triage on).
     */

@@ -19,7 +19,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Harness.stop(spark)
   }
 
   /** Each query's result as one-file parquet under `outDir/<name>`.

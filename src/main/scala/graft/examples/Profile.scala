@@ -385,6 +385,6 @@ object Profile {
             .foreach(l => println("  " + l))
         }
     }
-    spark.stop()
+    Harness.stop(spark)
   }
 }

@@ -144,6 +144,19 @@ object Tables {
 
   /** events.parquet, with `ts` normalized to TIMESTAMP (see
     * [[normalizeTs]] for the encoding history).
+    */
+  def events(s: SparkSession, d: String): DataFrame =
+    read(s, d, "events", streaming = false)
+
+  /** Streaming read of table `name`, `ts` normalized exactly as
+    * [[events]] does (`withWatermark` requires TIMESTAMP). The file
+    * streaming source lists DIRECTORIES: when the table is a single
+    * parquet file, stream its parent filtered down to that file.
+    */
+  def stream(s: SparkSession, d: String, name: String): DataFrame =
+    read(s, d, name, streaming = true)
+
+  /** The one read path of [[events]] and [[stream]].
     *
     * `nanosAsLong` SESSION-WIDE EFFECT, by necessity: the conf is
     * re-read from the session at scan EXECUTION time (ParquetFileFormat
@@ -155,15 +168,22 @@ object Tables {
     * file fails the read outright — blast radius is "reads that would
     * have thrown now yield LONG", which [[normalizeTs]] then repairs.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  private def read(s: SparkSession, d: String, name: String,
+                   streaming: Boolean): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(s, d, "events")
+    val path = s"$d/$name.parquet"
+    val batch = s.read.parquet(path)
+    val df =
+      if (!streaming) batch
+      else if (new java.io.File(path).isFile)
+        s.readStream.schema(batch.schema)
+          .option("pathGlobFilter", s"$name.parquet").parquet(d)
+      else s.readStream.schema(batch.schema).parquet(path)
     // per-COLUMN ns/µs discrimination from the footer annotation when
     // the column surfaced as LONG; plain-int64 files keep the per-row
     // magnitude fallback inside normalizeTs
     val hint = df.schema.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) if parquetTsNanos(s, s"$d/events.parquet", "ts") =>
-        Some(true)
+      case Some(LongType) if parquetTsNanos(s, path, "ts") => Some(true)
       case _ => None
     }
     normalizeTs(df, "ts", hint)

@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * [[checkpoint]] records each backing RDD in a weak identity registry,
   * so the harness's between-query sweep [[releaseOwned]] frees exactly
   * what graft created — never a caller's own `persist()` or
-  * `localCheckpoint`.
+  * `localCheckpoint` — along with the stream drains' outputs
+  * ([[ownOutput]]).
   */
 private[graft] object Materialize {
 
@@ -185,18 +186,38 @@ private[graft] object Materialize {
         "before projecting/renaming it")
   }
 
-  /** Harness hygiene between queries ([[graft.Harness.drive]]): unpersist
-    * every graft-owned, unpinned RDD of this context. Operators leave
-    * state they cannot free themselves (the returned frame must outlive
-    * the caller's action); across a full-suite session those blocks fill
-    * the storage pool and every later task pays eviction churn (r13
-    * forensics: untouched tail queries inflated up to 10× in run_ms,
-    * walls rising monotonically per iteration; normal in isolation).
+  // how to free each session's drain outputs; the frees take the
+  // session, so the weak key is not held by its own values
+  private val outputs =
+    new java.util.WeakHashMap[SparkSession, List[SparkSession => Unit]]
+
+  /** Register an output graft created in `spark` that must outlive the
+    * call that made it — a stream drain's memory-sink view or parquet
+    * landing ([[graft.stream.Streams.runAvailableNow]]). The next
+    * [[releaseOwned]] of `spark` runs `free` once.
     */
-  def releaseOwned(spark: SparkSession): Unit = synchronized {
-    spark.sparkContext.getPersistentRDDs.values
-      .filter(r => owned.contains(r) && !pinned.contains(r)).toList
-  }.foreach(unpersist)
+  def ownOutput(spark: SparkSession)(free: SparkSession => Unit): Unit =
+    synchronized(outputs.put(spark,
+      free :: Option(outputs.get(spark)).getOrElse(Nil)))
+
+  /** Harness hygiene between queries ([[graft.Harness.drive]]): unpersist
+    * every graft-owned, unpinned RDD of this context and free the
+    * session's [[ownOutput]]s. Operators leave state they cannot free
+    * themselves (the returned frame must outlive the caller's action);
+    * across a full-suite session those blocks fill the storage pool and
+    * every later task pays eviction churn (r13 forensics: untouched tail
+    * queries inflated up to 10× in run_ms, walls rising monotonically
+    * per iteration; normal in isolation).
+    */
+  def releaseOwned(spark: SparkSession): Unit = {
+    val (rdds, frees) = synchronized {
+      (spark.sparkContext.getPersistentRDDs.values
+        .filter(r => owned.contains(r) && !pinned.contains(r)).toList,
+        Option(outputs.remove(spark)).getOrElse(Nil))
+    }
+    rdds.foreach(unpersist)
+    frees.foreach(_(spark))
+  }
 
   /** A session-cache entry: `frame` built from `source` at content `tag`. */
   final case class Entry(name: String, source: String, tag: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
+import graft.stream.Streams
 
 /** Scalar-function, semi-structured, and event-stream (batch-form)
   * queries — SURVEY.md §2.8/§2.9 surface on the testdata.
@@ -351,66 +352,10 @@ object FuncQueries {
     * same topology runs incrementally: per-microbatch partial
     * aggregates + versioned state store, no reshuffle of history.
     */
-  /** State partition width for the stateful streaming queries. A
-    * streaming job must size state partitioning to key cardinality
-    * and state volume (the count freezes into a durable checkpoint at
-    * first run); these drain-then-discard queries default to the
-    * fixed-cost-minimal 4 — right at the close scale, but a
-    * PARALLELISM CEILING at the ×100 leg (r13 forensics: the sf10
-    * sessions A/B ran 124 s of executor time over 56 s wall on 32
-    * cores — average parallelism 2.2, the stateful stage pinned at 4
-    * tasks). `SPARK_GRAFT_STATE_PARTITIONS` lets a scale leg size the
-    * state width to the box/data, the way a real deployment would at
-    * first checkpoint creation.
-    */
-  private def statePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(4)
-
-  /** Streaming read of a testdata table. The file streaming source
-    * lists DIRECTORIES: when the table is a single parquet file,
-    * stream its parent filtered down to that file. Events get the same
-    * encoding-agnostic `ts` normalization as the batch reader
-    * ([[Tables.normalizeTs]] — LONG nanos/µs, TIMESTAMP_NTZ, or
-    * TIMESTAMP all surface as TIMESTAMP, which `withWatermark`
-    * requires).
-    */
-  private def streamTable(s: SparkSession, d: String, name: String)
-  : DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$d/$name.parquet"
-    val rawSchema = s.read.parquet(path).schema
-    val raw =
-      if (new java.io.File(path).isFile)
-        s.readStream.schema(rawSchema)
-          .option("pathGlobFilter", s"$name.parquet").parquet(d)
-      else s.readStream.schema(rawSchema).parquet(path)
-    Tables.normalizeTs(raw)
-  }
-
-  /** Read back an AvailableNow drain's memory-sink table at width 1.
-    * The sink's rows live in the DRIVER (a memory sink collects every
-    * batch), but `s.table` plans them as a LocalTableScan split across
-    * `spark.sql.leafNodeDefaultParallelism` partitions — at the
-    * 32-core gate that is 32 near-empty tasks whose measured run time
-    * is 5–40× their CPU (blocked, not computing: 12.2 s run / 2.5 s
-    * cpu for q_stream_hourly's 3,385 rows; 4.3 s / 1.2 s for
-    * q_stream_sessions' 9,549) feeding the presentational sort's
-    * range exchange. `coalesce(1)` bounds the map side to one task —
-    * the honest width for driver-resident rows at ANY scale, because
-    * a memory sink is bounded by driver memory by construction (a
-    * durable pipeline lands in parquet via [[graft.stream.Streams
-    * .runAvailableNowToPath]] and never takes this path).
-    */
-  private def drainTable(s: SparkSession, sink: String): DataFrame =
-    s.table(sink).coalesce(1)
-
-  def streamHourly(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_hourly"
-    graft.stream.Streams.runAvailableNow(
-      graft.stream.Streams.hourlyCounts(streamTable(s, d, "events")),
-      sink, outputMode = "complete")
-    drainTable(s, sink).orderBy("hour", "event_type")
-  }
+  def streamHourly(s: SparkSession, d: String): DataFrame =
+    Streams.runAvailableNow(Streams.hourlyCounts(Tables.stream(s, d, "events")),
+      "graft_stream_hourly", outputMode = "complete")
+      .orderBy("hour", "event_type")
 
   /** Batch/stream parity for SESSION windows, oracle-gated: the gap-
     * merged session aggregate evaluated by the streaming engine's
@@ -421,17 +366,13 @@ object FuncQueries {
     * oracle ALSO pins the subtle boundary semantics (≥ gap splits,
     * not > gap — exactly where a naive batch sessionize differs).
     */
-  def streamSessions(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_sessions"
-    graft.stream.Streams.runAvailableNow(
-      graft.stream.Streams.sessionCounts(streamTable(s, d, "events")),
-      sink, outputMode = "complete", statePartitions = statePartitions)
-    drainTable(s, sink)
+  def streamSessions(s: SparkSession, d: String): DataFrame =
+    Streams.runAvailableNow(Streams.sessionCounts(Tables.stream(s, d, "events")),
+      "graft_stream_sessions", outputMode = "complete")
       .select(unix_micros(col("s_start")).as("s_start_us"),
         unix_micros(col("s_end")).as("s_end_us"),
         col("user_id"), col("n_events"), col("session_value"))
       .orderBy("user_id", "s_start_us")
-  }
 
   /** [[streamSessions]]'s sessionization via the Spark 4
     * `transformWithState` [[graft.stream.Streams.SessionizerProcessor]]
@@ -443,27 +384,13 @@ object FuncQueries {
     * sessionize plus that closed-filter, stated µs-exact with the
     * engine's watermark law (watermark = floor-to-ms of max event
     * time, minus the delay) — so the oracle also pins the watermark
-    * semantics, not just the gap-merge. Requires (and sets, for this
-    * run) the RocksDB state store provider.
+    * semantics, not just the gap-merge.
     */
   def streamSessionsTws(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_sessions_tws"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try {
-      implicit val sp: SparkSession = s
-      graft.stream.Streams.runAvailableNow(
-        graft.stream.Streams.closedSessionsTws(
-          streamTable(s, d, "events")).toDF(),
-        sink, outputMode = "append",
-        statePartitions = statePartitions)
-    } finally prev match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-    drainTable(s, sink)
+    implicit val sp: SparkSession = s
+    Streams.runAvailableNow(
+      Streams.closedSessionsTws(Tables.stream(s, d, "events")).toDF(),
+      "graft_stream_sessions_tws")
       .select(unix_micros(col("s_start")).as("s_start_us"),
         unix_micros(col("s_end")).as("s_end_us"),
         col("user_id"), col("n_events"),
@@ -487,17 +414,16 @@ object FuncQueries {
     * states the identical µs-exact bounds.
     */
   def streamJoin(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_join"
-    val clicks = streamTable(s, d, "events")
+    val clicks = Tables.stream(s, d, "events")
       .filter(col("event_type") === "click")
-    val buys = streamTable(s, d, "events")
+    val buys = Tables.stream(s, d, "events")
       .filter(col("event_type") === "purchase")
-    val j = graft.stream.Streams.streamStreamJoin(clicks, buys)
+    val j = Streams.streamStreamJoin(clicks, buys)
       .select(col("user_id"), col("l_id"), col("r_id"),
         unix_micros(col("l_ts")).as("l_ts_us"),
         unix_micros(col("r_ts")).as("r_ts_us"))
-    graft.stream.Streams.runAvailableNow(j, sink, outputMode = "append")
-    drainTable(s, sink).orderBy("user_id", "l_id", "r_id")
+    Streams.runAvailableNow(j, "graft_stream_join")
+      .orderBy("user_id", "l_id", "r_id")
   }
 
   /** STREAM-STATIC enrichment — the third streaming-join modality
@@ -513,11 +439,10 @@ object FuncQueries {
     * a source's docs).
     */
   def streamEnrich(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_enrich"
     import s.implicits._
     val weights = Seq(("en", 100L), ("de", 60L), ("fr", 40L),
       ("es", 20L)).toDF("lang", "weight")
-    val enriched = streamTable(s, d, "documents")
+    val enriched = Tables.stream(s, d, "documents")
       .join(broadcast(weights), Seq("lang"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -528,20 +453,17 @@ object FuncQueries {
           size(graft.text.TextAnalysis.tokensLower(col("text"))),
           lit(0)).cast("long") * coalesce(col("weight"), lit(0L)))
           .as("weighted_tokens"))
-    graft.stream.Streams.runAvailableNow(enriched, sink,
-      outputMode = "complete")
-    drainTable(s, sink).orderBy("source")
+    Streams.runAvailableNow(enriched, "graft_stream_enrich",
+      outputMode = "complete").orderBy("source")
   }
 
   def streamDedup(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_dedup"
-    val uniq = streamTable(s, d, "documents")
+    val uniq = Tables.stream(s, d, "documents")
       .select(col("lang"), md5(col("text")).as("fp"))
       .dropDuplicates("lang", "fp")
       .groupBy("lang").agg(count(lit(1)).as("n_unique"))
-    graft.stream.Streams.runAvailableNow(uniq, sink,
-      outputMode = "complete")
-    drainTable(s, sink).orderBy("lang")
+    Streams.runAvailableNow(uniq, "graft_stream_dedup",
+      outputMode = "complete").orderBy("lang")
   }
 
   /** Streaming SimHash NEAR-dup at ingest ([[graft.stream.Streams
@@ -553,12 +475,10 @@ object FuncQueries {
     * ([[graft.dedup.XxHashSql.streamNearDupOracleSql]]).
     */
   def streamNearDup(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_stream_neardup"
     implicit val sp: SparkSession = s
-    val hits = graft.stream.Streams.nearDupBands(
-      streamTable(s, d, "documents"))
-    graft.stream.Streams.runAvailableNow(hits.toDF(), sink)
-    val dup = drainTable(s, sink).select("doc_id").distinct()
+    val hits = Streams.nearDupBands(Tables.stream(s, d, "documents"))
+    val dup = Streams.runAvailableNow(hits.toDF(), "graft_stream_neardup")
+      .select("doc_id").distinct()
       .withColumn("__dup", lit(1L))
     Tables.documents(s, d)
       .join(broadcast(dup), Seq("doc_id"), "left")
@@ -579,8 +499,8 @@ object FuncQueries {
     *     integer gate keeps the oracle caveat-free and the hot path
     *     cheap) → first-seen exact dedup
     *     ([[graft.stream.Streams.firstSeenDocs]], fingerprint-keyed
-    *     state) → durable parquet landing + checkpoint
-    *     ([[graft.stream.Streams.runAvailableNowToPath]]);
+    *     state) → durable parquet landing
+    *     ([[graft.stream.Streams.runAvailableNow]]'s parquet sink);
     *   hop 2 (silver→gold): SimHash banded near-dup over the
     *     SURVIVORS ([[graft.stream.Streams.nearDupBands]] — band
     *     state holds deduped docs only);
@@ -590,38 +510,25 @@ object FuncQueries {
     * With id-ordered arrival the whole pipeline is SQL-replayable —
     * [[graft.dedup.XxHashSql.streamCurateOracleSql]] replays every
     * stage exactly (integer gate, min-id-per-md5 dedup, XXH64 SimHash
-    * bands over the deduped set). Each hop checkpoints independently,
-    * so at 100 TB/day this runs as two always-on queries whose only
+    * bands over the deduped set). Each hop is its own drain with its
+    * own checkpoint, so at 100 TB/day this runs as two always-on queries whose only
     * coupling is the silver directory — the standard multi-hop shape.
     */
   def streamCurate(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
-    import graft.stream.Streams
     import graft.text.TextAnalysis
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curate_hops")
-    val silver = tmp.resolve("silver").toString
-    // the silver PARQUET is the durable hop-to-hop artifact and stays
-    // on disk; the drain's checkpoint is ephemeral (RAM-backed when
-    // available — see Streams.ephemeralCheckpointDir) so the query's
-    // wall doesn't track /tmp's fsync-latency window
-    val ckSilver = Streams.ephemeralCheckpointDir("graft_ck_silver_")
     val nTok = size(TextAnalysis.tokensLower(col("text"))).cast("long")
     val nChr = length(
       regexp_replace(trim(col("text")), "\\s+", "")).cast("long")
-    val kept = streamTable(s, d, "documents")
+    val kept = Tables.stream(s, d, "documents")
       .filter(nTok >= 8 && nChr >= nTok * 2 && nChr <= nTok * 12)
-    try Streams.runAvailableNowToPath(Streams.firstSeenDocs(kept).toDF(),
-      silver, ckSilver.toString)
-    // the drain is complete once the call returns — the RAM-backed
-    // checkpoint has no recovery role past it (tmpfs would otherwise
-    // leak across process exits)
-    finally Streams.deleteRecursively(ckSilver)
+    val silver = Streams.runAvailableNow(Streams.firstSeenDocs(kept).toDF(),
+      "graft_stream_curate_silver", format = "parquet")
     val hits = Streams.nearDupBands(
-      Streams.fileSource(s, silver, s.read.parquet(silver).schema))
-    Streams.runAvailableNow(hits.toDF(), "graft_stream_curate_hits")
-    val dup = drainTable(s, "graft_stream_curate_hits")
+      Streams.fileSource(s, Streams.landing(silver), silver.schema))
+    val dup = Streams.runAvailableNow(hits.toDF(), "graft_stream_curate_hits")
       .select("doc_id").distinct()
-    s.read.parquet(silver)
+    silver
       .join(broadcast(dup), Seq("doc_id"), "left_anti")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),

@@ -1,10 +1,18 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
+
+import graft.ops.Materialize
 
 /** Structured Streaming surface (SURVEY.md §2.9): the Spark-native
   * replacement for the reference's S3→SQS→Lambda event path.
@@ -102,67 +110,21 @@ object Streams {
       }
   }
 
-  /** [[UserStat]] running totals as a Spark 4 `StatefulProcessor` —
-    * the `transformWithState` successor to [[runningUserTotals]]'s
-    * `mapGroupsWithState`: state lives in NAMED typed variables on the
-    * processor handle (here one `ValueState[(count, sum)]` per user)
-    * instead of a single opaque blob, composes with timers/TTL, and
-    * requires the RocksDB state store provider (the disk-backed store
-    * that holds 100 TB/day state without executor-heap pressure).
-    */
-  class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Double), UserStat] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var totals: ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Double)]("totals",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaDouble),
-        TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
-                                 timers: TimerValues): Iterator[UserStat] = {
-      var (n, t) = if (totals.exists()) totals.get() else (0L, 0.0)
-      rows.foreach { r => n += 1; t += r._2 }
-      totals.update((n, t))
-      Iterator.single(UserStat(key, n, math.rint(t * 100) / 100))
-    }
-  }
-
-  /** [[runningUserTotals]] via `transformWithState` (see
-    * [[RunningTotalsProcessor]]). Caller must run with
-    * `spark.sql.streaming.stateStore.providerClass` set to the RocksDB
-    * provider — transformWithState refuses the default HDFS-backed
-    * store.
-    */
-  def runningUserTotalsTws(events: DataFrame)
-                          (implicit spark: SparkSession)
-  : org.apache.spark.sql.Dataset[UserStat] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import spark.implicits._
-    events.selectExpr("user_id", "value").as[(Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  /** One session interval in [[closedSessions]] state (epoch millis). */
+  /** One session interval in [[SessionizerProcessor]] state (epoch µs). */
   case class SessState(start: Long, end: Long, n: Long, total: Double)
 
-  /** [[closedSessions]] per-user state: ALL not-yet-closed sessions. */
+  /** [[SessionizerProcessor]] per-user state: ALL not-yet-closed sessions. */
   case class SessBuf(sessions: Seq[SessState])
 
-  /** A completed session emitted by [[closedSessions]]. */
+  /** A completed session emitted by [[closedSessionsTws]]. */
   case class SessionOut(user_id: Long, s_start: java.sql.Timestamp,
                         s_end: java.sql.Timestamp, n_events: Long,
                         session_value: Double)
 
-  /** Gap-based sessionization with COMPLETED-session emission
-    * (`flatMapGroupsWithState` + event-time timeout) — the custom-state
-    * generalization of [[sessionCounts]]: rather than the built-in
-    * session_window aggregate, the operator owns its state machine and
-    * emits each session exactly once.
+  /** Gap sessionization as a Spark 4 `StatefulProcessor`
+    * (`transformWithState`) — the engine-owned alternative to the
+    * built-in `session_window` aggregate's sort-and-merge state
+    * machine (VERDICT r12 #4), emitting each COMPLETED session once.
     *
     * Correctness contract: a session is emitted ONLY once the
     * watermark has passed `end + gap` — the earliest moment no
@@ -170,85 +132,24 @@ object Streams {
     * a later in-batch event opens the next session would be wrong: an
     * above-watermark event in a LATER batch may fall inside the
     * already-emitted session's gap window and should have extended or
-    * bridged it.) Consequently state holds a LIST of undecided
-    * sessions per user; each batch folds valid events in (sorting by
-    * event time, merging any sessions they bridge, extending starts
-    * backward as well as ends forward), then closes every session
-    * whose `end + gap ≤ watermark`. The event-time timeout is set to
-    * the earliest undecided `end + gap` so closure also happens when
-    * the user goes quiet. Events older than the watermark are dropped
-    * explicitly (flatMapGroupsWithState does NOT filter late input
-    * itself, unlike the built-in session window).
+    * bridged it.) So state per user is the list of UNDECIDED sessions
+    * inside one gap horizon — bounded by watermark delay / gap, not
+    * stream length; at 100 TB/day the state store shards by user like
+    * any keyed shuffle. Each batch folds that key's valid events in
+    * (sort, gap-merge, merging any sessions they bridge, extending
+    * starts backward as well as ends forward), emits every session
+    * whose `end + gap ≤ watermark`, and keeps the rest. An event-time
+    * TIMER at the earliest closable millisecond closes sessions when
+    * the user goes quiet — closure CORRECTNESS is the µs-exact
+    * predicate re-evaluated at fire time; the ms-grain timer only
+    * decides when to re-check, so the µs event grain never leaks into
+    * timer math.
     *
-    * State per user = the undecided sessions inside one gap horizon —
-    * bounded by watermark delay / gap, not stream length; at
-    * 100 TB/day the state store shards by user like any keyed shuffle.
-    */
-  def closedSessions(events: DataFrame, gapMinutes: Int = 30,
-                     watermark: String = "10 minutes")
-                    (implicit spark: SparkSession)
-  : org.apache.spark.sql.Dataset[SessionOut] = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import spark.implicits._
-    val gapMs = gapMinutes * 60000L
-    events
-      .withWatermark("ts", watermark)
-      .selectExpr("user_id", "ts", "value")
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessBuf, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (uid, rows, state) =>
-          def out(s: SessState) = SessionOut(uid,
-            new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end),
-            s.n, math.rint(s.total * 100) / 100)
-          val wm = state.getCurrentWatermarkMs()
-          // fold sessions + valid new events (each a 1-event session)
-          // into gap-merged intervals: sort by start, coalesce
-          val fresh = rows.filter(_._2.getTime >= wm)
-            .map { case (_, ts, v) => SessState(ts.getTime, ts.getTime, 1, v) }
-          val pieces = state.getOption.map(_.sessions).getOrElse(Nil) ++ fresh
-          val merged = pieces.sortBy(s => (s.start, s.end))
-            .foldLeft(List.empty[SessState]) { (acc, s) =>
-              acc match {
-                case h :: t if s.start <= h.end + gapMs =>
-                  SessState(h.start, math.max(h.end, s.end),
-                    h.n + s.n, h.total + s.total) :: t
-                case _ => s :: acc
-              }
-            }.reverse
-          val (closed, open) = merged.partition(_.end + gapMs <= wm)
-          if (open.nonEmpty) {
-            state.update(SessBuf(open))
-            state.setTimeoutTimestamp(open.map(_.end + gapMs).min)
-          } else state.remove()
-          closed.iterator.map(out)
-      }
-  }
-
-  /** Gap sessionization as a Spark 4 `StatefulProcessor`
-    * (`transformWithState`) — the engine-owned alternative to the
-    * built-in `session_window` aggregate's sort-and-merge state
-    * machine (VERDICT r12 #4). State per user is the list of
-    * UNDECIDED sessions inside one gap horizon (same invariant as
-    * [[closedSessions]]); each batch folds that key's valid events in
-    * (sort, gap-merge, extend both ways), emits every session whose
-    * `end + gap ≤ watermark` exactly once, and keeps the rest. An
-    * event-time TIMER at the earliest closable millisecond closes
-    * sessions when the user goes quiet — closure CORRECTNESS is the
-    * µs-exact predicate re-evaluated at fire time; the ms-grain timer
-    * only decides when to re-check, so the µs event grain never
-    * leaks into timer math.
-    *
-    * Differences from [[closedSessions]] (flatMapGroupsWithState):
-    * named typed state + timers instead of one opaque blob with a
-    * single timeout; µs-exact interval arithmetic (the fMGWS form
-    * rounds to ms via `Timestamp.getTime`); emitted `s_end` is
-    * `last event + gap` — the `session_window.end` convention — and
-    * `session_value` is the RAW sum (rounding is presentation,
-    * Catalyst `round` at the call site keeps oracle parity).
-    * Requires the RocksDB state store provider, like every
-    * transformWithState operator.
+    * Emitted `s_end` is `last event + gap` — the `session_window.end`
+    * convention — and `session_value` is the RAW sum (rounding is
+    * presentation, Catalyst `round` at the call site keeps oracle
+    * parity). Requires the RocksDB state store provider, like every
+    * transformWithState operator; [[runAvailableNow]] selects it.
     */
   class SessionizerProcessor(gapUs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -318,8 +219,8 @@ object Streams {
         rows: Iterator[(Long, java.sql.Timestamp, Long, Double)],
         timers: TimerValues): Iterator[SessionOut] = {
       val wmUs = timers.getCurrentWatermarkInMs() * 1000L
-      // drop below-watermark input explicitly (same contract note as
-      // [[closedSessions]]: keyed-state operators do not late-filter)
+      // drop below-watermark input explicitly: keyed-state operators
+      // do not late-filter, unlike the built-in session window
       val fresh = rows.collect {
         case (_, _, us, v) if us >= wmUs => SessState(us, us, 1, v)
       }.toList
@@ -332,10 +233,9 @@ object Streams {
         timerLive = false)
   }
 
-  /** [[closedSessions]] semantics via [[SessionizerProcessor]]
-    * (`transformWithState`), emitting in the `session_window` output
-    * convention (`s_end = last event + gap`, closed-only, append).
-    * Caller must run with the RocksDB state store provider.
+  /** Closed-session emission per user via [[SessionizerProcessor]]
+    * (`transformWithState`), in the `session_window` output convention
+    * (`s_end = last event + gap`, closed-only, append).
     */
   def closedSessionsTws(events: DataFrame, gapMinutes: Int = 30,
                         watermark: String = "10 minutes")
@@ -422,7 +322,8 @@ object Streams {
     * and the MG error bound (undercount ≤ N/(k+1)) holds across
     * batches because the fold order is just one serial MG pass per
     * group. NoTimeout: lifetime statistics; a windowed variant would
-    * swap in event-time timeout exactly like [[closedSessions]].
+    * swap in event-time timeout, as [[closedSessionsTws]] closes on
+    * an event-time timer.
     *
     * Emits the group's CURRENT sketch each trigger (Update mode).
     */
@@ -604,32 +505,22 @@ object Streams {
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, id: Long) => recompute(batch, id) }
 
-  /** Drain-everything-then-stop runner (ST1 cron path): AvailableNow +
-    * processAllAvailable, memory sink for inspection.
-    *
-    * `statePartitions` pins `spark.sql.shuffle.partitions` for THIS
-    * stream (restored after): a streaming job must size its state
-    * partition count to key cardinality and state volume explicitly —
-    * the count freezes into the checkpoint at first run (repartitioning
-    * state later means a rebuild), and every stateful operator opens
-    * one state store per partition per micro-batch, so inheriting a
-    * batch-tuned 200 (or 32) multiplies fixed per-batch cost for no
-    * parallelism gain when keys are few. Callers with genuinely large
-    * key spaces pass a larger value.
+  /** State partition width of every drain: `spark.sql.shuffle.partitions`
+    * while its query runs. Every stateful operator opens one state store
+    * per partition per micro-batch, so inheriting a batch-tuned 200 (or
+    * 32) multiplies fixed per-batch cost for no parallelism gain when
+    * keys are few; 4 is what every recorded run used. The count freezes
+    * into the checkpoint at first run, so a deployment with large state
+    * sizes it to key cardinality when the checkpoint is created
+    * (BASELINE §19.3: at sf10 on 32 cores width 4 held q_stream_sessions
+    * to an average parallelism of 2.2, and width 16 cut its wall 42%).
     */
-  /** Ephemeral checkpoint root for drain-then-discard queries: a
-    * RAM-backed tmpfs (`/dev/shm`) when the platform has one, else
-    * `java.io.tmpdir`. An AvailableNow drain into a memory sink has
-    * no recovery story past the process — its checkpoint exists only
-    * to drive the micro-batch commit protocol within the run — so
-    * paying disk fsync latency per offsets/commit/state-delta write
-    * buys nothing and makes the drain's wall track /tmp's IO window
-    * (measured 2.5–9.5 ms per 4 KB fsync, BASELINE.md §13; the
-    * recurring ledger entries on q_stream_* were exactly this). A
-    * DURABLE pipeline keeps its checkpoint on durable storage —
-    * [[runAvailableNowToPath]] still takes the caller's path
-    * verbatim.
-    */
+  private val StateWidth = 4
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDB =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Minimum usable bytes `/dev/shm` must report before a drain
     * checkpoint routes there (ADVICE r10: containers commonly cap shm
     * at 64 MB — a stateful drain whose deltas exceed that must fall
@@ -639,8 +530,14 @@ object Streams {
     */
   private val ShmMinUsableBytes = 256L << 20
 
-  def ephemeralCheckpointDir(prefix: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
+  /** Checkpoint root for a drain: a RAM-backed tmpfs (`/dev/shm`) when
+    * the platform has one, else `java.io.tmpdir`. A drain's checkpoint
+    * exists only to drive the micro-batch commit protocol within the
+    * call, so paying disk fsync latency per offsets/commit/state-delta
+    * write buys nothing and makes the drain's wall track /tmp's IO
+    * window (measured 2.5–9.5 ms per 4 KB fsync, BASELINE.md §13).
+    */
+  private def ephemeralCheckpointDir(): Path = {
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
     val root = sys.props.get("graft.stream.ephemeralDir") match {
       case Some(dir) =>
@@ -650,67 +547,93 @@ object Streams {
         val shm = Paths.get("/dev/shm")
         val shmOk = Files.isDirectory(shm) && Files.isWritable(shm) &&
           (try Files.getFileStore(shm).getUsableSpace >= ShmMinUsableBytes
-           catch { case scala.util.control.NonFatal(_) => false })
+           catch { case NonFatal(_) => false })
         if (shmOk) shm else tmp
     }
-    Files.createTempDirectory(root, prefix)
+    Files.createTempDirectory(root, "graft_ck_")
   }
 
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.util.control.NonFatal
+  private def deleteRecursively(p: Path): Unit =
     try {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
       val s = Files.walk(p)
       try s.sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.deleteIfExists(f))
       finally s.close()
     } catch { case NonFatal(_) => () }
-  }
 
+  /** The one streaming-query runner (ST1 cron path): drain everything
+    * pending with `Trigger.AvailableNow`, then return the drained rows
+    * as a batch frame. It owns the drain's lifecycle:
+    *
+    *  - checkpoint: an ephemeral dir, deleted when the call returns or
+    *    throws;
+    *  - state width: [[StateWidth]];
+    *  - state store: the RocksDB provider when the plan holds a
+    *    `transformWithState` (which refuses the default HDFS-backed
+    *    store), else the session's own, so a provider set in the
+    *    session conf reaches every other drain;
+    *  - session conf: whatever it sets is restored afterwards, on
+    *    failure too;
+    *  - output: `format` "memory" collects the rows into a driver-side
+    *    view named `queryName`, read back at width 1; "parquet" lands
+    *    them (append mode only) in a fresh directory on durable
+    *    storage, the next hop's file source (see [[landing]]) — the
+    *    hop-to-hop shape of a multi-stage pipeline. Either is registered
+    *    with [[graft.ops.Materialize.ownOutput]], so the harness's
+    *    `releaseOwned` drops the view or deletes the directory.
+    *
+    * The memory read-back is `coalesce(1)`: `s.table` plans the
+    * driver-resident rows as a LocalTableScan split across
+    * `spark.sql.leafNodeDefaultParallelism` partitions — at the 32-core
+    * gate that was 32 near-empty tasks whose run time was 5–40× their
+    * CPU (12.2 s run / 2.5 s cpu for q_stream_hourly's 3,385 rows).
+    * One task is the honest width at any scale, because a memory sink
+    * is bounded by driver memory by construction.
+    */
   def runAvailableNow(df: DataFrame, queryName: String,
                       outputMode: String = "append",
-                      statePartitions: Int = 4): Unit = {
+                      format: String = "memory"): DataFrame = {
     val spark = df.sparkSession
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val ck = ephemeralCheckpointDir("graft_ck_")
+    val landingDir = format match {
+      case "memory" =>
+        Materialize.ownOutput(spark)(_.catalog.dropTempView(queryName))
+        None
+      case "parquet" =>
+        val dir = Files.createTempDirectory(s"graft_land_${queryName}_")
+        Materialize.ownOutput(spark)(_ => deleteRecursively(dir))
+        Some(dir.toString)
+      case other =>
+        throw new IllegalArgumentException(s"drain format: $other")
+    }
+    val tws = df.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
+    val conf = Seq("spark.sql.shuffle.partitions" -> StateWidth.toString) ++
+      (if (tws) Seq(ProviderKey -> RocksDB) else Nil)
+    val prior = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val ck = ephemeralCheckpointDir()
     try {
-      val q = df.writeStream
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val w = df.writeStream
         .outputMode(outputMode)
-        .format("memory")
+        .format(format)
         .queryName(queryName)
         .option("checkpointLocation", ck.toString)
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      landingDir.fold(w)(w.option("path", _)).start().awaitTermination()
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", old)
+      prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       deleteRecursively(ck)
     }
+    landingDir.fold(spark.table(queryName).coalesce(1))(
+      spark.read.schema(df.schema).parquet(_))
   }
 
-  /** [[runAvailableNow]] with a DURABLE parquet sink + checkpoint —
-    * the hop-to-hop landing shape of a multi-stage streaming pipeline
-    * (bronze→silver→gold): each hop is an independently-checkpointed
-    * exactly-once query whose output directory is the next hop's file
-    * source. Append mode only (a parquet sink can't upsert).
+  /** The directory a `format = "parquet"` [[runAvailableNow]] landed
+    * in, for the next hop's [[fileSource]].
     */
-  def runAvailableNowToPath(df: DataFrame, path: String,
-                            checkpoint: String,
-                            statePartitions: Int = 4): Unit = {
-    val spark = df.sparkSession
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = df.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
-  }
+  def landing(drained: DataFrame): String =
+    drained.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.rootPaths.head.toString
+    }.getOrElse(throw new IllegalArgumentException(
+      "not a parquet drain's frame"))
 }

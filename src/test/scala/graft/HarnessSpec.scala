@@ -16,6 +16,9 @@ class HarnessSpec extends SparkSpec {
         "SPARK_GRAFT_PARTITIONS", "SPARK_GRAFT_CONF", "SPARK_GRAFT_ONLY"))
       assert(SourceGuard.mainFilesCalling(setting) === Seq("graft/Harness.scala"),
         setting)
+    // and no other SPARK_GRAFT_* name is read anywhere else: a new knob
+    // would escape a per-name check
+    assert(SourceGuard.mainFilesCalling("SPARK_GRAFT_") === Seq("graft/Harness.scala"))
     assert(SourceGuard.mainFilesCalling("PlanAudit").isEmpty)
   }
 

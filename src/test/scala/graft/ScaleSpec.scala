@@ -256,6 +256,8 @@ class ScaleSpec extends SparkSpec {
         }
       case _ => Nil
     }
+    // building the stream queries ran their drains: free their outputs
+    graft.ops.Materialize.releaseOwned(s2)
     assert(violations.isEmpty, violations.mkString("\n\n"))
   }
 
@@ -356,6 +358,8 @@ class ScaleSpec extends SparkSpec {
         }
       case _ => Nil
     }
+    // building the stream queries ran their drains: free their outputs
+    graft.ops.Materialize.releaseOwned(s2)
     assert(violations.isEmpty, violations.mkString("\n\n"))
   }
 

@@ -42,10 +42,10 @@ object SourceGuard {
     out.toString
   }
 
-  /** `src/main/scala`-relative paths, sorted, of the files whose code
-    * (comments stripped) contains `token`. Run from the project root.
+  /** Every `src/main/scala` file as (relative path, code with comments
+    * stripped), sorted by path. Run from the project root.
     */
-  def mainFilesCalling(token: String): Seq[String] = {
+  def mainSources: Seq[(String, String)] = {
     val root = new File("src/main/scala")
     require(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
     def scalaFiles(d: File): Seq[File] =
@@ -53,8 +53,15 @@ object SourceGuard {
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    scalaFiles(root).filter { f =>
-      codeOf(new String(Files.readAllBytes(f.toPath), "UTF-8")).contains(token)
-    }.map(f => root.toPath.relativize(f.toPath).toString).sorted
+    scalaFiles(root).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        codeOf(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+    }.sortBy(_._1)
   }
+
+  /** `src/main/scala`-relative paths, sorted, of the files whose code
+    * (comments stripped) contains `token`.
+    */
+  def mainFilesCalling(token: String): Seq[String] =
+    mainSources.collect { case (f, code) if code.contains(token) => f }
 }

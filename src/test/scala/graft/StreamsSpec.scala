@@ -1,10 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftshim.ListenerBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.io.Tables
+import graft.ops.Materialize
 import graft.stream.Streams
 
 /** Streaming semantics driven synchronously: land the events testdata
@@ -62,14 +67,9 @@ class StreamsSpec extends SparkSpec {
     implicit val s = spark
     val schema = Tables.events(spark, sfDir).schema
     val stream = Streams.fileSource(spark, landingDir, schema)
-    val q = Streams.runningUserTotals(stream)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("user_totals")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // single batch -> one emission per user; compare against batch agg
-    val streamed = spark.table("user_totals").collect()
+    val streamed = Streams.runAvailableNow(Streams.runningUserTotals(stream).toDF(),
+        "user_totals", outputMode = "update").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val batch = Tables.events(spark, sfDir)
       .groupBy(col("user_id"))
@@ -80,37 +80,6 @@ class StreamsSpec extends SparkSpec {
     streamed.foreach { case (u, (n, v)) =>
       assert(n === batch(u)._1, s"user $u count")
       assert(math.abs(v - batch(u)._2) < 0.01, s"user $u total")
-    }
-  }
-
-  test("transformWithState running totals match batch aggregation") {
-    implicit val s = spark
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try {
-      val schema = Tables.events(spark, sfDir).schema
-      val stream = Streams.fileSource(spark, landingDir, schema)
-      val q = Streams.runningUserTotalsTws(stream)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("user_totals_tws")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val streamed = spark.table("user_totals_tws").collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      val batch = Tables.events(spark, sfDir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("v"))
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      assert(streamed === batch)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
     }
   }
 
@@ -431,45 +400,7 @@ class StreamsSpec extends SparkSpec {
     assert(got === Set(5L, 7L, 11L))
   }
 
-  test("flatMapGroupsWithState emits each closed session exactly once") {
-    import spark.implicits._
-    implicit val s = spark
-    def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val dir = Files.createTempDirectory("sessions_landing").toString
-    // three files -> three micro-batches (maxFilesPerTrigger=1, mtime
-    // order). Batch 1: user 1 has two sessions (gap 30m). Sessions
-    // close only when the WATERMARK passes end+gap: user 1's close via
-    // timeout as user 999's batches advance the watermark; 999's 05:00
-    // session closes in the trailing no-data batch; the 10:00 session
-    // stays open (never emitted).
-    Seq((1L, ts("2026-01-01 00:00:00"), 1.0),
-        (1L, ts("2026-01-01 00:10:00"), 2.0),
-        (1L, ts("2026-01-01 01:00:00"), 4.0))
-      .toDF("user_id", "ts", "value")
-      .coalesce(1).write.parquet(s"$dir/f1")
-    Seq((999L, ts("2026-01-01 05:00:00"), 8.0))
-      .toDF("user_id", "ts", "value")
-      .coalesce(1).write.parquet(s"$dir/f2")
-    Seq((999L, ts("2026-01-01 10:00:00"), 16.0))
-      .toDF("user_id", "ts", "value")
-      .coalesce(1).write.parquet(s"$dir/f3")
-    val schema = spark.read.parquet(s"$dir/f1").schema
-    val stream = Streams.fileSource(spark, s"$dir/*", schema,
-      maxFilesPerTrigger = Some(1))
-    Streams.runAvailableNow(Streams.closedSessions(stream).toDF(),
-      "closed_sessions_test")
-    val got = spark.table("closed_sessions_test")
-      .select("user_id", "s_start", "s_end", "n_events", "session_value")
-      .collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getLong(3), r.getDouble(4))).toSet
-    assert(got === Set(
-      (1L, ts("2026-01-01 00:00:00"), ts("2026-01-01 00:10:00"), 2L, 3.0),
-      (1L, ts("2026-01-01 01:00:00"), ts("2026-01-01 01:00:00"), 1L, 4.0),
-      (999L, ts("2026-01-01 05:00:00"), ts("2026-01-01 05:00:00"), 1L, 8.0)))
-  }
-
-  test("closedSessions merges a cross-batch bridging event, never splits") {
+  test("closedSessionsTws merges a cross-batch bridging event, never splits") {
     import spark.implicits._
     implicit val s = spark
     def ts(t: String) = java.sql.Timestamp.valueOf(t)
@@ -487,103 +418,86 @@ class StreamsSpec extends SparkSpec {
     Seq((8L, ts("2026-01-01 09:00:00"), 8.0))
       .toDF("user_id", "ts", "value").coalesce(1).write.parquet(s"$dir/f3")
     val schema = spark.read.parquet(s"$dir/f1").schema
-    Streams.runAvailableNow(
-      Streams.closedSessions(Streams.fileSource(spark, s"$dir/*", schema,
+    val got = Streams.runAvailableNow(
+      Streams.closedSessionsTws(Streams.fileSource(spark, s"$dir/*", schema,
         maxFilesPerTrigger = Some(1))).toDF(),
       "bridge_sessions_test")
-    val got = spark.table("bridge_sessions_test")
       .select("user_id", "s_start", "s_end", "n_events", "session_value")
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         r.getLong(3), r.getDouble(4))).toSet
+    // session_window convention: s_end = last event (02:35) + gap
     assert(got === Set(
-      (7L, ts("2026-01-01 02:00:00"), ts("2026-01-01 02:35:00"), 3L, 7.0)))
+      (7L, ts("2026-01-01 02:00:00"), ts("2026-01-01 03:05:00"), 3L, 7.0)))
   }
 
   test("transformWithState sessionizer: timer closure + session_window convention") {
     import spark.implicits._
     implicit val s = spark
     def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("tws_sessions").toString
-      // same 3-batch scenario as the fMGWS test above: user 1's two
-      // sessions must close via the event-time TIMER (user 1 has no
-      // rows after batch 1 — only user 999's batches advance the
-      // watermark), and the trailing 10:00 session stays open
-      Seq((1L, ts("2026-01-01 00:00:00"), 1.0),
-          (1L, ts("2026-01-01 00:10:00"), 2.0),
-          (1L, ts("2026-01-01 01:00:00"), 4.0))
-        .toDF("user_id", "ts", "value")
-        .coalesce(1).write.parquet(s"$dir/f1")
-      Seq((999L, ts("2026-01-01 05:00:00"), 8.0))
-        .toDF("user_id", "ts", "value")
-        .coalesce(1).write.parquet(s"$dir/f2")
-      Seq((999L, ts("2026-01-01 10:00:00"), 16.0))
-        .toDF("user_id", "ts", "value")
-        .coalesce(1).write.parquet(s"$dir/f3")
-      val schema = spark.read.parquet(s"$dir/f1").schema
-      val stream = Streams.fileSource(spark, s"$dir/*", schema,
-        maxFilesPerTrigger = Some(1))
-      Streams.runAvailableNow(Streams.closedSessionsTws(stream).toDF(),
-        "tws_sessions_test")
-      val got = spark.table("tws_sessions_test")
-        .select("user_id", "s_start", "s_end", "n_events", "session_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-          r.getLong(3), r.getDouble(4))).toSet
-      // session_window output convention: s_end = last event + gap
-      assert(got === Set(
-        (1L, ts("2026-01-01 00:00:00"), ts("2026-01-01 00:40:00"), 2L, 3.0),
-        (1L, ts("2026-01-01 01:00:00"), ts("2026-01-01 01:30:00"), 1L, 4.0),
-        (999L, ts("2026-01-01 05:00:00"), ts("2026-01-01 05:30:00"), 1L,
-          8.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    val dir = Files.createTempDirectory("tws_sessions").toString
+    // three files -> three micro-batches (maxFilesPerTrigger=1, mtime
+    // order). Sessions close only when the WATERMARK passes end+gap:
+    // user 1's two sessions must close via the event-time TIMER (user 1
+    // has no rows after batch 1 — only user 999's batches advance the
+    // watermark); 999's 05:00 session closes in the trailing no-data
+    // batch; the 10:00 session stays open (never emitted)
+    Seq((1L, ts("2026-01-01 00:00:00"), 1.0),
+        (1L, ts("2026-01-01 00:10:00"), 2.0),
+        (1L, ts("2026-01-01 01:00:00"), 4.0))
+      .toDF("user_id", "ts", "value")
+      .coalesce(1).write.parquet(s"$dir/f1")
+    Seq((999L, ts("2026-01-01 05:00:00"), 8.0))
+      .toDF("user_id", "ts", "value")
+      .coalesce(1).write.parquet(s"$dir/f2")
+    Seq((999L, ts("2026-01-01 10:00:00"), 16.0))
+      .toDF("user_id", "ts", "value")
+      .coalesce(1).write.parquet(s"$dir/f3")
+    val schema = spark.read.parquet(s"$dir/f1").schema
+    val stream = Streams.fileSource(spark, s"$dir/*", schema,
+      maxFilesPerTrigger = Some(1))
+    val rows = Streams.runAvailableNow(Streams.closedSessionsTws(stream).toDF(),
+      "tws_sessions_test")
+      .select("user_id", "s_start", "s_end", "n_events", "session_value")
+      .collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getLong(3), r.getDouble(4)))
+    val got = rows.toSet
+    // session_window output convention: s_end = last event + gap
+    assert(got === Set(
+      (1L, ts("2026-01-01 00:00:00"), ts("2026-01-01 00:40:00"), 2L, 3.0),
+      (1L, ts("2026-01-01 01:00:00"), ts("2026-01-01 01:30:00"), 1L, 4.0),
+      (999L, ts("2026-01-01 05:00:00"), ts("2026-01-01 05:30:00"), 1L,
+        8.0)))
+    // exactly once: no closed session is emitted again by a later batch
+    assert(rows.length === got.size)
   }
 
   test("transformWithState sessionizer matches session_window append output") {
     implicit val s = spark
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try {
-      val schema = Tables.events(spark, sfDir).schema
-      Streams.runAvailableNow(
-        Streams.closedSessionsTws(
-          Streams.fileSource(spark, landingDir, schema)).toDF(),
-        "tws_parity_test")
-      val got = spark.table("tws_parity_test")
-        .select(col("user_id"), unix_micros(col("s_start")).as("a"),
-          unix_micros(col("s_end")).as("b"), col("n_events"),
-          round(col("session_value"), 2).as("v"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getDouble(4))).toSet
+    val schema = Tables.events(spark, sfDir).schema
+    val got = Streams.runAvailableNow(
+      Streams.closedSessionsTws(
+        Streams.fileSource(spark, landingDir, schema)).toDF(),
+      "tws_parity_test")
+      .select(col("user_id"), unix_micros(col("s_start")).as("a"),
+        unix_micros(col("s_end")).as("b"), col("n_events"),
+        round(col("session_value"), 2).as("v"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSet
     // the built-in operator, APPEND mode: same closed-only emission
-      Streams.runAvailableNow(
-        Streams.sessionCounts(
-          Streams.fileSource(spark, landingDir, schema)),
-        "sw_append_test")
-      val want = spark.table("sw_append_test")
-        .select(col("user_id"), unix_micros(col("s_start")).as("a"),
-          unix_micros(col("s_end")).as("b"), col("n_events"),
-          col("session_value"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getDouble(4))).toSet
-      assert(got.nonEmpty)
-      assert(got === want)
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
+    val want = Streams.runAvailableNow(
+      Streams.sessionCounts(Streams.fileSource(spark, landingDir, schema)),
+      "sw_append_test")
+      .select(col("user_id"), unix_micros(col("s_start")).as("a"),
+        unix_micros(col("s_end")).as("b"), col("n_events"),
+        col("session_value"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSet
+    assert(got.nonEmpty)
+    assert(got === want)
   }
 
   test("incremental materialized aggregate: converges, idempotent on rerun") {
@@ -675,5 +589,123 @@ class StreamsSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(streamed.nonEmpty)
     assert(streamed === batch)
+  }
+
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** What the drains run by `body` showed a listener: the files under
+    * `ckRoot` when each query started (the start event is delivered on
+    * the starting thread) and the state operators' custom metric names.
+    */
+  private def observe(ckRoot: Option[Path] = None)(body: => Unit)
+  : (Seq[Int], Set[String]) = {
+    val atStart = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val metrics = java.util.concurrent.ConcurrentHashMap.newKeySet[String]
+    val l = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        ckRoot.foreach(r => atStart.add(r.toFile.list().length))
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o =>
+          metrics.addAll(o.customMetrics.keySet))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    try {
+      body
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.streams.removeListener(l)
+    (atStart.asScala.toSeq, metrics.asScala.toSet)
+  }
+
+  test("a drain picks the state store from its plan; others keep the session's") {
+    implicit val s = spark
+    val session = spark.conf.get(providerKey)
+    assert(!session.contains("RocksDB"), "the suite session keeps the default store")
+    val schema = Tables.events(spark, sfDir).schema
+    // no provider conf on the caller's side: transformWithState refuses
+    // the default store, so this drain runs only if the seam picks RocksDB
+    val (_, tws) = observe() {
+      Streams.runAvailableNow(Streams.closedSessionsTws(
+        Streams.fileSource(spark, landingDir, schema)).toDF(), "tws_store_test")
+    }
+    assert(tws.exists(_.startsWith("rocksdb")), tws)
+    val (_, sw) = observe() {
+      Streams.runAvailableNow(Streams.sessionCounts(
+        Streams.fileSource(spark, landingDir, schema)), "sw_store_test")
+    }
+    assert(sw.nonEmpty && !sw.exists(_.startsWith("rocksdb")), sw)
+    assert(spark.conf.get(providerKey) === session)
+  }
+
+  test("a drain restores the session conf and deletes its checkpoint, on failure too") {
+    implicit val s = spark
+    val widthKey = "spark.sql.shuffle.partitions"
+    val ckRoot = Files.createTempDirectory("drain_ck_root")
+    val (priorWidth, priorRoot) =
+      (spark.conf.get(widthKey), sys.props.get("graft.stream.ephemeralDir"))
+    // a session width other than the drains' 4, so restoring shows
+    spark.conf.set(widthKey, "7")
+    sys.props("graft.stream.ephemeralDir") = ckRoot.toString
+    try {
+      val before = Seq(widthKey, providerKey).map(spark.conf.getOption)
+      val schema = Tables.events(spark, sfDir).schema
+      def sessions(events: org.apache.spark.sql.DataFrame) =
+        Streams.closedSessionsTws(events).toDF()
+      val (okStart, _) = observe(Some(ckRoot)) {
+        Streams.runAvailableNow(
+          sessions(Streams.fileSource(spark, landingDir, schema)),
+          "conf_ok_test").count()
+      }
+      assert(Seq(widthKey, providerKey).map(spark.conf.getOption) === before)
+      assert(okStart === Seq(1) && ckRoot.toFile.list().isEmpty)
+      var failure: Throwable = null
+      val (failStart, _) = observe(Some(ckRoot)) {
+        failure = intercept[Exception](Streams.runAvailableNow(
+          sessions(Streams.fileSource(spark, landingDir, schema).withColumn(
+            "value", expr("cast(raise_error('injected drain failure') as double)"))),
+          "conf_fail_test"))
+      }
+      def msgs(t: Throwable): List[String] =
+        if (t == null) Nil else String.valueOf(t.getMessage) :: msgs(t.getCause)
+      assert(msgs(failure).exists(_.contains("injected drain failure")), failure)
+      assert(Seq(widthKey, providerKey).map(spark.conf.getOption) === before)
+      assert(failStart === Seq(1), "the failing drain made its checkpoint")
+      assert(ckRoot.toFile.list().isEmpty, "the failing drain's checkpoint is gone")
+    } finally {
+      spark.conf.set(widthKey, priorWidth)
+      ckRoot.toFile.delete()
+      priorRoot.fold(sys.props.remove("graft.stream.ephemeralDir"))(
+        sys.props.put("graft.stream.ephemeralDir", _))
+    }
+  }
+
+  test("releaseOwned drops a drain's view and landing, not the caller's view") {
+    val schema = Tables.events(spark, sfDir).schema
+    def events() = Streams.fileSource(spark, landingDir, schema).select("event_id")
+    Streams.runAvailableNow(events(), "owned_view_test")
+    val landed = Streams.runAvailableNow(events(), "owned_landing_test",
+      format = "parquet")
+    val landing = Paths.get(
+      new org.apache.hadoop.fs.Path(Streams.landing(landed)).toUri.getPath)
+    assert(landed.count() === Tables.events(spark, sfDir).count())
+    spark.range(3).createOrReplaceTempView("callers_view")
+    try {
+      assert(spark.catalog.tableExists("owned_view_test"))
+      assert(Files.isDirectory(landing))
+      Materialize.releaseOwned(spark)
+      assert(!spark.catalog.tableExists("owned_view_test"))
+      assert(!Files.exists(landing))
+      assert(spark.table("callers_view").count() === 3)
+    } finally spark.catalog.dropTempView("callers_view")
+  }
+
+  test("src/main starts stream queries in one place, which alone picks the state store") {
+    def starts(code: String) = code.split(java.util.regex.Pattern.quote(".start()"), -1).length - 1
+    assert(SourceGuard.mainSources.collect {
+      case (f, code) if starts(code) > 0 => f -> starts(code)
+    } === Seq("graft/stream/Streams.scala" -> 1))
+    assert(SourceGuard.mainFilesCalling("stateStore.providerClass") ===
+      Seq("graft/stream/Streams.scala"))
   }
 }

@@ -21,6 +21,10 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *  - long_us: plain int64 epoch-micros
   *  - long_ns: TIMESTAMP(NANOS) → LONG under `nanosAsLong`
   *             (round-1..3 testdata encoding)
+  *
+  * `tsenc/long_ns_early/events.parquet` is TIMESTAMP(NANOS) too, but
+  * holds 1969–1972 instants, below the 1e17 ns magnitude cutoff; it
+  * is not one of the four same-row encodings.
   */
 class TsEncodingSpec extends SparkSpec {
   private val dir = "src/test/resources/tsenc"
@@ -112,6 +116,21 @@ class TsEncodingSpec extends SparkSpec {
     val heur = Tables.normalizeTs(df, "ts")
       .select(unix_micros(col("ts"))).as[Long].collect().toSeq
     assert(heur != out, "heuristic hole closed? update the scaladoc")
+  }
+
+  test("batch and drained-stream reads of early TIMESTAMP(NANOS) instants agree") {
+    import spark.implicits._
+    // |ns| < 1e17: the magnitude fallback would read these as µs, so
+    // both paths must take the footer hint
+    val d = s"$dir/long_ns_early"
+    val want = Seq(-1L, 1L, 97445123456L, 45835200000001L, 94694399999999L)
+    val batch = Tables.events(spark, d).select(unix_micros(col("ts")))
+      .as[Long].collect().toSeq.sorted
+    val drained = graft.stream.Streams.runAvailableNow(
+      Tables.stream(spark, d, "events").select("ts"), "ts_early_test")
+      .select(unix_micros(col("ts"))).as[Long].collect().toSeq.sorted
+    assert(batch === want)
+    assert(drained === batch)
   }
 
   test("NTZ normalizes identically whether inference is on or off") {
