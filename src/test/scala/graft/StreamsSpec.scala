@@ -473,6 +473,37 @@ class StreamsSpec extends SparkSpec {
     assert(rows.length === got.size)
   }
 
+  test("closedSessionsTws emits each closed session exactly once") {
+    import spark.implicits._
+    implicit val s = spark
+    def ts(t: String) = java.sql.Timestamp.valueOf(t)
+    val dir = Files.createTempDirectory("sessions_once").toString
+    // one user, one event per micro-batch, each past the last session's
+    // gap: every batch after the first brings new rows for a key whose
+    // earlier session has already closed, so an operator that kept (or
+    // re-derived) a closed session would emit it again. The 00:00
+    // session closes once the watermark reaches 01:50, the 02:00 one in
+    // the trailing no-data batch (watermark 03:50); 04:00 stays open.
+    Seq((1L, ts("2026-01-01 00:00:00"), 1.0))
+      .toDF("user_id", "ts", "value").coalesce(1).write.parquet(s"$dir/f1")
+    Seq((1L, ts("2026-01-01 02:00:00"), 2.0))
+      .toDF("user_id", "ts", "value").coalesce(1).write.parquet(s"$dir/f2")
+    Seq((1L, ts("2026-01-01 04:00:00"), 4.0))
+      .toDF("user_id", "ts", "value").coalesce(1).write.parquet(s"$dir/f3")
+    val schema = spark.read.parquet(s"$dir/f1").schema
+    val rows = Streams.runAvailableNow(
+      Streams.closedSessionsTws(Streams.fileSource(spark, s"$dir/*", schema,
+        maxFilesPerTrigger = Some(1))).toDF(),
+      "once_sessions_test")
+      .select("user_id", "s_start", "s_end", "n_events", "session_value")
+      .collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        r.getLong(3), r.getDouble(4)))
+    assert(rows.sortBy(_._2.getTime).toSeq === Seq(
+      (1L, ts("2026-01-01 00:00:00"), ts("2026-01-01 00:30:00"), 1L, 1.0),
+      (1L, ts("2026-01-01 02:00:00"), ts("2026-01-01 02:30:00"), 1L, 2.0)))
+  }
+
   test("transformWithState sessionizer matches session_window append output") {
     implicit val s = spark
     val schema = Tables.events(spark, sfDir).schema
