@@ -268,7 +268,7 @@ object Bench {
     // corrupt warm-up file must degrade to a cold first query, never
     // abort the bench before a single timed query ran.
     try {
-      spark.read.parquet(s"${st.sfDir}/nation.parquet")
+      graft.io.Tables.nation(spark, st.sfDir)
         .groupBy("n_regionkey").count().count()
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warm-up skipped: $e") }

@@ -30,8 +30,12 @@ object Harness {
                             conf: Seq[(String, String)],
                             only: Option[Set[String]], iters: Int)
 
-  lazy val settings: Settings = {
-    val env = sys.env
+  lazy val settings: Settings = settingsFrom(sys.env)
+
+  /** The run settings from `env`. A malformed value fails loud rather
+    * than run something other than asked and exit 0.
+    */
+  def settingsFrom(env: Map[String, String]): Settings = {
     val cpus = env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
     Settings(
       sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
@@ -44,8 +48,11 @@ object Harness {
           require(kv.contains('='), s"SPARK_GRAFT_CONF entry is not k=v: $kv")
           val Array(k, v) = kv.split("=", 2); k -> v
         },
-      only = env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet),
+      only = env.get("SPARK_GRAFT_ONLY").map { v =>
+        val names = v.split(',').map(_.trim).filter(_.nonEmpty).toSet
+        require(names.nonEmpty, s"SPARK_GRAFT_ONLY names no query: '$v'")
+        names
+      },
       iters = env.get("SPARK_GRAFT_ITERS").fold(3)(_.toInt.max(1)))
   }
 

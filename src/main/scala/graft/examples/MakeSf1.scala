@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.io.Tables
 
 /** Synthesize an sfN-shaped dataset (N× sf0.1) for the decade bench
   * legs: every table replicated with DISJOINT key ranges — and, for
@@ -54,16 +55,16 @@ object MakeSf1 {
       val all = Seq("customer", "supplier", "part", "orders", "lineitem",
         "events", "documents", "embeddings")
       val stale = all.filterNot(sel)
-        .filter(t => new java.io.File(s"$out/$t.parquet").exists())
+        .filter(t => new java.io.File(Tables.path(out, t)).exists())
       if (stale.nonEmpty)
         println(s"[make-sf] WARNING: out dir already holds non-selected " +
           s"tables ${stale.mkString(", ")} from a prior build — they are " +
           s"LEFT AS-IS and may be at a different scale than this x$reps run")
     }
 
-    def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def load(t: String) = Tables.table(spark, src, t)
     def save(df: DataFrame, t: String) =
-      df.write.mode("overwrite").parquet(s"$out/$t.parquet")
+      df.write.mode("overwrite").parquet(Tables.path(out, t))
     def repl(t: String)(shift: (DataFrame, Int) => DataFrame): Unit =
       if (only.forall(_.contains(t))) {
         val base = load(t)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Harness
+import graft.io.Tables
 import graft.ops.{Materialize, Ops}
 
 /** Empirical scaling probe: replicate the sf0.1 lineitem N× with
@@ -25,7 +26,7 @@ object ScaleProbe {
     val cpus = Harness.settings.cpus
     val spark = Harness.session()
 
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.table(spark, sfDir, "lineitem")
     val maxKey = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1
 
     def replicated(k: Int): DataFrame =
@@ -66,8 +67,8 @@ object ScaleProbe {
     }
 
     // training-op hot paths: replicate docs/embeddings with shifted ids
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = Tables.table(spark, sfDir, "documents")
+    val emb = Tables.table(spark, sfDir, "embeddings")
     def docsX(k: Int): DataFrame =
       (0 until k).map(i => docs.withColumn("doc_id",
         col("doc_id") + lit(i * 100000L))).reduce(_ unionByName _)
@@ -175,7 +176,7 @@ object ScaleProbe {
       val k = n
       println(s"=== bucketed join amortization: lineitem x$k ===")
       val fact = replicated(k).select("l_orderkey", "l_quantity")
-      val or = spark.read.parquet(s"$sfDir/orders.parquet")
+      val or = Tables.table(spark, sfDir, "orders")
       val dim = (0 until k).map { i =>
         or.withColumn("o_orderkey", col("o_orderkey") + lit(i * maxKey))
       }.reduce(_ unionByName _)
@@ -275,14 +276,13 @@ object ScaleProbe {
     // claimed linear task scale-out, with no query change.
     {
       import graft.SparkEntry
-      val multiPath = java.nio.file.Files
-        .createTempDirectory("graft_multifile")
-      val multiDir = multiPath.toString
+      val multiDir = java.nio.file.Files.createTempDirectory("graft_multifile")
+        .toString
       try {
         for (t <- Seq("region", "nation", "customer", "supplier", "part",
             "orders", "lineitem", "events", "documents", "embeddings")) {
-          spark.read.parquet(s"$sfDir/$t.parquet").repartition(cpus)
-            .write.mode("overwrite").parquet(s"$multiDir/$t.parquet")
+          Tables.table(spark, sfDir, t).repartition(cpus)
+            .write.mode("overwrite").parquet(Tables.path(multiDir, t))
         }
         def noopTime(q: String, dir: String): Double = {
           val t0 = System.nanoTime()
@@ -293,7 +293,7 @@ object ScaleProbe {
           val frame =
             if (q == "q_emb_neardup_full")
               graft.sim.Similarity.nearDupPairs(
-                graft.io.Tables.embeddings(spark, dir), threshold = 0.5)
+                Tables.embeddings(spark, dir), threshold = 0.5)
             else SparkEntry.queries(q)(spark, dir)
           frame.write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
@@ -309,10 +309,7 @@ object ScaleProbe {
       } finally {
         // the probe copy is a full dataset duplicate — don't leave it
         // accumulating in /tmp across runs
-        import java.nio.file.{Files => F}
-        import scala.jdk.CollectionConverters._
-        F.walk(multiPath).iterator().asScala.toSeq.reverse
-          .foreach(p => F.deleteIfExists(p))
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(multiDir))
       }
     }
 
@@ -322,7 +319,7 @@ object ScaleProbe {
     // DISJOINT user ranges (keys grow 16x) and show the window input
     // stays ~flat — the boundedness claim, measured.
     {
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = Tables.table(spark, sfDir, "events")
       def eventsX(k: Int): DataFrame =
         (0 until k).map(i => ev.withColumn("user_id",
           col("user_id") + lit(i * 10000000L))).reduce(_ unionByName _)

@@ -63,23 +63,6 @@ object Bucketing {
     db
   }
 
-  /** Content tag for a bucketed layout keyed to its SOURCE DATA: an
-    * 8-hex MD5 over the source files' (name, length, mod_time)
-    * listing, not just the path — regenerated data at the same path
-    * gets a fresh tag, so a long-lived session can never serve a stale
-    * snapshot's layout. Shared by the bucketed-join and persisted
-    * item-sim layouts.
-    */
-  def snapshotTag(spark: SparkSession, paths: Seq[String]): String = {
-    val listing = paths
-      .flatMap(p => Catalog.listRaw(p, spark.sparkContext.hadoopConfiguration))
-      .map { case (n, _, len, mod) => s"$n:$len:$mod" }.sorted
-      .mkString(paths.mkString(","), "|", "")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
-  }
-
   /** Write `df` as a managed parquet table bucketed AND sorted by `key`.
     *
     * The pre-write `repartition(numBuckets, key)` aligns task partitioning
@@ -98,6 +81,19 @@ object Bucketing {
       .saveAsTable(table)
   }
 
+  /** One flag-scoped child session per parent, with the key set the
+    * last conf replication copied (a key UNSET on the parent since then
+    * is unset on the child too, not left frozen at its stale value).
+    * Cached: a FRESH child per call would re-derive every session-keyed
+    * planning cache (table metadata, file indexes) on each invocation —
+    * measured ~1.5 s steady-state executor cost vs ~0.25 s once warm.
+    * Weak keys: a retired parent must not pin its child. Conf
+    * replication happens per CALL (cheap, driver-side) so later runtime
+    * changes on the parent still carry over.
+    */
+  private val sortedScanSessions =
+    new java.util.WeakHashMap[SparkSession, (SparkSession, Set[String])]()
+
   /** Inner equi-join of two same-key, same-bucket-count tables. With both
     * sides bucketed this plans as SortMergeJoin with zero Exchange and zero
     * Sort — assert via [[isShuffleFree]] in tests.
@@ -107,12 +103,9 @@ object Bucketing {
     * does not hold across files — an INCORRECT-RESULTS hazard), so the
     * sorted-scan conf is opted in only for THIS join's planning — safe
     * because [[writeBucketed]] repartitions by the bucket key
-    * pre-write, guaranteeing exactly one file per bucket. The conf is
-    * restored immediately after the plan is forced: leaking it
-    * session-wide would extend the one-file-per-bucket assumption to
-    * every other bucketed table in the session, which is exactly the
-    * SPARK-28173 wrong-results condition. Without the conf the join is
-    * still exchange-free; it merely re-sorts each bucket in memory.
+    * pre-write, guaranteeing exactly one file per bucket. Without the
+    * conf the join is still exchange-free; it merely re-sorts each
+    * bucket in memory.
     *
     * CONCURRENCY (r7, ADVICE fix): the conf is set on a DEDICATED
     * child session (`spark.newSession()` — same SparkContext and
@@ -128,21 +121,6 @@ object Bucketing {
     * session is this DataFrame. Requires catalog (not temp-view)
     * table names, which is what [[writeBucketed]] produces.
     */
-  /** One flag-scoped child session per parent, cached: a FRESH child
-    * per call would re-derive every session-keyed planning cache
-    * (table metadata, file indexes) on each invocation — measured
-    * ~1.5 s steady-state executor cost vs ~0.25 s once warm. Weak
-    * keys: a retired parent must not pin its child. Conf replication
-    * happens per CALL (cheap, driver-side) so later runtime changes on
-    * the parent still carry over.
-    */
-  /** child session + the key set the last replication copied (so a key
-    * UNSET on the parent since then is unset on the child too, not
-    * left frozen at its stale value).
-    */
-  private val sortedScanSessions =
-    new java.util.WeakHashMap[SparkSession, (SparkSession, Set[String])]()
-
   def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
                    key: String): DataFrame = {
     val confKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"

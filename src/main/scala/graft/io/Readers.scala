@@ -73,23 +73,19 @@ object Readers {
     * because the payload is one pretty-printed document, not JSONL.
     */
   def readJsonEnvelope(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("multiLine", "true")
-      .json(path)
-      .select(explode(col("data")).as("r"))
-      .select("r.*")
+    unwrapEnvelope(spark.read.option("multiLine", "true").json(path))
 
   /** Same envelope unwrap over an in-memory payload string (the REST-API
     * source S5: fetch happens driver-side, parse happens in-plan).
     */
   def jsonEnvelopeFromString(spark: SparkSession, payload: String): DataFrame = {
     import spark.implicits._
-    spark.read
-      .option("multiLine", "true")
-      .json(Seq(payload).toDS())
-      .select(explode(col("data")).as("r"))
-      .select("r.*")
+    unwrapEnvelope(spark.read.option("multiLine", "true")
+      .json(Seq(payload).toDS()))
   }
+
+  private def unwrapEnvelope(doc: DataFrame): DataFrame =
+    doc.select(explode(col("data")).as("r")).select("r.*")
 
   /** Line-delimited JSON with RECORD-level null-on-error: PERMISSIVE
     * mode parks unparseable lines in `_corrupt_record` (schema fields

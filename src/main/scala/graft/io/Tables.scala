@@ -1,10 +1,13 @@
 package graft.io
 
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-generated TPC-H-ish testdata tables.
+/** The table catalog: the one module that knows where a driver-generated
+  * TPC-H-ish testdata table lives ([[path]]), which snapshot of it is
+  * there ([[snapshotTag]]) and what its schema is ([[table]]).
   *
   * One parquet file per table under `sfDir` (see TESTDATA.md). All query
   * entry points take `sfDir` so the same plan runs at any scale factor —
@@ -12,8 +15,51 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * into, so nothing here should materialize or cache eagerly.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** Digest of every file's (path, length, mtime) under `paths`, listed
+    * recursively through each scheme's Hadoop FS, so data regenerated at
+    * the same path gets a new tag. A path that lists no file gets a
+    * unique tag, never reused. Identifier-safe: layouts name tables by it.
+    */
+  def snapshotTag(s: SparkSession, paths: String*): String = {
+    val listings = paths.map(Catalog.listRaw(_, s.sparkContext.hadoopConfiguration))
+    if (listings.exists(_.isEmpty))
+      "u" + java.util.UUID.randomUUID().toString.replace("-", "")
+    else java.security.MessageDigest.getInstance("MD5")
+      .digest(listings.flatten.map { case (_, p, len, mod) => s"$p:$len:$mod" }
+        .sorted.mkString("|").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** Table `name` read with its resolved schema: fresh attribute ids on
+    * every call, and no inference job after a snapshot's first read.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
+    spark.read.schema(resolve(spark, p)._1).parquet(p)
+  }
+
+  /** A table's schema and, for a `ts` column that surfaced as LONG, the
+    * footers' ns verdict ([[parquetTsNanos]]): resolved once per
+    * (session, path, [[snapshotTag]], the session's parquet read
+    * settings, which change what inference yields) in
+    * [[graft.ops.Materialize]]'s session registry. Metadata only: the
+    * first read in a session still pays the inference job.
+    */
+  private def resolve(s: SparkSession, p: String): (StructType, Option[Boolean]) = {
+    val readConf = s.conf.getAll.toSeq.collect { case (k, v)
+      if k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v" }.sorted
+    graft.ops.Materialize.sessionMemo[(StructType, Option[Boolean])](
+        s, readConf.mkString("schema ", ";", ""), p) {
+      val schema = s.read.parquet(p).schema
+      (schema, schema.find(_.name == "ts").map(_.dataType) match {
+        case Some(LongType) if parquetTsNanos(s, p, "ts") => Some(true)
+        case _ => None
+      })
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -71,9 +117,9 @@ object Tables {
       case _ => df
     }
 
-  /** True when parquet column `c` at `path` (a file, or a directory —
-    * EVERY data file's footer is probed) is annotated
-    * TIMESTAMP(NANOS). This is the authoritative per-column
+  /** True when parquet column `c` at `path` (a file, or a directory
+    * listed recursively — EVERY data file's footer is probed) is
+    * annotated TIMESTAMP(NANOS). This is the authoritative per-column
     * discriminator for LONG-surfaced ts columns under `nanosAsLong`:
     * a plain int64 epoch column carries no timestamp annotation and
     * falls back to [[normalizeTs]]'s magnitude heuristic.
@@ -96,36 +142,27 @@ object Tables {
     * DISAGREEMENT throws.
     */
   def parquetTsNanos(s: SparkSession, path: String, c: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     val votes: Seq[(String, Boolean)] =
       try {
         val conf = s.sessionState.newHadoopConf()
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf)
-        val files =
-          if (fs.getFileStatus(p).isFile) Seq(p)
-          else fs.listStatus(p).toSeq.map(_.getPath)
-            .filter(q => q.getName.endsWith(".parquet") &&
-              !q.getName.startsWith("_") && !q.getName.startsWith("."))
-            .sortBy(_.getName.toString)
+        val files = Catalog.listRaw(path, conf).collect { case (n, f, _, _)
+          if n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") =>
+            n -> new org.apache.hadoop.fs.Path(f) }.sortBy(_._1)
         // per-FILE catch: one unreadable footer must abstain, not
         // discard the other files' votes — otherwise a single corrupt
         // part silently bypasses both a confirmed NANOS verdict and
         // the mixed-encoding loud failure this probe exists to raise.
-        files.flatMap { f =>
+        files.flatMap { case (n, f) =>
           try {
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
             try {
               val schema = r.getFooter.getFileMetaData.getSchema
               if (!schema.containsField(c)) None // abstain: no column
-              else Some(f.getName -> (schema.getType(Seq(c): _*)
-                .getLogicalTypeAnnotation match {
-                  case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                    t.getUnit ==
-                      org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS
-                  case _ => false
-                }))
+              else Some(n -> (schema.getType(Seq(c): _*).getLogicalTypeAnnotation match {
+                case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+                case _ => false
+              }))
             } finally r.close()
           } catch { case scala.util.control.NonFatal(_) => None }
         }
@@ -171,22 +208,18 @@ object Tables {
   private def read(s: SparkSession, d: String, name: String,
                    streaming: Boolean): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$d/$name.parquet"
-    val batch = s.read.parquet(path)
+    val p = path(d, name)
+    val (schema, tsNanos) = resolve(s, p)
     val df =
-      if (!streaming) batch
-      else if (new java.io.File(path).isFile)
-        s.readStream.schema(batch.schema)
+      if (!streaming) s.read.schema(schema).parquet(p)
+      else if (new java.io.File(p).isFile)
+        s.readStream.schema(schema)
           .option("pathGlobFilter", s"$name.parquet").parquet(d)
-      else s.readStream.schema(batch.schema).parquet(path)
+      else s.readStream.schema(schema).parquet(p)
     // per-COLUMN ns/µs discrimination from the footer annotation when
     // the column surfaced as LONG; plain-int64 files keep the per-row
     // magnitude fallback inside normalizeTs
-    val hint = df.schema.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) if parquetTsNanos(s, path, "ts") => Some(true)
-      case _ => None
-    }
-    normalizeTs(df, "ts", hint)
+    normalizeTs(df, "ts", tsNanos)
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

@@ -219,51 +219,47 @@ private[graft] object Materialize {
     frees.foreach(_(spark))
   }
 
-  /** A session-cache entry: `frame` built from `source` at content `tag`. */
+  /** A session-registry entry: `value` derived from `source` at its
+    * [[graft.io.Tables.snapshotTag]] `tag`.
+    */
   final case class Entry(name: String, source: String, tag: String,
-                         frame: DataFrame)
+                         value: Any)
 
   private val cache =
     new java.util.HashMap[(SparkSession, String, String), Entry]
 
-  /** Every file's relative path, length and mtime, RECURSIVELY (ADVICE
-    * r10: a parquet dir can nest partition subdirs). A non-local path
-    * (hdfs://, s3a://, …) gets a unique tag: caching is DISABLED rather
-    * than risk serving stale state for a regenerated input.
+  /** Cross-query state: `build` ONCE per (session, name, source) and
+    * reused while `source`'s snapshot tag is unchanged; a tag change
+    * hands the superseded value to `drop` and rebuilds. Entries of
+    * stopped sessions are evicted (ADVICE r10): their blocks died with
+    * the executors, but the map would keep values and sessions
+    * reachable for the life of the JVM.
     */
-  private def contentTag(source: String): String = {
-    def walk(x: java.io.File, prefix: String): Seq[String] =
-      if (x.isFile) Seq(s"$prefix${x.getName}:${x.length}:${x.lastModified}")
-      else Option(x.listFiles()).getOrElse(Array.empty[java.io.File])
-        .sortBy(_.getName).toSeq
-        .flatMap(c => walk(c, s"$prefix${x.getName}/"))
-    val entries = walk(new java.io.File(source), "")
-    if (entries.isEmpty) s"uncacheable:${java.util.UUID.randomUUID()}"
-    else entries.mkString("|")
-  }
+  def sessionMemo[T](s: SparkSession, name: String, source: String,
+                     drop: T => Unit = (_: T) => ())(build: => T): T =
+    cache.synchronized {
+      cache.keySet.removeIf(_._1.sparkContext.isStopped)
+      val key = (s, name, source)
+      val tag = graft.io.Tables.snapshotTag(s, source)
+      val cur = Option(cache.get(key))
+      cur.filter(_.tag == tag).map(_.value.asInstanceOf[T]).getOrElse {
+        cur.foreach { e => cache.remove(key); drop(e.value.asInstanceOf[T]) }
+        val value = build
+        cache.put(key, Entry(name, source, tag, value))
+        value
+      }
+    }
 
-  /** Cross-query state: relation `name` derived from `source`, built
-    * ONCE per (session, name, source) and reused while `source`'s
-    * content tag is unchanged. `build` must return a bare checkpoint
-    * frame; it is [[pin]]ned. A tag change [[release]]s the superseded
-    * entry and rebuilds. Entries of stopped sessions are evicted
-    * (ADVICE r10): their blocks died with the executors, but the map
-    * would keep frames and sessions reachable for the life of the JVM.
+  /** A [[sessionMemo]] relation: `build` must return a bare checkpoint
+    * frame; it is [[pin]]ned, and [[release]]d once superseded.
     */
   def sessionCached(s: SparkSession, name: String, source: String)
-                   (build: => DataFrame): DataFrame = cache.synchronized {
-    cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, name, source)
-    val tag = contentTag(source)
-    val cur = Option(cache.get(key))
-    cur.filter(_.tag == tag).map(_.frame).getOrElse {
-      cur.foreach(e => release(e.frame))
+                   (build: => DataFrame): DataFrame =
+    sessionMemo[DataFrame](s, name, source, release(_)) {
       val frame = build
       pin(frame)
-      cache.put(key, Entry(name, source, tag, frame))
       frame
     }
-  }
 
   /** What cross-query state `s` holds, and what it was built from. */
   def sessionEntries(s: SparkSession): Seq[Entry] = cache.synchronized {

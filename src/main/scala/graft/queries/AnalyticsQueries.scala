@@ -861,8 +861,7 @@ object AnalyticsQueries {
     // layout identity alongside the source snapshot (width itself
     // scales with the source — [[pairWidth]] — so a re-scaled corpus
     // re-lays the index, exactly like a changed snapshot)
-    val tag = graft.io.Bucketing.snapshotTag(
-      s, Seq(s"$d/lineitem.parquet")) + s"_$w"
+    val tag = Tables.snapshotTag(s, Tables.path(d, "lineitem")) + s"_$w"
     val tbl = s"$db.item_counts_$tag"
     if (!s.catalog.tableExists(tbl))
       graft.io.Bucketing.writeBucketed(partOrderCounts(s, d), tbl, "pk",

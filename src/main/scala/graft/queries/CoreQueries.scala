@@ -423,12 +423,12 @@ object CoreQueries {
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     val db = graft.io.Bucketing.graftDatabase(s)
     // The layout is a WRITE-side artifact keyed to its source DATA
-    // ([[graft.io.Bucketing.snapshotTag]]): lay out once per source
+    // ([[graft.io.Tables.snapshotTag]]): lay out once per source
     // snapshot, then every query — including bench re-iterations —
     // pays only the recurring exchange-free join, which is exactly the
     // amortization bucketing exists to buy.
-    val tag = graft.io.Bucketing.snapshotTag(
-      s, Seq(s"$d/orders.parquet", s"$d/customer.parquet"))
+    val tag = Tables.snapshotTag(
+      s, Tables.path(d, "orders"), Tables.path(d, "customer"))
     val (ot, ct) = (s"$db.orders_bkt_$tag", s"$db.customer_bkt_$tag")
     if (!s.catalog.tableExists(ot))
       graft.io.Bucketing.writeBucketed(

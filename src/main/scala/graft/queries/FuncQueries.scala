@@ -823,7 +823,7 @@ object FuncQueries {
     * opened (see [[graft.io.StatsIndex]] for the 100 TB rationale).
     */
   def statsPrune(s: SparkSession, d: String): DataFrame = {
-    val dir = s"$d/orders.parquet"
+    val dir = Tables.path(d, "orders")
     val stats = graft.io.StatsIndex.build(s, dir, Seq("o_totalprice"))
     graft.io.StatsIndex.prunedRead(s, dir, stats, "o_totalprice",
         lit(100000.0), lit(150000.0))

@@ -141,7 +141,7 @@ object TrainingQueries {
     * incremental plan loses nothing.
     *
     * The old-corpus signature index is SESSION-CACHED
-    * ([[graft.ops.Materialize.sessionCached]], content-tagged and
+    * ([[graft.ops.Materialize.sessionCached]], snapshot-tagged and
     * pinned, like [[ngramClusterComponents]]): in production that index
     * is parquet persisted between daily runs — its build is not part of
     * any run's cost — so the first plan in a session pays the build and
@@ -171,11 +171,11 @@ object TrainingQueries {
     * [[dedupMinhashIncr]] — the in-memory stand-in for the parquet
     * band/signature index a production pipeline persists between
     * incremental runs ([[graft.io.Bucketing]] is the disk layout).
-    * Content-tagged by [[graft.ops.Materialize.sessionCached]] so a
+    * Snapshot-tagged by [[graft.ops.Materialize.sessionCached]] so a
     * regenerated corpus can never serve stale signatures.
     */
   private def minhashOldIndex(s: SparkSession, d: String): DataFrame =
-    Materialize.sessionCached(s, "minhash-index", s"$d/documents.parquet") {
+    Materialize.sessionCached(s, "minhash-index", Tables.path(d, "documents")) {
       Materialize.checkpoint(Dedup.minhashSignatures(Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) < 4)))
     }
@@ -1827,7 +1827,7 @@ object TrainingQueries {
     * closure output is a checkpoint, its blocks pinned in executor
     * storage — and let every consumer scan those blocks instead of
     * running a second closure. [[graft.ops.Materialize.sessionCached]]
-    * keys the entry by the documents file's content tag, so a
+    * keys the entry by the documents file's snapshot tag, so a
     * regenerated corpus at the same path can never serve stale
     * clusters; the superseded relation is released on refresh, and the
     * harness's between-query sweep leaves the pinned one alone. At
@@ -1836,7 +1836,7 @@ object TrainingQueries {
     * of that layout.
     */
   def ngramClusterComponents(s: SparkSession, d: String): DataFrame =
-    Materialize.sessionCached(s, "ngram-clusters", s"$d/documents.parquet") {
+    Materialize.sessionCached(s, "ngram-clusters", Tables.path(d, "documents")) {
       // CC.run returns a localCheckpoint-backed frame: the closure is
       // computed here, once. The cache holds that BARE checkpoint leaf
       // (pin and release resolve a LogicalRDD root, not a Project over

@@ -65,16 +65,20 @@ object IncrementalView {
     */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
                  keyCol: String, valueCol: String, aggCol: String): Boolean = {
-    val applied = latest(dir).map(_._2)
-    if (applied.exists(_ >= batchId)) false
+    val at = latest(dir)
+    if (at.exists(_._2 >= batchId)) false
     else {
       val spark = batch.sparkSession
       val partial = batch.groupBy(col(keyCol))
         .agg(sum(col(valueCol)).as(aggCol))
-      val merged = read(spark, dir, partial.schema)
-        .unionByName(partial)
+      // every snapshot is written with the partial's schema (a decimal
+      // total keeps one `sum` widening, not one per batch), so the
+      // previous one is read with it: no inference job
+      val prev = at.fold(read(spark, dir, partial.schema)) { case (v, _) =>
+        spark.read.schema(partial.schema).parquet(s"$dir/$v") }
+      val merged = prev.unionByName(partial)
         .groupBy(col(keyCol))
-        .agg(sum(col(aggCol)).as(aggCol))
+        .agg(sum(col(aggCol)).cast(partial.schema(aggCol).dataType).as(aggCol))
       val v = s"v$batchId"
       merged.write.mode("overwrite").parquet(s"$dir/$v")
       // pointer swap LAST — readers never see a partial snapshot. The
@@ -101,20 +105,11 @@ object IncrementalView {
     val d = Paths.get(dir)
     if (Files.exists(d)) {
       val keepSet = latest(dir).map(_._1).toSet
-      val named = new scala.collection.mutable.ArrayBuffer[java.nio.file.Path]
-      val listing = Files.list(d)
-      try listing.iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.startsWith("v")) named += p
-      } finally listing.close()
-      named.sortBy(p => p.getFileName.toString.drop(1).toLong)
+      d.toFile.listFiles().toSeq.filter(_.getName.startsWith("v"))
+        .sortBy(_.getName.drop(1).toLong)
         .dropRight(keep)
-        .filterNot(p => keepSet(p.getFileName.toString))
-        .foreach { p =>
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-          finally walk.close()
-        }
+        .filterNot(f => keepSet(f.getName))
+        .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.stream
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import scala.util.control.NonFatal
 
@@ -554,12 +553,7 @@ object Streams {
   }
 
   private def deleteRecursively(p: Path): Unit =
-    try {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    } catch { case NonFatal(_) => () }
+    org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
 
   /** The one streaming-query runner (ST1 cron path): drain everything
     * pending with `Trigger.AvailableNow`, then return the drained rows

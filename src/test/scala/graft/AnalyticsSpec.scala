@@ -528,7 +528,7 @@ class AnalyticsSpec extends SparkSpec {
     // includes it). The pre-fix form counted orders off the null-
     // filtered incidence and silently shrank the population.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nullpk_")
+    val dir = tempDir("graft_nullpk_")
       .toString
     // orders 1 and 2 share parts {100,200}; order 3 is all-null-pk
     Seq((1L, Option(100L)), (1L, Option(200L)),

@@ -22,6 +22,19 @@ class HarnessSpec extends SparkSpec {
     assert(SourceGuard.mainFilesCalling("PlanAudit").isEmpty)
   }
 
+  test("run settings parse from a map; an empty or malformed value fails loud") {
+    val d = Harness.settingsFrom(Map.empty[String, String])
+    assert((d.cpus, d.partitions, d.conf, d.only, d.iters) === ((4, 4, Nil, None, 3)))
+    val s = Harness.settingsFrom(Map("SPARK_GRAFT_CPUS" -> "2",
+      "SPARK_GRAFT_ONLY" -> " q_a, ,q_b", "SPARK_GRAFT_CONF" -> "a=1;b=x=y"))
+    assert(s.partitions === 2)
+    assert(s.only === Some(Set("q_a", "q_b")))
+    assert(s.conf === Seq("a" -> "1", "b" -> "x=y"))
+    for (bad <- Seq("SPARK_GRAFT_ONLY" -> "", "SPARK_GRAFT_ONLY" -> " , ",
+        "SPARK_GRAFT_CONF" -> "novalue"))
+      intercept[IllegalArgumentException](Harness.settingsFrom(Map(bad)))
+  }
+
   test("a failing query is reported, then the next runs after graft's leftovers are freed") {
     val before = persistedIds
     val mine = spark.range(10).toDF("id").persist()
@@ -30,7 +43,7 @@ class HarnessSpec extends SparkSpec {
     var leaked = -1
     var leakedHeld = false
     var seen = Set.empty[Int]
-    val out = java.nio.file.Files.createTempDirectory("graft_verify").toString
+    val out = tempDir("graft_verify").toString
     val leak: Harness.Query = (s, _) => {
       leaked = rddId(Materialize.checkpoint(s.range(5).toDF("id")))
       leakedHeld = persistedIds.contains(leaked)

@@ -14,7 +14,7 @@ class IoSpec extends SparkSpec {
   import spark.implicits._
 
   test("listFiles returns name/path/length; latestKey picks lexicographic max") {
-    val dir = Files.createTempDirectory("catalog")
+    val dir = tempDir("catalog")
     Files.writeString(dir.resolve("population_data_20240101_000000.json"), "{}")
     Files.writeString(dir.resolve("population_data_20240301_000000.json"), "{}")
     Files.writeString(dir.resolve("pr.data.0.Current"), "x\ty")
@@ -26,7 +26,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("withContentHash computes md5 over file bytes") {
-    val dir = Files.createTempDirectory("hashing")
+    val dir = tempDir("hashing")
     Files.writeString(dir.resolve("a.txt"), "abc")
     val row = Catalog.withContentHash(spark, dir.toString).collect()(0)
     assert(row.getAs[String]("hash") === "900150983cd24fb0d6963f7d28e17f72")
@@ -74,8 +74,8 @@ class IoSpec extends SparkSpec {
   }
 
   test("sync round-trip: list + hash both sides -> merge -> delete applied") {
-    val remote = Files.createTempDirectory("remote")
-    val stored = Files.createTempDirectory("stored")
+    val remote = tempDir("remote")
+    val stored = tempDir("stored")
     Files.writeString(remote.resolve("f1"), "new content")
     Files.writeString(remote.resolve("f2"), "same")
     Files.writeString(stored.resolve("f2"), "same")
@@ -96,8 +96,8 @@ class IoSpec extends SparkSpec {
 
   test("SyncJob.run applies insert/update/delete end-to-end and is idempotent") {
     import graft.sync.SyncJob
-    val src = Files.createTempDirectory("sj_src")
-    val dst = Files.createTempDirectory("sj_dst")
+    val src = tempDir("sj_src")
+    val dst = tempDir("sj_dst")
     Files.writeString(src.resolve("f_new"), "fresh")
     Files.writeString(src.resolve("f_changed"), "v2")
     Files.writeString(src.resolve("f_same"), "same")
@@ -118,7 +118,7 @@ class IoSpec extends SparkSpec {
       .collect().map(_.getString(1)).toSet
     assert(plan2 === Set("skip"))
     // first sync into a nonexistent destination: all inserts
-    val empty = Files.createTempDirectory("sj_empty").resolve("sub")
+    val empty = tempDir("sj_empty").resolve("sub")
     val plan3 = SyncJob.run(spark, src.toString, empty.toString)
       .collect().map(_.getString(1)).toSet
     assert(plan3 === Set("insert"))
@@ -127,8 +127,8 @@ class IoSpec extends SparkSpec {
 
   test("SyncJob keys on relative paths: nested files sync correctly") {
     import graft.sync.SyncJob
-    val src = Files.createTempDirectory("sj_nest_src")
-    val dst = Files.createTempDirectory("sj_nest_dst")
+    val src = tempDir("sj_nest_src")
+    val dst = tempDir("sj_nest_dst")
     Files.createDirectories(src.resolve("sub/deeper"))
     Files.writeString(src.resolve("top.txt"), "t")
     Files.writeString(src.resolve("sub/deeper/leaf.txt"), "l")
@@ -207,8 +207,8 @@ class IoSpec extends SparkSpec {
       val port = server.getAddress.getPort
       val url = s"http://127.0.0.1:$port/pub"
       val root = s"http://127.0.0.1:$port/"
-      val dst = Files.createTempDirectory("http_dst").toString
-      val staging = Files.createTempDirectory("http_stage").toString + "/s"
+      val dst = tempDir("http_dst").toString
+      val staging = tempDir("http_stage").toString + "/s"
       val delays = scala.collection.mutable.ArrayBuffer[Long]()
 
       // pass 1 also serves: an ABSOLUTE-path href (reference urljoin
@@ -295,7 +295,7 @@ class IoSpec extends SparkSpec {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.hadoop.fs.Path
-    val dir = Files.createTempDirectory("bloom_pq").toString + "/t"
+    val dir = tempDir("bloom_pq").toString + "/t"
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity")
     Sinks.writeParquetBloom(li, dir, Seq("l_orderkey"), ndv = 10000L)
@@ -340,26 +340,26 @@ class IoSpec extends SparkSpec {
   test("compact refuses partitioned layouts and crash residue") {
     import spark.implicits._
     // hive-style partition dirs must be refused, not flattened
-    val pdir = Files.createTempDirectory("cmp_part").toString + "/t"
+    val pdir = tempDir("cmp_part").toString + "/t"
     Seq((1, "a"), (2, "b")).toDF("v", "k")
       .write.partitionBy("k").parquet(pdir)
     val e = intercept[IllegalArgumentException](Sinks.compact(spark, pdir))
     assert(e.getMessage.contains("partition"))
     // __compact_old without the live dir = a swap died mid-rename:
     // refuse so the human restores, never delete the survivor
-    val gone = Files.createTempDirectory("cmp_crash").toString + "/t"
+    val gone = tempDir("cmp_crash").toString + "/t"
     Seq(1, 2).toDF("v").write.parquet(gone + ".__compact_old")
     val e2 = intercept[IllegalArgumentException](Sinks.compact(spark, gone))
     assert(e2.getMessage.contains("__compact_old"))
     // a missing target is a clear precondition message, not a raw
     // FileNotFoundException out of listStatus
-    val missing = Files.createTempDirectory("cmp_none").toString + "/t"
+    val missing = tempDir("cmp_none").toString + "/t"
     val e3 = intercept[IllegalArgumentException](Sinks.compact(spark, missing))
     assert(e3.getMessage.contains("does not exist"))
   }
 
   test("format round-trips: orc, csv (schema-first), json, text") {
-    val base = Files.createTempDirectory("formats").toString
+    val base = tempDir("formats").toString
     val df = spark.read.parquet(s"$sfDir/nation.parquet")
     val want = df.orderBy("n_nationkey").collect().toSeq
 
@@ -382,7 +382,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("partitioned parquet write enables partition pruning") {
-    val dir = Files.createTempDirectory("part_out").toString
+    val dir = tempDir("part_out").toString
     val df = Seq((1, "en", "a"), (2, "de", "b"), (3, "en", "c"))
       .toDF("id", "lang", "v")
     Sinks.writeParquet(df, dir, partitionBy = Seq("lang"))
@@ -408,9 +408,9 @@ class IoSpec extends SparkSpec {
         .collect().map(_.getLong(1).toDouble)
       spans.sum / spans.length
     }
-    val zDir = Files.createTempDirectory("zorder").toString
+    val zDir = tempDir("zorder").toString
     Clustering.writeZOrdered(df, zDir, "a", "b", numFiles = 16)
-    val aDir = Files.createTempDirectory("asort").toString
+    val aDir = tempDir("asort").toString
     df.repartitionByRange(16, col("a")).sortWithinPartitions("a")
       .write.mode("overwrite").parquet(aDir)
     // single-dim sort: 'a' narrow, 'b' full-range (~100k)
@@ -426,7 +426,7 @@ class IoSpec extends SparkSpec {
 
   test("tolerant jsonl read quarantines corrupt lines, keeps good rows") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("jsonl").toString
+    val dir = tempDir("jsonl").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/in.jsonl"),
       """{"id": 1, "v": "a"}
@@ -447,7 +447,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("compaction collapses a many-file dir, preserves data exactly") {
-    val dir = Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact").toString + "/t"
     val df = spark.range(0, 10000).selectExpr("id", "id * 2 AS v")
     df.repartition(64).write.parquet(dir) // the small-file problem
     def parquetFiles() = new java.io.File(dir).listFiles()
@@ -464,7 +464,7 @@ class IoSpec extends SparkSpec {
 
   test("stats index skips files outside the predicate range") {
     import graft.io.StatsIndex
-    val dir = Files.createTempDirectory("statsidx").toString + "/t"
+    val dir = tempDir("statsidx").toString + "/t"
     // 16 files with mostly-disjoint value ranges (range-partitioned
     // write), so a narrow predicate can only touch a few of them
     val df = (0 until 16000).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
@@ -496,7 +496,7 @@ class IoSpec extends SparkSpec {
 
   test("sharded export: deterministic placement, manifest audits output") {
     import graft.io.ShardWriter
-    val dir = Files.createTempDirectory("shards").toString + "/t"
+    val dir = tempDir("shards").toString + "/t"
     val df = (0 until 1000).map(i => (s"doc$i", i * 2)).toDF("doc_id", "v")
     val m1 = ShardWriter.write(df, dir, 8, "doc_id").collect()
     assert(m1.map(_.getAs[Int]("shard")).toSeq === (0 until 8))
@@ -519,7 +519,7 @@ class IoSpec extends SparkSpec {
     import graft.io.Bucketing
     import spark.implicits._
     val db = "graft_bkt_spec"
-    val loc = Files.createTempDirectory("bkt_wh").toString
+    val loc = tempDir("bkt_wh").toString
     Bucketing.ensureDatabase(spark, db, loc)
     val fact = (1L to 2000L).map(i => (i % 97, i.toDouble)).toDF("k", "v")
     val dim = (0L until 97L).map(i => (i, s"g${i % 5}")).toDF("k", "name")
@@ -556,7 +556,7 @@ class IoSpec extends SparkSpec {
     import graft.io.Bucketing
     import graft.dedup.Dedup
     val db = "graft_mh_idx"
-    val loc = Files.createTempDirectory("mh_idx_wh").toString
+    val loc = tempDir("mh_idx_wh").toString
     Bucketing.ensureDatabase(spark, db, loc)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val old = docs.filter(pmod(col("doc_id"), lit(5L)) < 4)
@@ -627,7 +627,7 @@ class IoSpec extends SparkSpec {
 
   test("timestamped path + json sink + record sink") {
     val out = Sinks.timestampedPath(
-      Files.createTempDirectory("sink").toString, "population_data_", ".json")
+      tempDir("sink").toString, "population_data_", ".json")
     assert(out.matches(".*population_data_\\d{8}_\\d{6}\\.json"))
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     Sinks.writeJson(df, out)

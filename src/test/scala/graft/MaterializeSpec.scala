@@ -17,17 +17,15 @@ class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
   /** A private copy of the documents table, so the test can change its
-    * content tag without touching the shared fixture.
+    * snapshot tag without touching the shared fixture.
     */
   private def withDocsCopy(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-materialize").toFile
+    val dir = tempDir("graft-materialize").toFile
     val dst = new File(dir, "documents.parquet")
-    try {
-      Files.copy(new File(s"$sfDir/documents.parquet").toPath, dst.toPath,
-        StandardCopyOption.COPY_ATTRIBUTES)
-      dst.setWritable(true)
-      body(dir.getPath)
-    } finally { dst.delete(); dir.delete() }
+    Files.copy(new File(s"$sfDir/documents.parquet").toPath, dst.toPath,
+      StandardCopyOption.COPY_ATTRIBUTES)
+    dst.setWritable(true)
+    body(dir.getPath)
   }
 
   test("releaseOwned unpersists leaked graft checkpoints, never foreign storage") {
@@ -90,7 +88,7 @@ class MaterializeSpec extends SparkSpec {
       assert(f.setLastModified(f.lastModified() + 10000L))
       val (rebuilt, rebuildJobs) = jobsDuring(
         TrainingQueries.ngramClusterComponents(spark, dir))
-      assert(rebuildJobs > 0, "a changed content tag served the stale entry")
+      assert(rebuildJobs > 0, "a changed snapshot tag served the stale entry")
       assert(rddId(rebuilt) !== firstId)
       assert(!persistedIds.contains(firstId), "superseded entry not unpersisted")
       assert(persistedIds.contains(rddId(rebuilt)))

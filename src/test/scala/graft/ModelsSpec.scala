@@ -7,7 +7,7 @@ import graft.io.{Models, Readers}
 class ModelsSpec extends SparkSpec {
 
   test("typed BLS dataset: coerced nulls survive the case-class view") {
-    val p = Files.createTempFile("bls", ".tsv")
+    val p = tempFile("bls", ".tsv")
     Files.writeString(p, Seq(
       "series_id        \tyear\tperiod\t       value\tfootnote_codes",
       "PRS30006011      \t1995\tQ01 \t         2.6\t",
@@ -24,7 +24,7 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("typed population dataset resolves fuzzy columns and filters nulls") {
-    val p = Files.createTempFile("pop", ".json")
+    val p = tempFile("pop", ".json")
     Files.writeString(p,
       """{"data": [
         |  {"Nation ID": "01000US", "Nation": "US", "Year": 2013, "Population": 316128839},

@@ -34,30 +34,37 @@ class ReportsSpec extends SparkSpec {
       // non-numeric value -> null via coerce -> dropped by subset dropna
       "BAD0000001       \t1995\tQ01 \t           -\t"
     )
-    val p = Files.createTempFile("bls_fixture", ".tsv")
+    val p = tempFile("bls_fixture", ".tsv")
     Files.writeString(p, rows.mkString("\n"))
     p
   }
 
+  private val popJson =
+    """{"data": [
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2013, "Population": 316128839},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2014, "Population": 318857056},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2015, "Population": 321418821},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2016, "Population": 323127515},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2017, "Population": 325719178},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2018, "Population": 327167439},
+      |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2019, "Population": 328239523}
+      |],
+      | "source": [{"name": "acs_yg_total_population_1"}]}""".stripMargin
+
   private lazy val popPath: Path = {
-    val json =
-      """{"data": [
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2013, "Population": 316128839},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2014, "Population": 318857056},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2015, "Population": 321418821},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2016, "Population": 323127515},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2017, "Population": 325719178},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2018, "Population": 327167439},
-        |  {"Nation ID": "01000US", "Nation": "United States", "Year": 2019, "Population": 328239523}
-        |],
-        | "source": [{"name": "acs_yg_total_population_1"}]}""".stripMargin
-    val p = Files.createTempFile("pop_fixture", ".json")
-    Files.writeString(p, json)
+    val p = tempFile("pop_fixture", ".json")
+    Files.writeString(p, popJson)
     p
   }
 
   private def bls: DataFrame = Readers.readBlsTsv(spark, blsPath.toString)
   private def pop: DataFrame = Readers.readJsonEnvelope(spark, popPath.toString)
+
+  test("JSON envelope: a payload string reads the same rows as its file (S5)") {
+    val fromFile = pop.collect().toSeq
+    assert(fromFile.size === 7)
+    assert(Readers.jsonEnvelopeFromString(spark, popJson).collect().toSeq === fromFile)
+  }
 
   test("population stats: golden mean/stddev over 2013-2018 (cell[11])") {
     val row = Reports.populationStats(pop).collect()(0)

@@ -107,7 +107,7 @@ class ScaleSpec extends SparkSpec {
     // fact partitioned by year on disk; the selective dim filter is only
     // known at runtime -> the scan must carry a dynamicpruning partition
     // filter (subquery/broadcast reuse), not read all partitions
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     spark.read.parquet(s"$sfDir/orders.parquet")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -115,7 +115,7 @@ class ScaleSpec extends SparkSpec {
     // dim must be a real scan with a surviving selective filter — an
     // in-memory LocalRelation gets its filter constant-folded away and
     // DPP's selectivity check sees nothing to prune with
-    val dimDir = Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("graft_dpp_dim").toString
     (1992 to 2005).map(y => (y, if (y == 1995) "hit" else "miss"))
       .toDF("d_year", "tag")
       .write.mode("overwrite").parquet(dimDir)

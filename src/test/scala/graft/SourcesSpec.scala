@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("cat_src").toString
+    val d = tempDir("cat_src").toString
     Seq("a.txt" -> "alpha", "b.txt" -> "beta bytes", "c.json" -> "{}")
       .foreach { case (n, content) =>
         java.nio.file.Files.writeString(java.nio.file.Paths.get(d, n), content)

@@ -8,6 +8,7 @@ import org.apache.spark.graftshim.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test base: one lazy SparkSession per JVM (suites share it —
@@ -19,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must be identical either way (SURVEY §4 portability claim; proven
   * per-round, not assumed).
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The suite's own settings on top of [[GraftSession.settings]]. */
   val suiteConf: Seq[(String, String)] =
     sys.env.get("SPARK_GRAFT_ANSI").toSeq.map("spark.sql.ansi.enabled" -> _)
@@ -27,6 +28,27 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4, 4, suiteConf)
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  private val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temp directory, deleted with everything in it after the
+    * suite.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = made.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made += d
+    d
+  }
+
+  /** A fresh empty file in its own [[tempDir]]. */
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempFile(tempDir(prefix), prefix, suffix)
+
+  override def afterAll(): Unit =
+    try made.synchronized {
+      made.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      made.clear()
+    } finally super.afterAll()
 
   /** Ids of the RDDs the suite's SparkContext holds persisted. */
   def persistedIds: Set[Int] =

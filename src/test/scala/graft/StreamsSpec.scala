@@ -19,7 +19,7 @@ import graft.stream.Streams
 class StreamsSpec extends SparkSpec {
 
   private lazy val landingDir: String = {
-    val dir = Files.createTempDirectory("events_landing").toString
+    val dir = tempDir("events_landing").toString
     // rewrite ns-timestamp testdata as µs parquet (what a landing zone
     // written by this engine would contain)
     Tables.events(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir)
@@ -85,8 +85,8 @@ class StreamsSpec extends SparkSpec {
 
   test("checkpoint gives exactly-once file processing across restarts (ST4)") {
     val schema = Tables.events(spark, sfDir).schema
-    val ckpt = Files.createTempDirectory("ckpt").toString
-    val outDir = Files.createTempDirectory("stream_out").toString
+    val ckpt = tempDir("ckpt").toString
+    val outDir = tempDir("stream_out").toString
     def runOnce(): Unit = {
       val q = Streams.fileSource(spark, landingDir, schema)
         .writeStream
@@ -148,7 +148,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming dedup keeps first arrival per fingerprint") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("docs_landing").toString
+    val dir = tempDir("docs_landing").toString
     // 3 distinct texts, 6 rows: every text sent twice within the horizon
     Seq(
       (0L, "alpha beta", java.sql.Timestamp.valueOf("2026-01-01 00:00:00")),
@@ -173,7 +173,7 @@ class StreamsSpec extends SparkSpec {
   test("heavyHittersStream: MG sketch folds across micro-batches") {
     import spark.implicits._
     implicit val s = spark
-    val dir = Files.createTempDirectory("hh_landing").toString
+    val dir = tempDir("hh_landing").toString
     // two files -> two micro-batches (maxFilesPerTrigger=1); one
     // partition per file so the per-group fold order is the row order
     val batch1 = Seq.fill(6)("a") ++ Seq.fill(4)("b") ++
@@ -229,7 +229,7 @@ class StreamsSpec extends SparkSpec {
     import graft.dedup.Dedup
     val real = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val dir = Files.createTempDirectory("neardup_landing").toString
+    val dir = tempDir("neardup_landing").toString
     real.coalesce(1).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val hits = Streams.nearDupBands(Streams.fileSource(spark, dir, schema))
@@ -260,7 +260,7 @@ class StreamsSpec extends SparkSpec {
   test("nearDupBands: state persists across micro-batches; guard is loud") {
     import spark.implicits._
     implicit val s = spark
-    val dir = Files.createTempDirectory("neardup_batches").toString
+    val dir = tempDir("neardup_batches").toString
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     Seq((1L, text), (2L, text), (3L, "totally unrelated words " +
       "nothing shared with the other documents at all"))
@@ -300,7 +300,7 @@ class StreamsSpec extends SparkSpec {
     // oracle stays scoped to id-ordered AvailableNow landings.
     import spark.implicits._
     implicit val s = spark
-    val dir = Files.createTempDirectory("neardup_ooo").toString
+    val dir = tempDir("neardup_ooo").toString
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     Seq((10L, text)).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/f1")
@@ -339,7 +339,7 @@ class StreamsSpec extends SparkSpec {
 
   test("stream-static join: dim broadcast to every micro-batch, agg converges") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("enrich_batches").toString
+    val dir = tempDir("enrich_batches").toString
     Seq((1L, "en", "alpha beta", "web"), (2L, "de", "gamma", "web"))
       .toDF("doc_id", "lang", "text", "source")
       .coalesce(1).write.parquet(s"$dir/f1")
@@ -379,7 +379,7 @@ class StreamsSpec extends SparkSpec {
   test("firstSeenDocs: min-id within batch, first-arrival across batches") {
     import spark.implicits._
     implicit val s = spark
-    val dir = Files.createTempDirectory("firstseen_batches").toString
+    val dir = tempDir("firstseen_batches").toString
     // batch 1: docs 5 and 9 share text A (min id 5 must win); doc 7
     // is unique
     Seq((5L, "en", "text A"), (9L, "en", "text A"), (7L, "de", "text B"))
@@ -404,7 +404,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val s = spark
     def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val dir = Files.createTempDirectory("sessions_bridge").toString
+    val dir = tempDir("sessions_bridge").toString
     // Batch 1: two provisional sessions 35m apart (gap 30m). Batch 2:
     // an above-watermark event at 02:28 lands in the FIRST session's
     // gap window and bridges both into one — emitting the first
@@ -435,7 +435,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val s = spark
     def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val dir = Files.createTempDirectory("tws_sessions").toString
+    val dir = tempDir("tws_sessions").toString
     // three files -> three micro-batches (maxFilesPerTrigger=1, mtime
     // order). Sessions close only when the WATERMARK passes end+gap:
     // user 1's two sessions must close via the event-time TIMER (user 1
@@ -477,7 +477,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val s = spark
     def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val dir = Files.createTempDirectory("sessions_once").toString
+    val dir = tempDir("sessions_once").toString
     // one user, one event per micro-batch, each past the last session's
     // gap: every batch after the first brings new rows for a key whose
     // earlier session has already closed, so an operator that kept (or
@@ -534,8 +534,8 @@ class StreamsSpec extends SparkSpec {
   test("incremental materialized aggregate: converges, idempotent on rerun") {
     import graft.stream.IncrementalView
     val schema = Tables.events(spark, sfDir).schema
-    val viewDir = Files.createTempDirectory("inc_view").toString
-    val ckpt = Files.createTempDirectory("inc_ckpt").toString
+    val viewDir = tempDir("inc_view").toString
+    val ckpt = tempDir("inc_ckpt").toString
     def runOnce(): Unit = {
       val q = IncrementalView.groupedSumSink(
         Streams.fileSource(spark, landingDir, schema,
@@ -672,7 +672,7 @@ class StreamsSpec extends SparkSpec {
   test("a drain restores the session conf and deletes its checkpoint, on failure too") {
     implicit val s = spark
     val widthKey = "spark.sql.shuffle.partitions"
-    val ckRoot = Files.createTempDirectory("drain_ck_root")
+    val ckRoot = tempDir("drain_ck_root")
     val (priorWidth, priorRoot) =
       (spark.conf.get(widthKey), sys.props.get("graft.stream.ephemeralDir"))
     // a session width other than the drains' 4, so restoring shows

@@ -79,7 +79,7 @@ class TsEncodingSpec extends SparkSpec {
     // holding one TIMESTAMP(NANOS) file and one plain-int64 file both
     // surfaces LONG, and either single hint corrupts the other file's
     // instants ×1000 — that must throw, never silently normalize
-    val mixed = Files.createTempDirectory("tsenc_mixed")
+    val mixed = tempDir("tsenc_mixed")
     for ((enc, out) <- Seq("long_ns" -> "part-0001.parquet",
         "long_us" -> "part-0002.parquet"))
       Files.copy(Paths.get(s"$dir/$enc/events.parquet"),
@@ -90,11 +90,11 @@ class TsEncodingSpec extends SparkSpec {
     assert(e.getMessage.contains("part-0001.parquet"))
     // files LACKING the column abstain (schema evolution adds NULL
     // rows, which need no hint) — nanos verdict survives alongside
-    val withAbsent = Files.createTempDirectory("tsenc_absent")
+    val withAbsent = tempDir("tsenc_absent")
     Files.copy(Paths.get(s"$dir/long_ns/events.parquet"),
       withAbsent.resolve("part-0001.parquet"))
     import spark.implicits._
-    val tmp = Files.createTempDirectory("tsenc_nots").toString + "/t"
+    val tmp = tempDir("tsenc_nots").toString + "/t"
     Seq(("x", 1L)).toDF("event_type", "other").coalesce(1).write.parquet(tmp)
     val dataFile = new java.io.File(tmp).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).head
