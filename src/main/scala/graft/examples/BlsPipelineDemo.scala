@@ -38,26 +38,31 @@ object BlsPipelineDemo {
         |], "source": [{"name": "acs_yg_total_population_1"}]}""".stripMargin
 
     val blsPath = Files.createTempFile("bls", ".tsv")
-    Files.writeString(blsPath, blsTsv)
     val popPath = Files.createTempFile("pop", ".json")
-    Files.writeString(popPath, popJson)
+    try {
+      Files.writeString(blsPath, blsTsv)
+      Files.writeString(popPath, popJson)
 
-    val bls = Readers.readBlsTsv(spark, blsPath.toString)
-    val pop = Readers.readJsonEnvelope(spark, popPath.toString)
+      val bls = Readers.readBlsTsv(spark, blsPath.toString)
+      val pop = Readers.readJsonEnvelope(spark, popPath.toString)
 
-    println("== Report 1: population stats (2013-2018) ==")
-    Reports.populationStats(pop).show(truncate = false)
-    println("== Report 2: best year per series ==")
-    Reports.bestYears(bls).show(truncate = false)
-    println("== Report 3: combined (PRS30006032 x Q01) ==")
-    Reports.combinedReport(bls, pop).show(truncate = false)
+      println("== Report 1: population stats (2013-2018) ==")
+      Reports.populationStats(pop).show(truncate = false)
+      println("== Report 2: best year per series ==")
+      Reports.bestYears(bls).show(truncate = false)
+      println("== Report 3: combined (PRS30006032 x Q01) ==")
+      Reports.combinedReport(bls, pop).show(truncate = false)
 
-    println("== CDC merge plan ==")
-    val remote = Seq(("pr.data.0.Current", "aaa"), ("pr.class", "ccc"),
-      ("pr.new_file", "ddd")).toDF("name", "hash")
-    val stored = Seq(("pr.data.0.Current", "bbb"), ("pr.class", "ccc"),
-      ("pr.retired", "eee")).toDF("name", "hash")
-    CdcMerge.plan(remote, stored).orderBy("name").show(truncate = false)
+      println("== CDC merge plan ==")
+      val remote = Seq(("pr.data.0.Current", "aaa"), ("pr.class", "ccc"),
+        ("pr.new_file", "ddd")).toDF("name", "hash")
+      val stored = Seq(("pr.data.0.Current", "bbb"), ("pr.class", "ccc"),
+        ("pr.retired", "eee")).toDF("name", "hash")
+      CdcMerge.plan(remote, stored).orderBy("name").show(truncate = false)
+    } finally {
+      Files.deleteIfExists(blsPath)
+      Files.deleteIfExists(popPath)
+    }
 
     spark.stop()
   }

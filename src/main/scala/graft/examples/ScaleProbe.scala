@@ -187,16 +187,21 @@ object ScaleProbe {
       for (i <- 1 to 3)
         time(s"shuffled join (run $i)")(joinAgg(fact, dim))
       val db = "graft_probe_bkt"
-      Bucketing.ensureDatabase(spark, db,
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_probe_wh")
-      time("bucketed layout write x2")({
-        Bucketing.writeBucketed(fact, s"$db.fact_b", "l_orderkey", 32)
-        Bucketing.writeBucketed(dim, s"$db.dim_b", "l_orderkey", 32)
-        2L
-      })
-      for (i <- 1 to 3)
-        time(s"bucketed join  (run $i)")(
-          joinAgg(spark.table(s"$db.fact_b"), spark.table(s"$db.dim_b")))
+      val wh = sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_probe_wh"
+      Bucketing.ensureDatabase(spark, db, wh)
+      try {
+        time("bucketed layout write x2")({
+          Bucketing.writeBucketed(fact, s"$db.fact_b", "l_orderkey", 32)
+          Bucketing.writeBucketed(dim, s"$db.dim_b", "l_orderkey", 32)
+          2L
+        })
+        for (i <- 1 to 3)
+          time(s"bucketed join  (run $i)")(
+            joinAgg(spark.table(s"$db.fact_b"), spark.table(s"$db.dim_b")))
+      } finally {
+        spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+      }
     }
 
     // Round-3 additions.
@@ -444,31 +449,33 @@ object ScaleProbe {
       println("=== incremental minhash: fixed batch vs growing index ===")
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_incr_probe").toString
-      for (k <- Seq(4, 16, 64)) {
-        val corpus = (0 until k).map(i => docsTwinCopy(i, i / 2))
-          .reduce(_ unionByName _)
-        val batch = docsTwinCopy(k, 0)
-        val sigs = graft.dedup.Dedup.minhashSignatures(corpus)
-        sigs.write.mode("overwrite").parquet(s"$tmp/sigs_$k")
-        val idxSigs = spark.read.parquet(s"$tmp/sigs_$k")
-        graft.dedup.Dedup.minhashBands(idxSigs)
-          .write.mode("overwrite").parquet(s"$tmp/bands_$k")
-        val idxBands = spark.read.parquet(s"$tmp/bands_$k")
-        println(s"=== corpus x$k (${5000 * k} docs indexed, " +
-          "fixed 5000-doc batch) ===")
-        if (k <= 16) // the rebuild is the baseline being beaten; its
-          // x64 point is ~4x the x16 one by the law it demonstrates
-          time(f"minhash FULL rebuild  (x$k%-2d)")(
-            graft.dedup.Dedup.minhashSimilarity(
-              graft.dedup.Dedup.minhashLshCandidates(
-                corpus.unionByName(batch)),
-              graft.dedup.Dedup.minhashSignatures(
-                corpus.unionByName(batch)))
-              .filter(col("est_jaccard") >= 0.7).count())
-        time(f"minhash incremental   (x$k%-2d)")(
-          graft.dedup.Dedup.minhashIncremental(batch, idxBands, idxSigs)
-            .count())
-      }
+      try {
+        for (k <- Seq(4, 16, 64)) {
+          val corpus = (0 until k).map(i => docsTwinCopy(i, i / 2))
+            .reduce(_ unionByName _)
+          val batch = docsTwinCopy(k, 0)
+          val sigs = graft.dedup.Dedup.minhashSignatures(corpus)
+          sigs.write.mode("overwrite").parquet(s"$tmp/sigs_$k")
+          val idxSigs = spark.read.parquet(s"$tmp/sigs_$k")
+          graft.dedup.Dedup.minhashBands(idxSigs)
+            .write.mode("overwrite").parquet(s"$tmp/bands_$k")
+          val idxBands = spark.read.parquet(s"$tmp/bands_$k")
+          println(s"=== corpus x$k (${5000 * k} docs indexed, " +
+            "fixed 5000-doc batch) ===")
+          if (k <= 16) // the rebuild is the baseline being beaten; its
+            // x64 point is ~4x the x16 one by the law it demonstrates
+            time(f"minhash FULL rebuild  (x$k%-2d)")(
+              graft.dedup.Dedup.minhashSimilarity(
+                graft.dedup.Dedup.minhashLshCandidates(
+                  corpus.unionByName(batch)),
+                graft.dedup.Dedup.minhashSignatures(
+                  corpus.unionByName(batch)))
+                .filter(col("est_jaccard") >= 0.7).count())
+          time(f"minhash incremental   (x$k%-2d)")(
+            graft.dedup.Dedup.minhashIncremental(batch, idxBands, idxSigs)
+              .count())
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }
 
     section("quality") {

@@ -23,22 +23,27 @@ object SyncDemo {
 
     val src = Files.createTempDirectory("sync_src")
     val dst = Files.createTempDirectory("sync_dst")
-    Files.writeString(src.resolve("pr.data.0.Current"), "series\tvalue\nA\t1\n")
-    Files.writeString(src.resolve("pr.class"), "class data v2\n")
-    Files.writeString(dst.resolve("pr.class"), "class data v1 (stale)\n")
-    Files.writeString(dst.resolve("pr.retired"), "no longer upstream\n")
+    try {
+      Files.writeString(src.resolve("pr.data.0.Current"), "series\tvalue\nA\t1\n")
+      Files.writeString(src.resolve("pr.class"), "class data v2\n")
+      Files.writeString(dst.resolve("pr.class"), "class data v1 (stale)\n")
+      Files.writeString(dst.resolve("pr.retired"), "no longer upstream\n")
 
-    println("== Part 1: sync plan + apply ==")
-    SyncJob.run(spark, src.toString, dst.toString)
-      .orderBy("name").show(truncate = false)
-    println("== Part 1 rerun (must be all skip) ==")
-    SyncJob.run(spark, src.toString, dst.toString)
-      .groupBy("action").count().orderBy("action").show()
+      println("== Part 1: sync plan + apply ==")
+      SyncJob.run(spark, src.toString, dst.toString)
+        .orderBy("name").show(truncate = false)
+      println("== Part 1 rerun (must be all skip) ==")
+      SyncJob.run(spark, src.toString, dst.toString)
+        .groupBy("action").count().orderBy("action").show()
 
-    println("== Part 2: timestamped API snapshot ==")
-    val out = Sinks.timestampedPath(dst.toString, "population_data_", ".json")
-    Sinks.writeJson(Seq((2018, 327167439L)).toDF("year", "population"), out)
-    println(s"wrote $out")
+      println("== Part 2: timestamped API snapshot ==")
+      val out = Sinks.timestampedPath(dst.toString, "population_data_", ".json")
+      Sinks.writeJson(Seq((2018, 327167439L)).toDF("year", "population"), out)
+      println(s"wrote $out")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(src.toFile)
+      org.apache.commons.io.FileUtils.deleteQuietly(dst.toFile)
+    }
 
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Catalog-listing source (SURVEY.md §2.1 S3/S4): the object-store /
   * remote-directory listings the sync engine diffs.
@@ -10,10 +11,11 @@ import org.apache.spark.sql.functions._
 object Catalog {
 
   /** Recursive driver-side listing as raw tuples
-    * `(name, path, length, modTimeMs)` — shared by [[listFiles]] and
-    * the DataSource V2 connector ([[graft.sources.CatalogSource]]).
+    * `(name, path, length, modTimeMs)` of every file the file system
+    * lists, `_SUCCESS` included: the snapshot-tag and size probes of
+    * [[Tables]] and [[Sinks]]. A file catalog is [[listFiles]].
     */
-  def listRaw(dir: String,
+  private[io] def listRaw(dir: String,
               conf: org.apache.hadoop.conf.Configuration)
   : Seq[(String, String, Long, Long)] = {
     val path = new Path(dir)
@@ -31,41 +33,40 @@ object Catalog {
     }
   }
 
-  /** List a directory (recursively) as a DataFrame
-    * `(name, path, length, mod_time)` — the engine-side equivalent of
+  private val schema = StructType(Seq(
+    StructField("name", StringType), StructField("path", StringType),
+    StructField("length", LongType), StructField("mod_time", TimestampType),
+    StructField("hash", StringType)))
+
+  /** A directory's file catalog `(name, path, length, mod_time, hash)`:
     * the reference's `get_s3_files()` LIST → `{key: etag}`
-    * (`Task_1_sync_bls_files.py:77-85`). Listing happens driver-side
-    * (as in the reference); content hashing is distributed — see
-    * [[withContentHash]].
+    * (`Task_1_sync_bls_files.py:77-85`) and its 8KB-chunk md5
+    * (`:99-105`) as one recursive `binaryFile` read, `hash =
+    * md5(content)`, hashed in the scan tasks. `binaryFile` skips `_`/`.`
+    * names (`_SUCCESS`, `.crc`), so listing and hashing see the same
+    * files. Column pruning keeps `content` out of a scan that selects no
+    * `hash`, and `length`/`mod_time` filters are applied to the file
+    * status before any content is read. `recursiveFileLookup` also turns
+    * off partition-directory inference, the right semantics for a FILE
+    * catalog; `name` is the basename, so a key that must not collide
+    * across subdirectories derives from `path` (see SyncJob's
+    * relative-path key). A missing or empty directory (a destination
+    * before its first sync) is an empty catalog.
     */
   def listFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    listRaw(dir, spark.sparkContext.hadoopConfiguration)
-      .toDF("name", "path", "length", "mod_time")
-  }
-
-  /** Distributed content hashing: read each listed file as binary and
-    * md5 it — the reference streams 8KB chunks through hashlib
-    * (`Task_1_sync_bls_files.py:99-105`); here each file is one task and
-    * the hash is the Catalyst `md5` over the content column.
-    *
-    * `recursive = true` descends into plain subdirectories
-    * (`recursiveFileLookup`, which also disables partition-style
-    * directory inference — the right semantics for a FILE catalog);
-    * the default keeps the reference's flat-prefix LIST behavior.
-    * `name` stays the basename either way — callers needing a
-    * collision-free key under recursion derive it from `path`
-    * (see SyncJob's relative-path key).
-    */
-  def withContentHash(spark: SparkSession, dir: String,
-                      recursive: Boolean = false): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", recursive.toString)
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p) || fs.listStatus(p).isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
       .load(dir)
       .select(
         element_at(split(col("path"), "/"), -1).as("name"),
-        col("path"), col("length"),
+        col("path"), col("length"), col("modificationTime").as("mod_time"),
         md5(col("content")).as("hash"))
+  }
 
   /** Extract href targets from an HTML directory index (SURVEY.md S4,
     * the reference's bs4 scrape `Task_1_sync_bls_files.py:42-48`):

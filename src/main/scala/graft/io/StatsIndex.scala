@@ -35,7 +35,7 @@ object StatsIndex {
     require(cols.nonEmpty, "index at least one column")
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dir)
+    scan(spark, dir)
       .select(col("_metadata.file_path").as("file_path") +: cols.map(col): _*)
       .groupBy("file_path")
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
@@ -65,14 +65,14 @@ object StatsIndex {
     // the anti-join — no unbounded driver array in the maintenance path.
     val nKnown =
       existing.select("file_path").limit(isinMaxKnown + 1).count()
-    val scan = spark.read.parquet(dir)
+    val all = scan(spark, dir)
     val newOnly =
       if (nKnown <= isinMaxKnown) {
         val known =
           existing.select("file_path").collect().map(_.getString(0))
-        scan.where(!col("_metadata.file_path").isin(known.toIndexedSeq: _*))
+        all.where(!col("_metadata.file_path").isin(known.toIndexedSeq: _*))
       } else
-        scan.join(existing.select(col("file_path").as("__known")),
+        all.join(existing.select(col("file_path").as("__known")),
           col("_metadata.file_path") === col("__known"), "left_anti")
     val fresh = newOnly
       .select(col("_metadata.file_path").as("file_path") +: cols.map(col): _*)
@@ -103,8 +103,14 @@ object StatsIndex {
       if (files.isEmpty)
         // keep the schema without reading data: plan the full scan but
         // refuse every row (Catalyst folds this to an empty relation)
-        spark.read.parquet(dir).where(lit(false))
-      else spark.read.parquet(files: _*)
+        scan(spark, dir).where(lit(false))
+      else spark.read.schema(Tables.schema(spark, dir)).parquet(files: _*)
     base.where(col(c).between(lo, hi))
   }
+
+  /** `dir` read with the schema [[Tables]] resolved for its snapshot:
+    * no inference job once the snapshot is known to the session.
+    */
+  private def scan(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(Tables.schema(spark, dir)).parquet(dir)
 }

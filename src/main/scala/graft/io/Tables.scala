@@ -40,6 +40,11 @@ object Tables {
     spark.read.schema(resolve(spark, p)._1).parquet(p)
   }
 
+  /** The schema of the parquet data at path `p`, resolved once per
+    * snapshot as for [[table]].
+    */
+  def schema(spark: SparkSession, p: String): StructType = resolve(spark, p)._1
+
   /** A table's schema and, for a `ts` column that surfaced as LONG, the
     * footers' ns verdict ([[parquetTsNanos]]): resolved once per
     * (session, path, [[snapshotTag]], the session's parquet read

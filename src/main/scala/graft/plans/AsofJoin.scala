@@ -12,9 +12,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** AS-OF JOIN as a first-class operator: logical node → planner
   * strategy → sorted-merge physical operator (SURVEY.md §7.4 option c —
   * the "whole-operator semantics" modality of the custom-Catalyst
-  * surface, alongside the expression ([[graft.functions.ArrayDot]]),
-  * typed-Aggregator ([[graft.functions.EmbeddingCentroid]]) and DSv2
-  * ([[graft.sources]]) modalities).
+  * surface, alongside the expression ([[graft.functions.ArrayDot]]) and
+  * typed-Aggregator ([[graft.functions.EmbeddingCentroid]]) modalities).
   *
   * Semantics (matches [[graft.ops.Ops.asofJoin]] and DuckDB
   * `ASOF LEFT JOIN ... ON l.key = r.key AND l.ts >= r.ts`): every left

@@ -677,7 +677,6 @@ object AnalyticsQueries {
     * (the window form, proving the aggregate once more).
     */
   def itemSim(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.SketchAggregates
     // r7 (VERDICT item 5): pair occurrences come from basket arrays
     // ([[pairsFromBasketsHalf]]) — one raw-lineitem shuffle and in-place
     // explosion replace the distinct + self-join + two join exchanges;
@@ -715,24 +714,7 @@ object AnalyticsQueries {
       .join(broadcast(perPart.select(col("pk").as("part_b"),
         col("n").as("n_b"))), "part_b")
       .withColumn("cos", col("n_pair") / sqrt(col("n_a") * col("n_b")))
-    val sim = mirrorPairs(half.select("part_a", "part_b", "cos"),
-      Seq("cos"))
-    // NO pin on the top-k exchange (r14, tried and REVERTED): an
-    // explicit repartition below the groupBy bounds the final's width
-    // but DISABLES the map-side partial top-k — the mirror's full pair
-    // volume would cross the exchange raw (~90 MB compressed vs ~4 GB
-    // raw at the ×100 leg), exactly the compression this aggregate
-    // exists to buy. The groupBy's own ENSURE_REQUIREMENTS exchange is
-    // AQE-coalescible, so the 32-near-empty-finals problem the pin
-    // targeted is handled by bytes-based coalescing instead.
-    sim.groupBy("part_a")
-      .agg(SketchAggregates.top_k_pairs(col("cos"), col("part_b"), 3)
-        .as("top"))
-      .select(col("part_a"), posexplode(col("top")))
-      .select(col("part_a").as("part"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("neighbor"),
-        round(col("col.score"), 6).as("cosine"))
+    topNeighbors(half)
       // materialization barrier BEFORE the presentation sort (r12
       // stage forensics): a range-partitioned global sort SAMPLES its
       // child to pick bounds, and that sample job RE-EXECUTES the
@@ -771,7 +753,6 @@ object AnalyticsQueries {
     * no SortMergeJoin, two ShuffledHashJoins).
     */
   def itemSimBucketed(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.SketchAggregates
     val perPart = partOrderCounts(s, d)
     // half-relation pipeline + post-probe mirror, as in [[itemSim]]
     val pairs = pairsFromBasketsHalf(baskets(s, d))
@@ -805,24 +786,7 @@ object AnalyticsQueries {
     // runs on the pinned probe-width tasks and compresses each to ≤3
     // candidates per item before the shuffle, so no width pin is
     // needed on the re-key
-    val sim = mirrorPairs(half.select("part_a", "part_b", "cos"),
-      Seq("cos"))
-    // NO pin on the top-k exchange (r14, tried and REVERTED): an
-    // explicit repartition below the groupBy bounds the final's width
-    // but DISABLES the map-side partial top-k — the mirror's full pair
-    // volume would cross the exchange raw (~90 MB compressed vs ~4 GB
-    // raw at the ×100 leg), exactly the compression this aggregate
-    // exists to buy. The groupBy's own ENSURE_REQUIREMENTS exchange is
-    // AQE-coalescible, so the 32-near-empty-finals problem the pin
-    // targeted is handled by bytes-based coalescing instead.
-    sim.groupBy("part_a")
-      .agg(SketchAggregates.top_k_pairs(col("cos"), col("part_b"), 3)
-        .as("top"))
-      .select(col("part_a"), posexplode(col("top")))
-      .select(col("part_a").as("part"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("neighbor"),
-        round(col("col.score"), 6).as("cosine"))
+    topNeighbors(half)
       // sample-replay barrier before the presentation sort — see the
       // identical line in [[itemSim]]; rebalance width follows the
       // result's bytes ([[graft.ops.Ops.sortBarrier]], r14)
@@ -853,7 +817,6 @@ object AnalyticsQueries {
     * generalized to a standing derived index.
     */
   def itemSimBucketedPersisted(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.SketchAggregates
     val w = pairWidth(s, d)
     val db = graft.io.Bucketing.graftDatabase(s)
     // bucket count must equal the pair side's repartition width for
@@ -879,6 +842,21 @@ object AnalyticsQueries {
       .repartition(w, col("part_a"))
       .join(nA.hint("shuffle_hash"), "part_a")
       .withColumn("cos", col("n_pair") / sqrt(col("n_a") * col("n_b")))
+    topNeighbors(half)
+      // sample-replay barrier before the presentation sort — see the
+      // identical line in [[itemSim]]; rebalance width follows the
+      // result's bytes ([[graft.ops.Ops.sortBarrier]], r14)
+      .transform(graft.ops.Ops.sortBarrier)
+      .orderBy("part", "rank")
+  }
+
+  /** The tail of [[itemSim]], [[itemSimBucketed]] and
+    * [[itemSimBucketedPersisted]]: mirror the half pair relation
+    * `(part_a, part_b, cos)` and keep each part's top-3 neighbors as
+    * `(part, rank, neighbor, cosine)`.
+    */
+  private def topNeighbors(half: DataFrame): DataFrame = {
+    import graft.functions.SketchAggregates
     val sim = mirrorPairs(half.select("part_a", "part_b", "cos"),
       Seq("cos"))
     // NO pin on the top-k exchange (r14, tried and REVERTED): an
@@ -897,11 +875,6 @@ object AnalyticsQueries {
         (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("neighbor"),
         round(col("col.score"), 6).as("cosine"))
-      // sample-replay barrier before the presentation sort — see the
-      // identical line in [[itemSim]]; rebalance width follows the
-      // result's bytes ([[graft.ops.Ops.sortBarrier]], r14)
-      .transform(graft.ops.Ops.sortBarrier)
-      .orderBy("part", "rank")
   }
 
   /** Co-purchase hop distance: bounded-depth [[graft.graph.Bfs]] from

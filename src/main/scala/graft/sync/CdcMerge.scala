@@ -33,15 +33,21 @@ object CdcMerge {
       .select("name", "action", "remote_hash", "stored_hash")
   }
 
-  /** Keys whose content must be (re-)fetched — the reference's
-    * download+upload set (insert ∪ update).
+  /** Actions whose key is (re-)fetched into the destination — the
+    * reference's download+upload set (insert ∪ update).
     */
-  def toFetch(merged: DataFrame): DataFrame =
-    merged.filter(col("action").isin("insert", "update")).select("name")
+  val fetchActions: Set[String] = Set("insert", "update")
 
-  /** Keys to remove from the destination (reference
+  /** Actions whose key is removed from the destination (reference
     * `Task_1_sync_bls_files.py:189-198`).
     */
+  val deleteActions: Set[String] = Set("delete")
+
+  /** Keys to fetch, by [[fetchActions]]. */
+  def toFetch(merged: DataFrame): DataFrame =
+    merged.filter(col("action").isin(fetchActions.toSeq: _*)).select("name")
+
+  /** Keys to delete, by [[deleteActions]]. */
   def toDelete(merged: DataFrame): DataFrame =
-    merged.filter(col("action") === "delete").select("name")
+    merged.filter(col("action").isin(deleteActions.toSeq: _*)).select("name")
 }

@@ -3,7 +3,6 @@ package graft.sync
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.io.{Catalog, Sinks}
 
@@ -24,12 +23,9 @@ import graft.io.{Catalog, Sinks}
   */
 object SyncJob {
 
-  private val catalogSchema = StructType(Seq(
-    StructField("name", StringType), StructField("path", StringType),
-    StructField("length", LongType), StructField("hash", StringType)))
-
-  /** [[Catalog.withContentHash]], tolerating a missing/empty dir (the
-    * destination on first sync) by returning an empty catalog.
+  /** [[Catalog.listFiles]] keyed on the path relative to `dir`; a
+    * missing or empty dir (the destination on first sync) is an empty
+    * catalog.
     */
   def catalogOrEmpty(spark: SparkSession, dir: String): DataFrame = {
     val p = new Path(dir)
@@ -38,18 +34,14 @@ object SyncJob {
     // cached file listing for this path or pass 2 reads ghosts of
     // files pass 1 deleted
     spark.catalog.refreshByPath(dir)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) {
-      // key on the path RELATIVE to dir, not the basename: the binary
-      // listing recurses into subdirectories, where a basename key
-      // both reconstructs the wrong copy path ($dir/<basename>) and
-      // collides for same-named files in different subdirs — the
-      // relative path round-trips to the true location on either side
-      val qualified = fs.makeQualified(p).toString
-      Catalog.withContentHash(spark, dir, recursive = true)
-        .withColumn("name",
-          expr(s"substring(path, ${qualified.length + 2})"))
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], catalogSchema)
+    // key on the path RELATIVE to dir, not the basename: the binary
+    // listing recurses into subdirectories, where a basename key
+    // both reconstructs the wrong copy path ($dir/<basename>) and
+    // collides for same-named files in different subdirs — the
+    // relative path round-trips to the true location on either side
+    val qualified = fs.makeQualified(p).toString
+    Catalog.listFiles(spark, dir)
+      .withColumn("name", expr(s"substring(path, ${qualified.length + 2})"))
   }
 
   /** Plan + apply one sync; returns the merged plan
@@ -67,9 +59,10 @@ object SyncJob {
     val merged = CdcMerge.plan(
       catalogOrEmpty(spark, srcDir), catalogOrEmpty(spark, dstDir))
     val rows = merged.collect()
-    val fetch = rows.filter(r => Set("insert", "update")(r.getString(1)))
-      .map(_.getString(0))
-    val del = rows.filter(_.getString(1) == "delete").map(_.getString(0))
+    def keys(actions: Set[String]) =
+      rows.filter(r => actions(r.getString(1))).map(_.getString(0))
+    val fetch = keys(CdcMerge.fetchActions)
+    val del = keys(CdcMerge.deleteActions)
     val conf = spark.sparkContext.hadoopConfiguration
     // resolve each side's OWN FileSystem — src and dst may live on
     // different schemes (s3a → file, hdfs → s3a, ...)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.io.{Catalog, Sinks}
@@ -25,12 +27,78 @@ class IoSpec extends SparkSpec {
     assert(latest === "population_data_20240301_000000.json")
   }
 
-  test("withContentHash computes md5 over file bytes") {
+  test("listFiles: hash is the md5 of the file bytes") {
     val dir = tempDir("hashing")
     Files.writeString(dir.resolve("a.txt"), "abc")
-    val row = Catalog.withContentHash(spark, dir.toString).collect()(0)
+    val row = Catalog.listFiles(spark, dir.toString).collect()(0)
     assert(row.getAs[String]("hash") === "900150983cd24fb0d6963f7d28e17f72")
     assert(row.getAs[String]("name") === "a.txt")
+    assert(row.getAs[Long]("length") === 3L)
+  }
+
+  test("listFiles: marker and checksum files are neither listed nor hashed") {
+    val dir = tempDir("hidden")
+    Files.writeString(dir.resolve("a"), "alpha")
+    Files.writeString(dir.resolve("b.txt"), "beta")
+    Files.writeString(dir.resolve("_SUCCESS"), "")
+    Files.writeString(dir.resolve(".a.crc"), "crc")
+    val files = Catalog.listFiles(spark, dir.toString)
+    def names(df: DataFrame) = df.collect().map(_.getString(0)).sorted.toSeq
+    val listed = names(files.select("name"))
+    assert(listed === Seq("a", "b.txt"))
+    assert(names(files.select("name", "hash")) === listed)
+  }
+
+  test("listFiles: a missing directory is an empty catalog") {
+    val missing = tempDir("gone").resolve("definitely_missing").toString
+    val files = Catalog.listFiles(spark, missing)
+    assert(files.columns.toSeq === Seq("name", "path", "length", "mod_time", "hash"))
+    assert(files.count() === 0)
+  }
+
+  test("listFiles: a listing that selects no hash reads no file content") {
+    val dir = tempDir("pruned")
+    Files.writeString(dir.resolve("a.txt"), "alpha")
+    def readSchema(df: DataFrame) = df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f.requiredSchema.fieldNames.toSet
+    }
+    val files = Catalog.listFiles(spark, dir.toString)
+    assert(readSchema(files.select("name", "length", "mod_time")) ===
+      Seq(Set("path", "length", "modificationTime")))
+    assert(readSchema(files.select("name", "hash")) === Seq(Set("path", "content")))
+    // the sync's catalog scan: a relative-path key and the content hash
+    import graft.sync.SyncJob
+    assert(readSchema(SyncJob.catalogOrEmpty(spark, dir.toString)
+      .select("name", "hash")) === Seq(Set("path", "content")))
+  }
+
+  test("listFiles: a length filter drops a file before its content is read") {
+    val dir = tempDir("sized")
+    Files.writeString(dir.resolve("small"), "abc")
+    Files.writeString(dir.resolve("big"), "x" * 100)
+    val key = "spark.sql.sources.binaryFile.maxLength"
+    // reading content longer than maxLength fails the task, so `big`
+    // must be filtered out on its file status, unread
+    val pinned = spark.conf.getOption(key)
+    spark.conf.set(key, "10")
+    try {
+      val small = Catalog.listFiles(spark, dir.toString)
+        .filter(col("length") < 10).select("name", "hash")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+      assert(small === Seq("small" -> "900150983cd24fb0d6963f7d28e17f72"))
+      val unfiltered = intercept[org.apache.spark.SparkException](
+        Catalog.listFiles(spark, dir.toString).select("hash").collect())
+      assert(Iterator.iterate[Throwable](unfiltered)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("exceeds the max length")))
+    } finally pinned.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("only io/Catalog reads a file catalog; main code registers no data source") {
+    assert(SourceGuard.mainFilesCalling("format(\"binaryFile\")") ===
+      Seq("graft/io/Catalog.scala"))
+    assert(Seq("TableProvider", "DataSourceRegister")
+      .flatMap(SourceGuard.mainFilesCalling) === Nil)
   }
 
   test("hrefsFromHtml extracts file links, skips dirs and parent refs") {
@@ -80,8 +148,8 @@ class IoSpec extends SparkSpec {
     Files.writeString(remote.resolve("f2"), "same")
     Files.writeString(stored.resolve("f2"), "same")
     Files.writeString(stored.resolve("f3"), "retired")
-    val r = Catalog.withContentHash(spark, remote.toString).select("name", "hash")
-    val s = Catalog.withContentHash(spark, stored.toString).select("name", "hash")
+    val r = Catalog.listFiles(spark, remote.toString).select("name", "hash")
+    val s = Catalog.listFiles(spark, stored.toString).select("name", "hash")
     val merged = CdcMerge.plan(r, s)
     val actions = merged.collect().map(x => x.getString(0) -> x.getString(1)).toMap
     assert(actions === Map("f1" -> "insert", "f2" -> "skip", "f3" -> "delete"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftshim.ListenerBridge
@@ -62,17 +60,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Spark jobs submitted while `body` runs. */
   def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger
+    val (out, sites) = jobSitesDuring(body)
+    (out, sites.size)
+  }
+
+  /** The call sites (`parquet at Tables.scala:52`) of the Spark jobs
+    * submitted while `body` runs, in submission order.
+    */
+  def jobSitesDuring[T](body: => T): (T, Seq[String]) = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
     }
     ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       val out = body
       ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      (out, n.get)
+      (out, sites.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

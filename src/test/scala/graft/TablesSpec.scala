@@ -77,6 +77,15 @@ class TablesSpec extends SparkSpec {
     assert(Tables.snapshotTag(spark, p, missing) !== Tables.snapshotTag(spark, p, missing))
   }
 
+  test("a second build of the stats-pruned read infers no schema") {
+    def build() = graft.queries.FuncQueries.statsPrune(spark, sfDir)
+    build()
+    val (_, sites) = jobSitesDuring(build())
+    assert(sites.nonEmpty, "building the frame collects its candidate files")
+    assert(!sites.exists(_.startsWith("parquet at")),
+      s"a known snapshot was read through schema inference: $sites")
+  }
+
   test("only Tables knows a table's path, its read and the snapshot tag") {
     val tables = "graft/io/Tables.scala"
     def holding(re: Regex): Seq[String] = SourceGuard.mainSources.collect {
