@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{ArrayCosine, ArrayDot, JaroWinklerSim, MisraGriesSketch, SimHash64, TokenShingles, TopKPairs, UnicodeNfc}
+import graft.functions.{ArrayCosine, ArrayDot, ArrayL2, JaroWinklerSim, MisraGriesSketch, SimHash64, TokenShingles, TopKPairs, UnicodeNfc}
 
 /** `SparkSessionExtensions` hook: registers the graft native functions
   * (so SQL users get `array_dot`/`array_cosine` without touching the
@@ -17,9 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   /** A sketch bound must be a plan-time constant (it sizes the
     * aggregation buffer); reject anything non-foldable loudly.
     */
-  private def foldableInt(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      fn: String): Int = e match {
+  private def foldableInt(e: Expression, fn: String): Int = e match {
     case lit if lit.foldable =>
       lit.eval(null) match {
         case i: Int => i
@@ -31,69 +31,46 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$fn: bound must be a literal, got ${e.sql}")
   }
 
+  /** SQL function `name` taking exactly `arity` arguments. The count is
+    * checked before `build` sees them: a call with one argument too few
+    * must not reach an unchecked index, nor one too many be silently
+    * dropped (`simhash64(toks, 7)` would return seed-42 signatures).
+    */
+  private def fn[E <: Expression: scala.reflect.ClassTag](name: String,
+      arity: Int)(build: Seq[Expression] => E) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(scala.reflect.classTag[E].runtimeClass.getName, name),
+      (args: Seq[Expression]) => {
+        if (args.length != arity)
+          throw new org.apache.spark.sql.AnalysisException(
+            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+            messageParameters = Map(
+              "functionName" -> name,
+              "expectedNum" -> arity.toString,
+              "actualNum" -> args.length.toString,
+              "docroot" -> "https://spark.apache.org/docs/latest"))
+        build(args): Expression
+      })
+
+  /** Every graft SQL function, declared once. Sketch aggregates take
+    * their bound as a foldable int literal (the buffer size must be
+    * fixed at plan time).
+    */
+  private val functions = Seq(
+    fn("array_dot", 2)(a => ArrayDot(a(0), a(1))),
+    fn("array_cosine", 2)(a => ArrayCosine(a(0), a(1))),
+    fn("array_l2", 2)(a => ArrayL2(a(0), a(1))),
+    fn("unicode_nfc", 1)(a => UnicodeNfc(a(0))),
+    fn("jaro_winkler", 2)(a => JaroWinklerSim(a(0), a(1))),
+    fn("token_shingles", 2)(a => TokenShingles(a(0), a(1))),
+    fn("simhash64", 1)(a => SimHash64(a(0))),
+    fn("misra_gries", 2)(a =>
+      MisraGriesSketch(a(0), foldableInt(a(1), "misra_gries"))),
+    fn("top_k_pairs", 3)(a =>
+      TopKPairs(a(0), a(1), foldableInt(a(2), "top_k_pairs"))))
+
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("array_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayDot].getName, "array_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ArrayDot(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("array_cosine"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayCosine].getName, "array_cosine"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ArrayCosine(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("unicode_nfc"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[UnicodeNfc].getName, "unicode_nfc"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          UnicodeNfc(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[JaroWinklerSim].getName, "jaro_winkler"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          JaroWinklerSim(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("token_shingles"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[TokenShingles].getName, "token_shingles"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          TokenShingles(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[SimHash64].getName, "simhash64"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          // arity-checked: silently dropping a second argument would
-          // return seed-42 signatures for simhash64(toks, 7) with no
-          // error — fail analysis instead (SimHash64 takes no seed).
-          if (exprs.length != 1)
-            throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-              messageParameters = Map(
-                "functionName" -> "simhash64",
-                "expectedNum" -> "1",
-                "actualNum" -> exprs.length.toString,
-                "docroot" -> "https://spark.apache.org/docs/latest"))
-          SimHash64(exprs(0))
-        }))
-    // sketch aggregates: SQL form takes the bound as a foldable int
-    // literal (the buffer size must be fixed at plan time)
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("misra_gries"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MisraGriesSketch].getName, "misra_gries"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MisraGriesSketch(exprs(0), foldableInt(exprs(1), "misra_gries"))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("top_k_pairs"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[TopKPairs].getName, "top_k_pairs"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          TopKPairs(exprs(0), exprs(1), foldableInt(exprs(2), "top_k_pairs"))))
+    functions.foreach(e.injectFunction)
     // whole-operator surface: plans the AsofJoinPlan logical node onto
     // the sorted-merge AsofJoinExec
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)

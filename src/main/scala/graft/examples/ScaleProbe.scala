@@ -530,7 +530,7 @@ object ScaleProbe {
           case None => spark.conf.unset("spark.sql.codegen.fallback")
         }
         // retire the probe's 8 MB weight broadcasts with the plans
-        graft.text.QualityModel.destroyCachedBroadcasts()
+        Materialize.releaseOwned(spark)
       }
     }
 

@@ -3,7 +3,6 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,13 +55,11 @@ case class UnicodeNfc(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Column wrapper + SQL registration for the text-normalization family. */
+/** Column wrapper for the text-normalization family (the SQL name is
+  * registered by [[graft.GraftExtensions]]).
+  */
 object TextNormFunctions {
   import org.apache.spark.sql.graftshim.ColumnBridge.{column => toCol, expression => toExpr}
 
   def unicode_nfc(c: Column): Column = toCol(UnicodeNfc(toExpr(c)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_nfc", exprs => UnicodeNfc(exprs(0)), "built-in")
 }

@@ -76,9 +76,4 @@ object TokenShingles {
   def tokenShingles(text: Column, n: Int): Column =
     toCol(TokenShingles(toExpr(text),
       org.apache.spark.sql.catalyst.expressions.Literal(n)))
-
-  /** Register `token_shingles` for SQL / LATERAL VIEW use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_shingles", exprs => TokenShingles(exprs(0), exprs(1)), "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -218,8 +217,9 @@ case class ArrayL2(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column wrappers + SQL registration. Spark 4 removed `Column.expr`
-  * from the public surface; the classic `ExpressionUtils` bridge is the
+/** Column wrappers (the SQL names are registered by
+  * [[graft.GraftExtensions]]). Spark 4 removed `Column.expr` from the
+  * public surface; the classic `ExpressionUtils` bridge is the
   * supported way to cross Column ↔ Expression.
   */
 object VectorFunctions {
@@ -233,15 +233,4 @@ object VectorFunctions {
 
   def array_l2(a: Column, b: Column): Column =
     toCol(ArrayL2(toExpr(a), toExpr(b)))
-
-  /** Register `array_dot` / `array_cosine` / `array_l2` for SQL use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("array_dot",
-      exprs => ArrayDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("array_cosine",
-      exprs => ArrayCosine(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("array_l2",
-      exprs => ArrayL2(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -1,5 +1,7 @@
 package graft.io
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed (pre-shuffled) table layout for co-located joins.
@@ -28,6 +30,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    bucket spec lives in the table metadata, not the files. We create a
   *    dedicated database with an explicit LOCATION so nothing touches the
   *    default warehouse.
+  *
+  * Lifetime: graft's own layouts ([[layout]]) live in database
+  * `graft_bkt`, whose files sit in `graft_bkt_wh` under the context's
+  * driver temp dir (`SparkFiles.getRootDirectory()`). `SparkEnv.stop`
+  * deletes that directory, so the files die with the context whose
+  * in-memory catalog names them: at `spark.stop()`, or at the JVM's
+  * shutdown hook. Like any local path it assumes executors share the
+  * driver's filesystem (local mode).
   */
 object Bucketing {
 
@@ -53,15 +63,26 @@ object Bucketing {
       s"CREATE DATABASE IF NOT EXISTS $db LOCATION '${location.replace("'", "''")}'")
   }
 
-  /** The database graft's own bucketed layouts live in, created on first
-    * use with its files in `graft_bkt_wh` under the JVM temp dir.
+  /** `df` laid out as a table bucketed and sorted by `key` in graft's
+    * own database, and that table's name: written once per snapshot
+    * tag of `source` ([[graft.ops.Materialize.sessionMemo]]), so each
+    * query after the first pays only the exchange-free read. A changed
+    * source drops the superseded table, files included. The tag is in
+    * the table name, so sessions that share a context (and so its
+    * catalog) share the layout and never rewrite it. `buckets` is part
+    * of the layout's identity: a reader co-partitioned at another width
+    * gets a layout of its own.
     */
-  def graftDatabase(spark: SparkSession): String = {
-    val db = "graft_bkt"
-    ensureDatabase(spark, db, new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_bkt_wh").getPath)
-    db
-  }
+  def layout(s: SparkSession, name: String, source: String, key: String,
+             buckets: Int)(df: => DataFrame): String =
+    graft.ops.Materialize.sessionMemo[String](s, s"${name}_$buckets",
+        source, t => s.sql(s"DROP TABLE IF EXISTS $t")) { tag =>
+      ensureDatabase(s, "graft_bkt", new java.io.File(
+        org.apache.spark.SparkFiles.getRootDirectory(), "graft_bkt_wh").getPath)
+      val table = s"graft_bkt.${name}_${buckets}_$tag"
+      if (!s.catalog.tableExists(table)) writeBucketed(df, table, key, buckets)
+      table
+    }
 
   /** Write `df` as a managed parquet table bucketed AND sorted by `key`.
     *
@@ -80,19 +101,6 @@ object Bucketing {
       .sortBy(key)
       .saveAsTable(table)
   }
-
-  /** One flag-scoped child session per parent, with the key set the
-    * last conf replication copied (a key UNSET on the parent since then
-    * is unset on the child too, not left frozen at its stale value).
-    * Cached: a FRESH child per call would re-derive every session-keyed
-    * planning cache (table metadata, file indexes) on each invocation —
-    * measured ~1.5 s steady-state executor cost vs ~0.25 s once warm.
-    * Weak keys: a retired parent must not pin its child. Conf
-    * replication happens per CALL (cheap, driver-side) so later runtime
-    * changes on the parent still carry over.
-    */
-  private val sortedScanSessions =
-    new java.util.WeakHashMap[SparkSession, (SparkSession, Set[String])]()
 
   /** Inner equi-join of two same-key, same-bucket-count tables. With both
     * sides bucketed this plans as SortMergeJoin with zero Exchange and zero
@@ -124,13 +132,25 @@ object Bucketing {
   def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
                    key: String): DataFrame = {
     val confKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    // the whole replicate+plan step runs under the map lock: the child
-    // is shared per parent, and a concurrent caller mutating its conf
-    // mid-planning would be exactly the cross-query leak this method
-    // exists to prevent
-    sortedScanSessions.synchronized {
-      val (s2, lastCopied) = Option(sortedScanSessions.get(spark))
-        .getOrElse((spark.newSession(), Set.empty[String]))
+    // One flag-scoped child session per parent, with the key set the
+    // last conf replication copied (a key UNSET on the parent since
+    // then is unset on the child too, not left frozen at its stale
+    // value). Kept in the session registry: a FRESH child per call
+    // would re-derive every session-keyed planning cache (table
+    // metadata, file indexes) on each invocation — measured ~1.5 s
+    // steady-state executor cost vs ~0.25 s once warm. Conf
+    // replication happens per CALL (cheap, driver-side) so later
+    // runtime changes on the parent still carry over.
+    val (s2, copied) = graft.ops.Materialize.sessionMemo[
+        (SparkSession, AtomicReference[Set[String]])](
+        spark, "sorted-scan session") { _ =>
+      (spark.newSession(), new AtomicReference(Set.empty[String]))
+    }
+    // the whole replicate+plan step runs under the child's lock: the
+    // child is shared per parent, and a concurrent caller mutating its
+    // conf mid-planning would be exactly the cross-query leak this
+    // method exists to prevent
+    copied.synchronized {
       // newSession starts from the BUILDER-time conf, not the caller's
       // current runtime conf — replicate it so planner-relevant
       // settings (broadcast threshold, AQE, bucketing toggles) carry
@@ -144,11 +164,11 @@ object Bucketing {
       }
       // keys we copied previously that the parent has since UNSET must
       // not linger on the child at their stale value
-      (lastCopied -- parentConf.keySet - confKey - aqeKey).foreach { k =>
+      (copied.get -- parentConf.keySet - confKey - aqeKey).foreach { k =>
         try s2.conf.unset(k)
         catch { case scala.util.control.NonFatal(_) => () }
       }
-      sortedScanSessions.put(spark, (s2, parentConf.keySet))
+      copied.set(parentConf.keySet)
       s2.conf.set(confKey, "true")
       // r8 (ADVICE fix): the child session's conf is shared and
       // mutable across calls, but the lock covers planning only — a

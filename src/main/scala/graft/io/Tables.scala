@@ -57,7 +57,7 @@ object Tables {
       if k.startsWith("spark.sql.parquet.") ||
         k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v" }.sorted
     graft.ops.Materialize.sessionMemo[(StructType, Option[Boolean])](
-        s, readConf.mkString("schema ", ";", ""), p) {
+        s, readConf.mkString("schema ", ";", ""), p) { _ =>
       val schema = s.read.parquet(p).schema
       (schema, schema.find(_.name == "ts").map(_.dataType) match {
         case Some(LongType) if parquetTsNanos(s, p, "ts") => Some(true)

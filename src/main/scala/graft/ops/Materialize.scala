@@ -13,8 +13,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * [[checkpoint]] records each backing RDD in a weak identity registry,
   * so the harness's between-query sweep [[releaseOwned]] frees exactly
   * what graft created — never a caller's own `persist()` or
-  * `localCheckpoint` — along with the stream drains' outputs
-  * ([[ownOutput]]).
+  * `localCheckpoint` — along with the outputs registered through
+  * [[ownOutput]] (stream drains, weight broadcasts). It is the one
+  * owner of state that outlives a query: those, and the session
+  * registry [[sessionMemo]] (schemas, pinned caches, bucketed layouts,
+  * the sorted-scan child session).
   */
 private[graft] object Materialize {
 
@@ -193,7 +196,8 @@ private[graft] object Materialize {
 
   /** Register an output graft created in `spark` that must outlive the
     * call that made it — a stream drain's memory-sink view or parquet
-    * landing ([[graft.stream.Streams.runAvailableNow]]). The next
+    * landing ([[graft.stream.Streams.runAvailableNow]]), a weight
+    * broadcast ([[graft.text.QualityModel.scoreDocsWith]]). The next
     * [[releaseOwned]] of `spark` runs `free` once.
     */
   def ownOutput(spark: SparkSession)(free: SparkSession => Unit): Unit =
@@ -220,7 +224,8 @@ private[graft] object Materialize {
   }
 
   /** A session-registry entry: `value` derived from `source` at its
-    * [[graft.io.Tables.snapshotTag]] `tag`.
+    * [[graft.io.Tables.snapshotTag]] `tag` (both empty for a
+    * source-less entry).
     */
   final case class Entry(name: String, source: String, tag: String,
                          value: Any)
@@ -228,23 +233,25 @@ private[graft] object Materialize {
   private val cache =
     new java.util.HashMap[(SparkSession, String, String), Entry]
 
-  /** Cross-query state: `build` ONCE per (session, name, source) and
-    * reused while `source`'s snapshot tag is unchanged; a tag change
-    * hands the superseded value to `drop` and rebuilds. Entries of
+  /** Cross-query state: `build(tag)` ONCE per (session, name, source)
+    * and reused while `source`'s snapshot tag is unchanged; a tag change
+    * hands the superseded value to `drop` and rebuilds. With no
+    * `source` the tag is constant: built once per session. Entries of
     * stopped sessions are evicted (ADVICE r10): their blocks died with
     * the executors, but the map would keep values and sessions
     * reachable for the life of the JVM.
     */
-  def sessionMemo[T](s: SparkSession, name: String, source: String,
-                     drop: T => Unit = (_: T) => ())(build: => T): T =
+  def sessionMemo[T](s: SparkSession, name: String, source: String = "",
+                     drop: T => Unit = (_: T) => ())(build: String => T): T =
     cache.synchronized {
       cache.keySet.removeIf(_._1.sparkContext.isStopped)
       val key = (s, name, source)
-      val tag = graft.io.Tables.snapshotTag(s, source)
+      val tag =
+        if (source.isEmpty) "" else graft.io.Tables.snapshotTag(s, source)
       val cur = Option(cache.get(key))
       cur.filter(_.tag == tag).map(_.value.asInstanceOf[T]).getOrElse {
         cur.foreach { e => cache.remove(key); drop(e.value.asInstanceOf[T]) }
-        val value = build
+        val value = build(tag)
         cache.put(key, Entry(name, source, tag, value))
         value
       }
@@ -255,7 +262,7 @@ private[graft] object Materialize {
     */
   def sessionCached(s: SparkSession, name: String, source: String)
                    (build: => DataFrame): DataFrame =
-    sessionMemo[DataFrame](s, name, source, release(_)) {
+    sessionMemo[DataFrame](s, name, source, release(_)) { _ =>
       val frame = build
       pin(frame)
       frame

@@ -801,12 +801,12 @@ object AnalyticsQueries {
     * 10⁷⁺-item catalog that exchange (plus the incidence scan and
     * dedup aggregate that feed it) recurs per run for a relation that
     * only changes when the source snapshot does. Here it is laid out
-    * ONCE per source snapshot via [[graft.io.Bucketing.writeBucketed]]
-    * (bucketed by item key, bucket count = the session shuffle width,
-    * snapshot-tagged like [[graft.queries.CoreQueries.bucketedJoin]]'s
-    * layout so regenerated data can never serve a stale layout), and
-    * every subsequent run's two count probes read it with ZERO added
-    * exchange: the bucketed scan reports `HashPartitioning(pk, n)`,
+    * ONCE per source snapshot via [[graft.io.Bucketing.layout]]
+    * (bucketed by item key, bucket count = the pair width, like
+    * [[graft.queries.CoreQueries.bucketedJoin]]'s layouts keyed to the
+    * source snapshot so regenerated data can never serve a stale
+    * layout), and every subsequent run's two count probes read it with
+    * ZERO added exchange: the bucketed scan reports `HashPartitioning(pk, n)`,
     * which — alias-preserved through the rename projection — already
     * satisfies each shuffled-hash join's clustering, so only the
     * interaction-sized pair relation is ever exchanged. Same
@@ -818,17 +818,13 @@ object AnalyticsQueries {
     */
   def itemSimBucketedPersisted(s: SparkSession, d: String): DataFrame = {
     val w = pairWidth(s, d)
-    val db = graft.io.Bucketing.graftDatabase(s)
     // bucket count must equal the pair side's repartition width for
     // the co-partitioned zero-exchange probes, so it is part of the
     // layout identity alongside the source snapshot (width itself
     // scales with the source — [[pairWidth]] — so a re-scaled corpus
     // re-lays the index, exactly like a changed snapshot)
-    val tag = Tables.snapshotTag(s, Tables.path(d, "lineitem")) + s"_$w"
-    val tbl = s"$db.item_counts_$tag"
-    if (!s.catalog.tableExists(tbl))
-      graft.io.Bucketing.writeBucketed(partOrderCounts(s, d), tbl, "pk",
-        w)
+    val tbl = graft.io.Bucketing.layout(s, "item_counts",
+        Tables.path(d, "lineitem"), "pk", w)(partOrderCounts(s, d))
     val bkt = s.table(tbl)
     // half-relation pipeline + post-probe mirror, as in [[itemSim]]
     val pairs = pairsFromBasketsHalf(baskets(s, d))
@@ -1882,13 +1878,10 @@ object AnalyticsQueries {
     * sf0.1 this yields 8 (the measured knee); at the close config
     * min(4, 8) = 4 — exactly the r13 behavior; at the ×100 leg and
     * beyond it saturates `shuffle.partitions`, so production width
-    * stays the deployment's own knob (`spark.graft.pairWidthTargetBytes`
-    * overrides the per-task target).
+    * stays the deployment's own `shuffle.partitions`.
     */
   private def pairWidth(s: SparkSession, d: String): Int = {
     val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = s.conf.getOption("spark.graft.pairWidthTargetBytes")
-      .map(_.toLong).getOrElse(1536L << 10)
     val bytes = Tables.lineitem(s, d)
       .queryExecution.optimizedPlan.stats.sizeInBytes
     // floor 2, not 1: repartition(1, col) degenerates to an untyped
@@ -1896,8 +1889,14 @@ object AnalyticsQueries {
     // co-partitioned SHJ probes and the bucketed layout identity are
     // plan-gated), and width 1 only arises on sub-MB toy corpora
     // where the extra partition is free anyway
-    ((bytes + target - 1) / target).min(BigInt(parts)).max(BigInt(2)).toInt
+    ((bytes + PairWidthTargetBytes - 1) / PairWidthTargetBytes)
+      .min(BigInt(parts)).max(BigInt(2)).toInt
   }
+
+  /** [[pairWidth]]'s compressed lineitem bytes per task (why 1.5 MB:
+    * see there).
+    */
+  private val PairWidthTargetBytes = 1536L << 10
 
   private def incidence(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)

@@ -421,24 +421,20 @@ object CoreQueries {
     * the bucket columns unify under one join column.
     */
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val db = graft.io.Bucketing.graftDatabase(s)
-    // The layout is a WRITE-side artifact keyed to its source DATA
-    // ([[graft.io.Tables.snapshotTag]]): lay out once per source
+    // Each layout is a WRITE-side artifact keyed to its own source
+    // DATA ([[graft.io.Bucketing.layout]]): lay out once per source
     // snapshot, then every query — including bench re-iterations —
     // pays only the recurring exchange-free join, which is exactly the
     // amortization bucketing exists to buy.
-    val tag = Tables.snapshotTag(
-      s, Tables.path(d, "orders"), Tables.path(d, "customer"))
-    val (ot, ct) = (s"$db.orders_bkt_$tag", s"$db.customer_bkt_$tag")
-    if (!s.catalog.tableExists(ot))
-      graft.io.Bucketing.writeBucketed(
-        Tables.orders(s, d).select("o_custkey", "o_totalprice"),
-        ot, "o_custkey", 8)
-    if (!s.catalog.tableExists(ct))
-      graft.io.Bucketing.writeBucketed(
-        Tables.customer(s, d).select(col("c_custkey").as("o_custkey"),
-          col("c_mktsegment")),
-        ct, "o_custkey", 8)
+    val ot = graft.io.Bucketing.layout(s, "orders_bkt",
+        Tables.path(d, "orders"), "o_custkey", 8) {
+      Tables.orders(s, d).select("o_custkey", "o_totalprice")
+    }
+    val ct = graft.io.Bucketing.layout(s, "customer_bkt",
+        Tables.path(d, "customer"), "o_custkey", 8) {
+      Tables.customer(s, d).select(col("c_custkey").as("o_custkey"),
+        col("c_mktsegment"))
+    }
     graft.io.Bucketing.bucketedJoin(s, ot, ct, "o_custkey")
       // order-independent money sum: exact LONG cents per partition,
       // DECIMAL(38,0) only across the partial rows — the two-tier

@@ -135,73 +135,16 @@ object QualityModel {
     * bit-identical scores either way (integer arithmetic, same
     * array; TextSpec pins it), `literalDimMax` is overridable only
     * for that pin.
+    *
+    * Each call above [[LiteralDimMax]] broadcasts `w` afresh and hands
+    * it to [[graft.ops.Materialize.ownOutput]], so the session's next
+    * `releaseOwned` frees it: repeated planning (bench iterations,
+    * streaming restarts) does not accumulate ~8 MB broadcasts until
+    * session end (ADVICE r9). The release UNPERSISTS, not destroys:
+    * executors drop their copies, the driver keeps the value, and a
+    * plan still alive after the sweep re-fetches it on its next run
+    * instead of throwing (ADVICE r10).
     */
-  /** One broadcast per (session, weight-array identity): repeated
-    * planning (bench iterations, streaming restarts) must not
-    * accumulate ~8 MB broadcasts until session end (ADVICE r9).
-    * Scala tuple equality on a Java array is reference equality, so
-    * the key is identity — a caller mutating its array in place and
-    * re-planning gets the OLD broadcast, which is the standard Spark
-    * broadcast contract (broadcast values are immutable-by-contract).
-    * The cache is a BOUNDED LRU ([[BcCacheMax]] entries): a caller
-    * that rebuilds its weight array per call gets a fresh broadcast
-    * each time, but eviction UNPERSISTS the eldest one (async, keep
-    * the driver-side value), so the worst-case EXECUTOR footprint is
-    * capped instead of growing until session end (the failure mode an
-    * unbounded identity cache would reintroduce) — and, unlike
-    * `destroy()`, an evicted-then-reused plan still works: executors
-    * lazily re-fetch an unpersisted broadcast from the driver (ADVICE
-    * r10 — destroy() turned the bound into a SparkException for
-    * callers holding > [[BcCacheMax]] live plans).
-    * [[destroyCachedBroadcasts]] is the eager FULL retire handle for
-    * when the plans themselves are known dead.
-    */
-  private val BcCacheMax = 8
-  private val bcCache = new java.util.LinkedHashMap[
-      (org.apache.spark.sql.SparkSession, Array[Long]),
-      org.apache.spark.broadcast.Broadcast[Array[Long]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          (org.apache.spark.sql.SparkSession, Array[Long]),
-          org.apache.spark.broadcast.Broadcast[Array[Long]]]): Boolean =
-      if (size() > BcCacheMax) {
-        // unpersist, NOT destroy: frees executor copies but keeps the
-        // broadcast usable — a still-live evicted plan re-fetches from
-        // the driver on next execution instead of throwing.
-        try e.getValue.unpersist(false)
-        catch { case scala.util.control.NonFatal(_) => () }
-        true
-      } else false
-  }
-
-  private def cachedBroadcast(s: org.apache.spark.sql.SparkSession,
-                              w: Array[Long])
-  : org.apache.spark.broadcast.Broadcast[Array[Long]] =
-    bcCache.synchronized {
-      val k = (s, w)
-      val cur = bcCache.get(k)
-      if (cur != null) cur
-      else {
-        val bc = s.sparkContext.broadcast(w)
-        bcCache.put(k, bc)
-        bc
-      }
-    }
-
-  /** Destroy every cached weight broadcast and empty the cache — call
-    * when the scoring plans built from them are retired (e.g. at the
-    * end of a probe section or before session shutdown).
-    */
-  def destroyCachedBroadcasts(): Unit = bcCache.synchronized {
-    val it = bcCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
-      try e.getValue.destroy()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
   def scoreDocsWith(df: org.apache.spark.sql.DataFrame,
                     w: Array[Long], b: Long,
                     textCol: String = "text",
@@ -213,7 +156,9 @@ object QualityModel {
         val wLit = typedLit(w.toSeq)
         t => bucketWeight(wLit, t, w.length)
       } else {
-        val bc = cachedBroadcast(df.sparkSession, w)
+        val bc = df.sparkSession.sparkContext.broadcast(w)
+        graft.ops.Materialize.ownOutput(df.sparkSession)(_ =>
+          bc.unpersist(false))
         t => graft.functions.BroadcastWeights.broadcast_weights_get(
           bc, (pmod(xxhash64(t), lit(w.length))).cast("int"))
       }

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
-import graft.functions.{EmbeddingCentroid, VectorFunctions}
+import graft.functions.EmbeddingCentroid
 import graft.functions.VectorFunctions.{array_cosine, array_dot}
 
 /** Native vector expressions (interpreted + codegen paths) and the
@@ -12,24 +11,6 @@ import graft.functions.VectorFunctions.{array_cosine, array_dot}
   */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** A child session with `name` dropped from its function registry,
-    * so only a runtime `register` can make SQL resolve it again (the
-    * suite session's extension installs every native function).
-    */
-  private def sessionWithout(name: String): SparkSession = {
-    val s = spark.newSession()
-    assert(s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name)))
-    s
-  }
-
-  private def assertUnresolved(s: SparkSession, sql: String, name: String): Unit = {
-    val e = intercept[AnalysisException](s.sql(sql).collect())
-    // scalar calls fail as UNRESOLVED_ROUTINE, LATERAL VIEW generators
-    // as ROUTINE_NOT_FOUND
-    assert(Set("UNRESOLVED_ROUTINE", "ROUTINE_NOT_FOUND")(e.getCondition) &&
-      e.getMessage.contains(name), e.getMessage)
-  }
 
   private def vecs = Seq(
     (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
@@ -61,11 +42,11 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("SQL registration exposes array_cosine to spark.sql") {
-    val q = "SELECT array_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c"
-    val s = sessionWithout("array_cosine")
-    assertUnresolved(s, q, "array_cosine")
-    VectorFunctions.register(s)
-    val r = s.sql(q).collect()(0).getDouble(0)
+    // a child session carries the extension's functions, with no
+    // runtime registration
+    val r = spark.newSession()
+      .sql("SELECT array_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
+      .collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
@@ -199,6 +180,21 @@ class FunctionsSpec extends SparkSpec {
     assert(e.getMessage.contains("literal"), e.getMessage)
   }
 
+  test("GraftExtensions: every SQL function checks its argument count") {
+    def wrongArgs(q: String): String = {
+      val e = intercept[AnalysisException](spark.sql(q).collect())
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), e.getMessage)
+      e.getMessage
+    }
+    assert(wrongArgs("SELECT array_dot(array(1D))").contains("array_dot"))
+    assert(wrongArgs("SELECT simhash64(array('a'), 7)").contains("simhash64"))
+    wrongArgs("SELECT misra_gries(c) FROM VALUES ('a') t(c)")
+    // array_l2 is in the same table as the rest of the vector family
+    val l2 = spark.sql("SELECT array_l2(array(0D, 0D), array(3D, 4D))")
+      .head().getDouble(0)
+    assert(l2 === 5.0)
+  }
+
   test("MisraGries: superset of true heavy hitters, bounded undercount") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val toks = docs.select(explode(split(lower(trim(col("text"))), "\\s+"))
@@ -229,9 +225,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("unicode_nfc: SQL registration and codegen path agree with eval") {
     val q = "SELECT unicode_nfc('Café' ) AS n"
-    val s = sessionWithout("unicode_nfc")
-    assertUnresolved(s, q, "unicode_nfc")
-    graft.functions.TextNormFunctions.register(s)
+    val s = spark.newSession()
     val r = s.sql(q).collect()(0)
     assert(r.getString(0) === "Café")
     // wide row forces whole-stage codegen; compare vs interpreted result
@@ -305,11 +299,9 @@ class FunctionsSpec extends SparkSpec {
     val q = """SELECT id, s.pos, s.shingle
       |FROM ts_docs LATERAL VIEW token_shingles(t, 2) s
       |ORDER BY pos""".stripMargin
-    val s = sessionWithout("token_shingles")
+    val s = spark.newSession()
     s.createDataFrame(Seq((7L, "w x y z"))).toDF("id", "t")
       .createOrReplaceTempView("ts_docs")
-    assertUnresolved(s, q, "token_shingles")
-    graft.functions.TokenShingles.register(s)
     val rows = s.sql(q).collect()
     assert(rows.map(_.getString(2)).toSeq === Seq("w x", "x y", "y z"))
   }

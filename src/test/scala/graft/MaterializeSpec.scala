@@ -7,11 +7,13 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.graph.ConnectedComponents
 import graft.ops.Materialize
-import graft.queries.TrainingQueries
+import graft.queries.{CoreQueries, TrainingQueries}
 
 /** The materialization seam: the between-query sweep frees only what
   * graft created, the session cache reuses / refreshes / evicts its
-  * entries, and no other main-source file calls `localCheckpoint`.
+  * entries (bucketed layouts included, which also die with their
+  * context), no other main-source file calls `localCheckpoint` and none
+  * holds a `java.util` map.
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
@@ -109,6 +111,47 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("bucketed layouts: a touched source drops only its own superseded layout") {
+    val dir = tempDir("graft-layout").toFile
+    for (t <- Seq("orders", "customer")) {
+      val dst = new File(dir, s"$t.parquet")
+      Files.copy(new File(s"$sfDir/$t.parquet").toPath, dst.toPath,
+        StandardCopyOption.COPY_ATTRIBUTES)
+      dst.setWritable(true)
+    }
+    def layouts(): Set[String] =
+      if (!spark.catalog.databaseExists("graft_bkt")) Set.empty
+      else spark.catalog.listTables("graft_bkt").collect().map(_.name).toSet
+    val before = layouts()
+    val rows = CoreQueries.bucketedJoin(spark, dir.getPath).collect()
+    val built = layouts() -- before
+    val Seq(orders) = built.filter(_.startsWith("orders_bkt")).toSeq
+    val Seq(customer) = built.filter(_.startsWith("customer_bkt")).toSeq
+    val wh = new File(new java.net.URI(
+      spark.catalog.getDatabase("graft_bkt").locationUri))
+    assert(new File(wh, orders).isDirectory)
+
+    val f = new File(dir, "orders.parquet")
+    assert(f.setLastModified(f.lastModified() + 10000L))
+    assert(CoreQueries.bucketedJoin(spark, dir.getPath).collect() === rows)
+    val relaid = layouts() -- before
+    assert(!relaid.contains(orders), s"superseded layout still in the catalog: $relaid")
+    assert(!new File(wh, orders).exists, "superseded layout still on disk")
+    assert(relaid.count(_.startsWith("orders_bkt")) === 1)
+    assert(relaid.filter(_.startsWith("customer_bkt")) === Set(customer),
+      "an unchanged source was laid out again")
+    assert(new File(wh, customer).isDirectory)
+    // a session sharing the context reuses the layouts, writes none
+    CoreQueries.bucketedJoin(spark.newSession(), dir.getPath)
+    assert(layouts() -- before === relaid)
+  }
+
+  test("bucketed layouts die with their context") {
+    // stopping needs a SparkContext of this probe's own: child JVM
+    val out = childJvm(LayoutLifetimeProbe, sfDir)
+    assert(out.contains("warehouse before-stop=true after-stop=false"), out)
+  }
+
   test("comment stripping sees code, not comments") {
     val src = "val a = \"x//y\" // z.localCheckpoint(\n" +
       "/* a /* nested */ .localCheckpoint( */ val q = '\"'\n" +
@@ -123,6 +166,13 @@ class MaterializeSpec extends SparkSpec {
     // iterative operators free round state through the round loop only
     assert(SourceGuard.mainFilesCalling("Materialize.release(")
       .filter(_.startsWith("graft/graph/")) === Nil)
+  }
+
+  test("only the materialization seam holds a map across queries in main code") {
+    val javaMap = """java\.util\.(?:\{[^}]*)?\b(?:Weak|Linked)?HashMap\b""".r
+    assert(SourceGuard.mainSources.collect {
+      case (f, code) if javaMap.findFirstIn(code).nonEmpty => f
+    } === Seq("graft/ops/Materialize.scala"))
   }
 }
 
@@ -149,5 +199,21 @@ object StoppedSessionProbe {
       s"stopped-after=${Materialize.sessionEntries(s1).size} " +
       s"live=${Materialize.sessionEntries(s2).size}")
     s2.stop()
+  }
+}
+
+/** Child-JVM probe for the layout lifetime test: builds
+  * `q_bucketed_join`'s layouts, stops the session and prints whether
+  * the layouts' warehouse directory exists before and after.
+  */
+object LayoutLifetimeProbe {
+  def main(args: Array[String]): Unit = {
+    val s = GraftSession.local(1, 1)
+    CoreQueries.bucketedJoin(s, args(0)).collect()
+    val wh = new File(new java.net.URI(
+      s.catalog.getDatabase("graft_bkt").locationUri))
+    val before = wh.isDirectory
+    s.stop()
+    println(s"warehouse before-stop=$before after-stop=${wh.exists}")
   }
 }
