@@ -25,8 +25,9 @@ import org.apache.spark.sql.SparkSession
   * only the tail of the build output (observed: last 2000 chars), and
   * rounds 1–2 both recorded `parsed: null` because the full 87-query
   * line (~14 KB with per-iteration detail) started before that window.
-  * `value` still totals ALL queries; the `queries` map carries a fixed
-  * headline subset for trend comparison, and the COMPLETE per-query
+  * `value` still totals ALL queries; the `queries` map carries the
+  * catalog's fixed `headline` subset ([[SparkEntry.QueryDecl]]) for
+  * trend comparison, and the COMPLETE per-query
   * walls + task metrics go to `detail_file` (written in the working
   * directory, i.e. the repo root when run via sbt).
   *
@@ -101,39 +102,7 @@ object Bench {
     else String.format(java.util.Locale.ROOT, "%.6f",
       java.lang.Double.valueOf(d))
 
-  /** Fixed headline subset for the compact stdout line: the scans,
-    * shuffles, and joins that dominate cost plus one representative per
-    * operator family. Fixed (not "top-k slowest") so the per-round
-    * trend in BENCH_r{N}.json compares the same queries every round.
-    */
-  private val headline: Seq[String] = Seq(
-    "q_curate", "q_dedup_exact", "q_dedup_ngram", "q_dedup_minhash",
-    "q_dedup_simhash", "q_dedup_clusters", "q_dedup_incremental",
-    "q_emb_neardup_lsh", "q_knn_brute", "q_knn_ivf", "q_kmeans_cells",
-    "q_rrf_fusion", "q_contamination", "q_centroid", "q_tfidf",
-    "q_lang_id", "q_token_counts", "q_chunks", "q_pack", "q_agg_sum",
-    "q_join_salted", "q_star_join", "q_window", "q_sessionize",
-    "q_events_hourly", "q_unpivot", "q_subquery", "q_topk_group")
-
   private def jsonStr(s: String): String = Json.str(s)
-
-  /** Physical-form DUPLICATES of a core query (VERDICT r12 #8): same
-    * relational semantics (most share the core row's oracle verbatim),
-    * alternate plan for a different scale regime — salted vs plain,
-    * bucketed/persisted vs broadcast, prod-config vs capped anchor,
-    * transformWithState vs session_window. They must stay in the suite
-    * (each is plan-gated evidence), but the compact line now carries
-    * `core_sec`/`variant_sec` subtotals so the 2× gate's trend keeps
-    * measuring ONE semantic surface as more dual forms land.
-    * Incremental legs (q_*_incr, q_curate_v2) are NOT variants — an
-    * incremental maintenance pass is its own capability, not a
-    * re-spelling.
-    */
-  private val prodVariants: Set[String] = Set(
-    "q_agg_salted", "q_asof_native", "q_item_sim_bucketed",
-    "q_item_sim_bucketed_persisted", "q_emb_neardup_lsh_prod",
-    "q_semdedup_prod", "q_dedup_containment_prod",
-    "q_stream_sessions_tws")
 
   val detailFile = "bench_detail.json"
 
@@ -163,8 +132,8 @@ object Bench {
     val contention =
       if (cpuMsTotal > 0) runMsTotal.toDouble / cpuMsTotal else Double.NaN
     val byName = results.toMap
-    val qs = headline.flatMap(k => byName.get(k).map(r =>
-        s"${jsonStr(k)}:${jsonNum(r.best)}"))
+    val qs = SparkEntry.catalog.filter(_.headline).flatMap(q =>
+        byName.get(q.name).map(r => s"${jsonStr(q.name)}:${jsonNum(r.best)}"))
       .mkString("{", ",", "}")
     // single source of truth for failures; line and detail derive from
     // it. The LINE counts only HARD failures (no iteration succeeded):
@@ -233,9 +202,10 @@ object Bench {
         s"${jsonStr(k)}:${jsonNum(r.best)}" }.mkString("{", ",", "}")
       s""","calib":{"cpus":$ccpus,"sec":${jsonNum(csec)},"queries":$cqs}"""
     }.getOrElse("")
+    val variants = SparkEntry.catalog.filter(_.variant).map(_.name).toSet
     val variantSec = results.collect {
-      case (k, r) if prodVariants(k) => r.best }.sum
-    val nVariants = results.count(r => prodVariants(r._1))
+      case (k, r) if variants(k) => r.best }.sum
+    val nVariants = results.count(r => variants(r._1))
     val subtotals =
       s""""core_sec":${jsonNum(total - variantSec)},""" +
       s""""variant_sec":${jsonNum(variantSec)},"n_variants":$nVariants,"""
@@ -312,11 +282,10 @@ object Bench {
         Harness.stop(spark)
         val cs = Harness.session(4, 4, Nil)
         val cm = Harness.listen(cs)
-        val cres = headline
-          .flatMap(k => SparkEntry.queries.get(k).map(k -> _))
-          .map { case (name, fn) =>
-            name -> runQuery(cs, cm, iters = 2)(() => Harness.noop(fn(cs, st.sfDir)))
-          }
+        val cres = SparkEntry.catalog.filter(_.headline).map { q =>
+          q.name -> runQuery(cs, cm, iters = 2)(() =>
+            Harness.noop(q.build(cs, st.sfDir)))
+        }
         Harness.stop(cs)
         Some((4, cres))
       }

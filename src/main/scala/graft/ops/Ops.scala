@@ -415,10 +415,4 @@ object Ops {
       .withColumn("n_overlap", col("__n_start") - col("__n_end"))
       .drop(lHi + "__k", lLo + "__k", "__n_start", "__n_end")
   }
-
-  /** §2.7: set ops are built-ins; exposed for surface completeness. */
-  def setMinus(left: DataFrame, right: DataFrame): DataFrame = left.except(right)
-  def setIntersect(left: DataFrame, right: DataFrame): DataFrame = left.intersect(right)
-  def setUnionDistinct(left: DataFrame, right: DataFrame): DataFrame =
-    left.union(right).distinct()
 }

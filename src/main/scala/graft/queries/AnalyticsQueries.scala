@@ -1839,23 +1839,6 @@ object AnalyticsQueries {
           .as("assortativity"))
   }
 
-
-  /** Per-order distinct-part basket arrays. The trailing round-robin
-    * `repartition` is load-bearing: the basket shuffle is small (~MBs
-    * of keys+arrays), so AQE coalesces its read side to one or two
-    * partitions — and the n²-per-basket pair EXPLOSION downstream
-    * would then run serially on them (measured: 33-task / 6 s wall
-    * q_item_sim at sf0.1 vs ~2 s spread). Rebalancing model-light
-    * rows BEFORE a fan-out compute stage is the general 100 TB shape;
-    * the explicit partition count pins it against coalescing.
-    */
-  /** Raw (order, part) incidence rows, hash-partitioned by order —
-    * THE shared exchange under the whole basket family. Every
-    * downstream need (basket arrays, per-part order counts, order
-    * count) derives from this one shuffle via ReuseExchange; counts
-    * deliberately do NOT go through the basket arrays (see
-    * [[partOrderCounts]]).
-    */
   /** Scale-adaptive width for the basket family's CPU-dense pinned
     * exchanges (r14, VERDICT r13 #1). The pins exist because AQE
     * sizes shuffles by BYTES and the pair stages are CPU-dense per
@@ -1898,6 +1881,13 @@ object AnalyticsQueries {
     */
   private val PairWidthTargetBytes = 1536L << 10
 
+  /** Raw (order, part) incidence rows, hash-partitioned by order —
+    * THE shared exchange under the whole basket family. Every
+    * downstream need (basket arrays, per-part order counts, order
+    * count) derives from this one shuffle via ReuseExchange; counts
+    * deliberately do NOT go through the basket arrays (see
+    * [[partOrderCounts]]).
+    */
   private def incidence(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))

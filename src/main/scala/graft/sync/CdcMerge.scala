@@ -42,12 +42,4 @@ object CdcMerge {
     * `Task_1_sync_bls_files.py:189-198`).
     */
   val deleteActions: Set[String] = Set("delete")
-
-  /** Keys to fetch, by [[fetchActions]]. */
-  def toFetch(merged: DataFrame): DataFrame =
-    merged.filter(col("action").isin(fetchActions.toSeq: _*)).select("name")
-
-  /** Keys to delete, by [[deleteActions]]. */
-  def toDelete(merged: DataFrame): DataFrame =
-    merged.filter(col("action").isin(deleteActions.toSeq: _*)).select("name")
 }

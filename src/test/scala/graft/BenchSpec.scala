@@ -69,6 +69,10 @@ class BenchSpec extends SparkSpec {
       calib = Some((4, calibQs)))
     assert(line.contains(""""calib":{"cpus":4,"sec":1.000000,"n":2}"""), line)
     assert(line.length < 1300, s"line with calib: ${line.length}")
+    assert(line.contains(""""n_variants":8"""), line)
+    val headline = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(line).get.group(1)
+    assert(""""(q_\w+)":""".r.findAllMatchIn(headline).map(_.group(1)).toSeq ===
+      SparkEntry.catalog.filter(_.headline).map(_.name))
     assert(detailJson.contains(""""calib":{"cpus":4,"sec":1.000000,"queries":{"q_agg_sum":0.500000,"q_curate":0.500000}}"""))
     // no calib -> fields absent (close-config runs stay byte-compatible);
     // match the exact key shape — q_calibration is a query name

@@ -29,11 +29,11 @@ class CdcMergeSpec extends SparkSpec {
   }
 
   test("fetch set = insert ∪ update; delete set = stored ∖ remote") {
-    val merged = CdcMerge.plan(remote, stored)
-    assert(CdcMerge.toFetch(merged).collect().map(_.getString(0)).toSet ===
-      Set("pr.data.0.Current", "pr.new_file"))
-    assert(CdcMerge.toDelete(merged).collect().map(_.getString(0)).toSet ===
-      Set("pr.retired"))
+    val rows = CdcMerge.plan(remote, stored).collect()
+    def keys(actions: Set[String]) =
+      rows.filter(r => actions(r.getString(1))).map(_.getString(0)).toSet
+    assert(keys(CdcMerge.fetchActions) === Set("pr.data.0.Current", "pr.new_file"))
+    assert(keys(CdcMerge.deleteActions) === Set("pr.retired"))
   }
 
   test("partition identity: every key lands in exactly one action") {

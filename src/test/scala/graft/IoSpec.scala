@@ -154,9 +154,11 @@ class IoSpec extends SparkSpec {
     val actions = merged.collect().map(x => x.getString(0) -> x.getString(1)).toMap
     assert(actions === Map("f1" -> "insert", "f2" -> "skip", "f3" -> "delete"))
     // apply deletes
+    val toDelete = actions.collect {
+      case (name, a) if CdcMerge.deleteActions(a) => name }.toSet
     val deletePaths = Catalog.listFiles(spark, stored.toString)
-      .join(CdcMerge.toDelete(merged), Seq("name"))
-      .select("path").collect().map(_.getString(0)).toSeq
+      .collect().filter(r => toDelete(r.getAs[String]("name")))
+      .map(_.getAs[String]("path")).toSeq
     Sinks.deletePaths(spark, deletePaths)
     assert(!Files.exists(stored.resolve("f3")))
     assert(Files.exists(stored.resolve("f2")))

@@ -161,14 +161,6 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("set ops: except/intersect/union-distinct") {
-    val a = Seq(1, 2, 3, 3).toDF("k")
-    val b = Seq(3, 4).toDF("k")
-    assert(Ops.setMinus(a, b).collect().map(_.getInt(0)).toSet === Set(1, 2))
-    assert(Ops.setIntersect(a, b).collect().map(_.getInt(0)).toSet === Set(3))
-    assert(Ops.setUnionDistinct(a, b).collect().map(_.getInt(0)).toSet === Set(1, 2, 3, 4))
-  }
-
   test("bloomPrunedJoin is result-identical to the plain equi-join") {
     val fact = (0 until 2000).map(i => (i.toLong, (i % 500).toLong))
       .toDF("id", "key")
