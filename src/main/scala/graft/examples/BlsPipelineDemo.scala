@@ -14,7 +14,6 @@ import graft.sync.CdcMerge
 object BlsPipelineDemo {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(4, 4)
-    import spark.implicits._
 
     val blsTsv = Seq(
       "series_id        \tyear\tperiod\t       value\tfootnote_codes",
@@ -54,11 +53,12 @@ object BlsPipelineDemo {
       Reports.combinedReport(bls, pop).show(truncate = false)
 
       println("== CDC merge plan ==")
-      val remote = Seq(("pr.data.0.Current", "aaa"), ("pr.class", "ccc"),
-        ("pr.new_file", "ddd")).toDF("name", "hash")
-      val stored = Seq(("pr.data.0.Current", "bbb"), ("pr.class", "ccc"),
-        ("pr.retired", "eee")).toDF("name", "hash")
-      CdcMerge.plan(remote, stored).orderBy("name").show(truncate = false)
+      val remote = Map("pr.data.0.Current" -> "aaa", "pr.class" -> "ccc",
+        "pr.new_file" -> "ddd")
+      val stored = Map("pr.data.0.Current" -> "bbb", "pr.class" -> "ccc",
+        "pr.retired" -> "eee")
+      CdcMerge.plan(remote, stored).foreach(d => println(
+        s"${d.name}\t${d.action}\t${d.remoteHash.orNull}\t${d.storedHash.orNull}"))
     } finally {
       Files.deleteIfExists(blsPath)
       Files.deleteIfExists(popPath)

@@ -20,7 +20,7 @@ import java.net.{HttpURLConnection, URI}
   *
   * Driver-side, catalog-sized use only (one index page + a bounded
   * fetch set); bulk data movement belongs to the distributed
-  * binaryFile read of [[Catalog.listFiles]]. `sleep` is injectable so
+  * binaryFile read of [[Catalog.hashFiles]]. `sleep` is injectable so
   * specs can assert the backoff schedule without wall-clock waits.
   */
 object Http {

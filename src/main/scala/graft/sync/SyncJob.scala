@@ -1,82 +1,190 @@
 package graft.sync
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.io.{Catalog, Sinks}
 
 /** End-to-end catalog sync: mirror `srcDir` into `dstDir` — the whole of
   * the reference's `sync_files()` (`lambda_functions/sync_and_fetch.py:
-  * 60-120` and `Task_1_sync_bls_files.py:150-198`) as one job:
+  * 60-120` and `Task_1_sync_bls_files.py:150-198`):
   *
-  *  1. hash both catalogs (distributed binary read + md5 per file),
-  *  2. one full-outer CDC plan ([[CdcMerge.plan]]) classifying every
-  *     key insert / update / skip / delete,
-  *  3. apply: copy insert+update, delete orphans.
+  *  1. list both sides on the driver ([[Catalog.listVisible]]);
+  *  2. quick check: reuse a key's md5 from the destination manifest
+  *     while that side's (length, mtime) still equals the manifest row,
+  *     and hash every other file of either side in ONE distributed
+  *     `binaryFile` scan ([[Catalog.hashFiles]]; none when every file
+  *     is vouched for);
+  *  3. classify every key insert / update / skip / delete
+  *     ([[CdcMerge.plan]], on the driver);
+  *  4. apply: copy insert+update (each to a hidden temp name, then
+  *     renamed into place), delete orphans, rewrite the manifest.
   *
-  * The apply loop is driver-side over the (small) action sets, exactly
-  * like the reference's per-key HTTP loop — the SCALE-CRITICAL part,
-  * hashing both catalogs, is distributed (one task per file). A 100
-  * M-object sync would swap step 3 for a distributed binaryFile
-  * read→write keyed by the fetch set; the plan side needs no change.
+  * Listing, decision and apply run on the driver over keys, like the
+  * reference's per-key loop; hashing, the part that reads content, is
+  * distributed (one task per file). A call costs O(changed files): with
+  * nothing changed it reads the two listings and the manifest, and runs
+  * no Spark job. The manifest plays
+  * the part of the reference's stored ETag, and has its limit: an edit
+  * that keeps a file's length and mtime (an mtime restored by hand, or
+  * a same-length rewrite within one mtime tick of the hashed version)
+  * goes unseen until that file's status changes. Deleting the manifest
+  * forces a full re-hash on the next call; a missing or unparsable one
+  * means the same. One sync at a time per destination.
   */
 object SyncJob {
 
-  /** [[Catalog.listFiles]] keyed on the path relative to `dir`; a
-    * missing or empty dir (the destination on first sync) is an empty
-    * catalog.
+  /** The destination manifest: one row per key mirrored by the last
+    * call. The dot prefix hides it from [[Catalog.listVisible]],
+    * `binaryFile`, the file stream source and Hadoop input formats.
     */
-  def catalogOrEmpty(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a sync source/destination mutates between passes — drop any
-    // cached file listing for this path or pass 2 reads ghosts of
-    // files pass 1 deleted
-    spark.catalog.refreshByPath(dir)
-    // key on the path RELATIVE to dir, not the basename: the binary
-    // listing recurses into subdirectories, where a basename key
-    // both reconstructs the wrong copy path ($dir/<basename>) and
-    // collides for same-named files in different subdirs — the
-    // relative path round-trips to the true location on either side
-    val qualified = fs.makeQualified(p).toString
-    Catalog.listFiles(spark, dir)
-      .withColumn("name", expr(s"substring(path, ${qualified.length + 2})"))
-  }
+  val ManifestName = ".graft_sync_manifest"
 
-  /** Plan + apply one sync; returns the merged plan
-    * `(name, action, remote_hash, stored_hash)` for reporting (the
-    * reference prints per-file outcomes; callers aggregate by action).
-    *
-    * The plan is materialized ONCE before any action runs: the apply
-    * step mutates the very directory the plan's scan lists, so handing
-    * back the lazy plan would re-read deleted files on the caller's
-    * next action. The materialized plan is catalog-sized (keys, not
-    * content) — the same driver-side footprint as the reference's
-    * per-file decision dict.
+  private val ManifestHeader = "graft-sync-manifest 1"
+
+  /** A manifest row: the key's md5 and the (length, mtime) of its
+    * source and destination files when that md5 was taken.
+    */
+  private final case class Kept(md5: String, src: (Long, Long), dst: (Long, Long))
+
+  /** Plan + apply one sync; returns the plan
+    * `(name, action, remote_hash, stored_hash)` as a local relation, so
+    * reading it runs no job (the reference prints per-file outcomes;
+    * callers aggregate by action).
     */
   def run(spark: SparkSession, srcDir: String, dstDir: String): DataFrame = {
-    val merged = CdcMerge.plan(
-      catalogOrEmpty(spark, srcDir), catalogOrEmpty(spark, dstDir))
-    val rows = merged.collect()
-    def keys(actions: Set[String]) =
-      rows.filter(r => actions(r.getString(1))).map(_.getString(0))
-    val fetch = keys(CdcMerge.fetchActions)
-    val del = keys(CdcMerge.deleteActions)
     val conf = spark.sparkContext.hadoopConfiguration
     // resolve each side's OWN FileSystem — src and dst may live on
     // different schemes (s3a → file, hdfs → s3a, ...)
     val srcFs = new Path(srcDir).getFileSystem(conf)
     val dstFs = new Path(dstDir).getFileSystem(conf)
+    val manifest = new Path(dstDir, ManifestName)
+    val src = Catalog.listVisible(srcDir, conf)
+    val dst = Catalog.listVisible(dstDir, conf)
+    val kept = readManifest(dstFs, manifest)
+    def vouched(f: Catalog.Entry, side: Kept => (Long, Long)) =
+      kept.get(f.name).exists(k => side(k) == ((f.length, f.modTime)))
+    val toHash = src.filterNot(vouched(_, _.src)) ++ dst.filterNot(vouched(_, _.dst))
+    // path → (md5, status the content was read under); with nothing to
+    // hash, not even a plan is built
+    val hashed = if (toHash.isEmpty) Map.empty[String, (String, (Long, Long))]
+      else Catalog.hashFiles(spark, toHash.map(_.path))
+        .select(col("path"), col("hash"), col("length"), unix_millis(col("mod_time")))
+        .collect()
+        .map(r => r.getString(0) -> (r.getString(1) -> ((r.getLong(2), r.getLong(3)))))
+        .toMap
+    // name → (md5, status); a file that vanished before its hash is absent
+    def side(files: Seq[Catalog.Entry], status: Kept => (Long, Long)) =
+      files.flatMap { f =>
+        if (vouched(f, status)) Some(f.name -> (kept(f.name).md5 -> ((f.length, f.modTime))))
+        else hashed.get(f.path).map(f.name -> _)
+      }.toMap
+    val srcSide = side(src, _.src)
+    val dstSide = side(dst, _.dst)
+    val plan = CdcMerge.plan(srcSide.map { case (n, (h, _)) => n -> h },
+      dstSide.map { case (n, (h, _)) => n -> h })
+
     dstFs.mkdirs(new Path(dstDir))
-    fetch.foreach { name =>
-      org.apache.hadoop.fs.FileUtil.copy(
-        srcFs, new Path(s"$srcDir/$name"), dstFs, new Path(s"$dstDir/$name"),
-        false, true, conf)
+    val copied = plan.filter(d => CdcMerge.fetchActions(d.action)).map { d =>
+      val target = new Path(s"$dstDir/${d.name}")
+      d.name -> moveIntoPlace(dstFs, target) { tmp =>
+        FileUtil.copy(srcFs, new Path(s"$srcDir/${d.name}"), unchecked(dstFs),
+          tmp, false, true, conf)
+      }
+    }.toMap
+    Sinks.deletePaths(spark, plan.filter(d => CdcMerge.deleteActions(d.action))
+      .map(d => s"$dstDir/${d.name}"))
+    // every source key is now mirrored: skipped ones under the status
+    // they were checked with, copied ones under their renamed status.
+    // The source status is the one the md5 was taken under, so a source
+    // edited mid-sync is hashed again next call.
+    val next = srcSide.map { case (n, (h, s)) =>
+      n -> Kept(h, s, copied.getOrElse(n, dstSide(n)._2)) }
+    if (next != kept) writeManifest(dstFs, manifest, next)
+
+    spark.createDataFrame(plan.map(d => Row(d.name, d.action,
+      d.remoteHash.orNull, d.storedHash.orNull)).asJava, PlanSchema)
+  }
+
+  private val PlanSchema = StructType(Seq("name", "action", "remote_hash",
+    "stored_hash").map(StructField(_, StringType)))
+
+  /** Writes `target` through a hidden temp file in its directory, then
+    * renames it into place, so a reader listing the directory never
+    * sees a half-written file. Returns the (length, mtime) `target`
+    * has after the rename. The rename goes through `fs`, which drops a
+    * checksum file an older copy of `target` left.
+    */
+  private def moveIntoPlace(fs: FileSystem, target: Path)(write: Path => Unit)
+  : (Long, Long) = {
+    val tmp = tempPath(target)
+    try {
+      write(tmp)
+      // a rename onto an existing file fails on some file systems
+      // (HDFS): drop the old copy and retry once
+      if (!fs.rename(tmp, target) &&
+          !(fs.delete(target, false) && fs.rename(tmp, target)))
+        throw new java.io.IOException(s"cannot rename $tmp to $target")
+    } finally fs.delete(tmp, false)
+    val st = fs.getFileStatus(target)
+    (st.getLen, st.getModificationTime)
+  }
+
+  /** `fs` without client-side checksum files. The sync writes the mirror
+    * and the manifest through it: a `.crc` file beside a mirrored file
+    * fails every later read of that file once it is edited out of band,
+    * and the sync must read such a file to see the edit.
+    */
+  private def unchecked(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case f => f
+  }
+
+  /** The hidden temp name `target` is written under before its rename. */
+  private[graft] def tempPath(target: Path): Path =
+    new Path(target.getParent,
+      s".${target.getName}.${java.util.UUID.randomUUID()}.graft_tmp")
+
+  /** The manifest's rows by key; empty (a full re-hash) when the file is
+    * missing or does not parse.
+    */
+  private def readManifest(fs: FileSystem, manifest: Path): Map[String, Kept] =
+    if (!fs.exists(manifest)) Map.empty
+    else {
+      val in = fs.open(manifest)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val lines = text.split("\n", -1)
+      try {
+        require(lines.head == ManifestHeader && lines.last.isEmpty)
+        lines.slice(1, lines.length - 1).map { l =>
+          val Array(md5, sl, sm, dl, dm, name) = l.split("\t", 6)
+          name -> Kept(md5, (sl.toLong, sm.toLong), (dl.toLong, dm.toLong))
+        }.toMap
+      } catch { case NonFatal(_) => Map.empty }
     }
-    Sinks.deletePaths(spark, del.toSeq.map(n => s"$dstDir/$n"))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq), merged.schema)
+
+  /** Rewrites the manifest: one tab-separated row per key, `md5, src
+    * length, src mtime, dst length, dst mtime, name`, the relative name
+    * last so a tab in it survives. A name with a line break is left
+    * out (that key is hashed on every call).
+    */
+  private def writeManifest(fs: FileSystem, manifest: Path,
+                            rows: Map[String, Kept]): Unit = {
+    val body = rows.toSeq.sortBy(_._1).collect {
+      case (n, k) if !n.exists(c => c == '\n' || c == '\r') =>
+        s"${k.md5}\t${k.src._1}\t${k.src._2}\t${k.dst._1}\t${k.dst._2}\t$n\n"
+    }.mkString(ManifestHeader + "\n", "", "")
+    moveIntoPlace(fs, manifest) { tmp =>
+      val out = unchecked(fs).create(tmp, true)
+      try out.write(body.getBytes(UTF_8)) finally out.close()
+    }
   }
 
   /** The reference's FULL loop (`Task_1_sync_bls_files.py:36-74,
@@ -97,7 +205,7 @@ object SyncJob {
     * files" early-exit behavior.
     *
     * Driver-side per-file loop like the reference; the staged dir then
-    * flows through the DISTRIBUTED hash/diff. `sleep` is injectable
+    * flows through [[run]]. `sleep` is injectable
     * for specs (assert the backoff schedule, no wall-clock waits).
     */
   def runHttp(spark: SparkSession, indexUrl: String, dstDir: String,
@@ -160,7 +268,7 @@ object SyncJob {
               val dstFs = stored.getFileSystem(
                 spark.sparkContext.hadoopConfiguration)
               if (dstFs.exists(stored)) {
-                org.apache.hadoop.fs.FileUtil.copy(dstFs, stored, fs,
+                FileUtil.copy(dstFs, stored, fs,
                   new Path(staging, name), false, true,
                   spark.sparkContext.hadoopConfiguration)
                 System.err.println(s"[graft.SyncJob] WARNING: download " +

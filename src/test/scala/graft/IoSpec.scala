@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -47,6 +49,18 @@ class IoSpec extends SparkSpec {
     val listed = names(files.select("name"))
     assert(listed === Seq("a", "b.txt"))
     assert(names(files.select("name", "hash")) === listed)
+    // the driver-side listing sees exactly what binaryFile reads, hidden
+    // names at every depth included
+    for (f <- Seq("sub/c", "sub/.d", "sub/_e", "_hidden/f", ".dot/g",
+        "_k=1/h", "sub/i._COPYING_", "sub/.j.parquet.0.graft_tmp")) {
+      Files.createDirectories(dir.resolve(f).getParent)
+      Files.writeString(dir.resolve(f), f)
+    }
+    val visible = Catalog.listVisible(dir.toString,
+      spark.sparkContext.hadoopConfiguration)
+    assert(visible.map(_.name).sorted === Seq("_k=1/h", "a", "b.txt", "sub/c"))
+    assert(visible.map(_.path).sorted.toSeq === Catalog.listFiles(spark, dir.toString)
+      .select("path").collect().map(_.getString(0)).sorted.toSeq)
   }
 
   test("listFiles: a missing directory is an empty catalog") {
@@ -66,10 +80,28 @@ class IoSpec extends SparkSpec {
     assert(readSchema(files.select("name", "length", "mod_time")) ===
       Seq(Set("path", "length", "modificationTime")))
     assert(readSchema(files.select("name", "hash")) === Seq(Set("path", "content")))
-    // the sync's catalog scan: a relative-path key and the content hash
-    import graft.sync.SyncJob
-    assert(readSchema(SyncJob.catalogOrEmpty(spark, dir.toString)
-      .select("name", "hash")) === Seq(Set("path", "content")))
+    // the sync's hash scan of named files reads their content and status
+    val path = Catalog.listVisible(dir.toString,
+      spark.sparkContext.hadoopConfiguration).map(_.path)
+    assert(readSchema(Catalog.hashFiles(spark, path).select("path", "hash")) ===
+      Seq(Set("path", "content")))
+    assert(readSchema(Catalog.hashFiles(spark, path)) ===
+      Seq(Set("path", "length", "modificationTime", "content")))
+  }
+
+  test("hashFiles: hashes exactly the named files, glob characters literal") {
+    val dir = tempDir("named")
+    for (n <- Seq("a[1].txt", "b{x,y}.txt", "c*.txt", "c1.txt", "d e.txt"))
+      Files.writeString(dir.resolve(n), n)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val listed = Catalog.listVisible(dir.toString, conf)
+    val named = listed.filter(_.name != "c1.txt")
+    val got = Catalog.hashFiles(spark, named.map(_.path))
+      .select("path", "hash").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    assert(got === named.map(f => f.path -> md5(f.name)).toMap)
+    assert(Catalog.hashFiles(spark, Nil).count() === 0)
   }
 
   test("listFiles: a length filter drops a file before its content is read") {
@@ -148,14 +180,13 @@ class IoSpec extends SparkSpec {
     Files.writeString(remote.resolve("f2"), "same")
     Files.writeString(stored.resolve("f2"), "same")
     Files.writeString(stored.resolve("f3"), "retired")
-    val r = Catalog.listFiles(spark, remote.toString).select("name", "hash")
-    val s = Catalog.listFiles(spark, stored.toString).select("name", "hash")
-    val merged = CdcMerge.plan(r, s)
-    val actions = merged.collect().map(x => x.getString(0) -> x.getString(1)).toMap
+    def hashes(dir: java.nio.file.Path) = Catalog.listFiles(spark, dir.toString)
+      .select("name", "hash").collect().map(x => x.getString(0) -> x.getString(1)).toMap
+    val merged = CdcMerge.plan(hashes(remote), hashes(stored))
+    val actions = merged.map(d => d.name -> d.action).toMap
     assert(actions === Map("f1" -> "insert", "f2" -> "skip", "f3" -> "delete"))
     // apply deletes
-    val toDelete = actions.collect {
-      case (name, a) if CdcMerge.deleteActions(a) => name }.toSet
+    val toDelete = merged.filter(d => CdcMerge.deleteActions(d.action)).map(_.name).toSet
     val deletePaths = Catalog.listFiles(spark, stored.toString)
       .collect().filter(r => toDelete(r.getAs[String]("name")))
       .map(_.getAs[String]("path")).toSeq
@@ -215,6 +246,191 @@ class IoSpec extends SparkSpec {
     val plan2 = SyncJob.run(spark, src.toString, dst.toString)
       .collect().map(_.getString(1)).toSet
     assert(plan2 === Set("skip"))
+  }
+
+  /** The full-hash plan `(name, action, remote_hash, stored_hash)`:
+    * both sides md5'd by a whole-directory read ([[Catalog.listFiles]]),
+    * keyed on the path relative to each directory.
+    */
+  private def fullHashPlan(src: java.nio.file.Path, dst: java.nio.file.Path) = {
+    def hashes(d: java.nio.file.Path) = {
+      val root = new org.apache.hadoop.fs.Path(d.toString)
+      val prefix = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(root).toString + "/"
+      Catalog.listFiles(spark, d.toString).select("path", "hash").collect()
+        .map(r => r.getString(0).stripPrefix(prefix) -> r.getString(1)).toMap
+    }
+    CdcMerge.plan(hashes(src), hashes(dst))
+      .map(d => (d.name, d.action, d.remoteHash.orNull, d.storedHash.orNull))
+  }
+
+  private def syncPlan(src: java.nio.file.Path, dst: java.nio.file.Path) =
+    graft.sync.SyncJob.run(spark, src.toString, dst.toString).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+
+  /** Relative path → content of every file a catalog lists under `d`. */
+  private def visibleTree(d: java.nio.file.Path): Map[String, String] =
+    Catalog.listVisible(d.toString, spark.sparkContext.hadoopConfiguration)
+      .map(f => f.name -> Files.readString(d.resolve(f.name))).toMap
+
+  /** A same-length edit moves the mtime a second on, as any edit after
+    * the hashed version's mtime tick does; an edit inside that tick is
+    * the quick check's limit (see the test pinning it).
+    */
+  private def rewriteSameLength(p: java.nio.file.Path, content: String): Unit = {
+    val before = Files.getLastModifiedTime(p).toMillis
+    Files.writeString(p, content)
+    Files.setLastModifiedTime(p,
+      java.nio.file.attribute.FileTime.fromMillis(before + 1000))
+  }
+
+  test("SyncJob manifest: missing, corrupt and stale manifests give the full-hash plan") {
+    import graft.sync.SyncJob
+    val src = tempDir("mf_src")
+    val dst = tempDir("mf_dst")
+    val manifest = dst.resolve(SyncJob.ManifestName)
+    Seq("a" -> "alpha", "b" -> "beta", "c" -> "gamma", "d" -> "delta")
+      .foreach { case (n, v) => Files.writeString(src.resolve(n), v) }
+    assert(syncPlan(src, dst).map(_._2).toSet === Set("insert"))
+    assert(Files.exists(manifest))
+    // the sync's plan equals the full-hash plan; returns the sync's jobs
+    def check(expected: Map[String, String]): Int = {
+      val want = fullHashPlan(src, dst)
+      val (got, jobs) = jobsDuring(syncPlan(src, dst))
+      assert(got === want)
+      assert(got.map(r => r._1 -> r._2).toMap === expected)
+      assert(visibleTree(dst) === visibleTree(src))
+      jobs
+    }
+    // stale: dst edited out-of-band with a new length, dst edited with
+    // the same length and a new mtime, dst deleted, src edited
+    Files.writeString(dst.resolve("a"), "ALPHA!")
+    rewriteSameLength(dst.resolve("b"), "BETA")
+    Files.delete(dst.resolve("c"))
+    Files.writeString(src.resolve("d"), "delta v2")
+    check(Map("a" -> "update", "b" -> "update", "c" -> "insert", "d" -> "update"))
+    // missing: a full re-hash of both sides, the same plan
+    Files.delete(manifest)
+    Files.writeString(dst.resolve("a"), "edited")
+    assert(check(Map("a" -> "update", "b" -> "skip", "c" -> "skip",
+      "d" -> "skip")) === 1, "one hash scan of all 8 files")
+    // corrupt: unparsable header, then a row with a bad field
+    for (junk <- Seq("not a manifest\n",
+        "graft-sync-manifest 1\nxx\tNaN\t1\t2\t3\ta\n")) {
+      Files.writeString(manifest, junk)
+      Files.writeString(dst.resolve("a"), s"edited under $junk".take(40))
+      check(Map("a" -> "update", "b" -> "skip", "c" -> "skip", "d" -> "skip"))
+    }
+  }
+
+  test("SyncJob: seeded insert/edit/delete steps match the full-hash plan every step") {
+    val src = tempDir("eq_src")
+    val dst = tempDir("eq_dst")
+    val rng = new scala.util.Random(20240512)
+    val names = Seq("a", "b", "c", "sub/d", "sub/e", "sub/deep/f", "g h")
+    def content() = rng.alphanumeric.take(1 + rng.nextInt(12)).mkString
+    var seen = Set.empty[(String, String)]
+    for (step <- 1 to 30) {
+      val side = if (rng.nextDouble() < 0.7) src else dst
+      val n = names(rng.nextInt(names.size))
+      val p = side.resolve(n)
+      val op =
+        if (!Files.exists(p)) "insert"
+        else Seq("edit", "edit_same_length", "delete")(rng.nextInt(3))
+      op match {
+        case "insert" =>
+          Files.createDirectories(p.getParent)
+          Files.writeString(p, content())
+        case "edit" => Files.writeString(p, Files.readString(p) + content())
+        case "edit_same_length" =>
+          rewriteSameLength(p, Files.readString(p).reverse.map(c => (c ^ 1).toChar))
+        case "delete" => Files.delete(p)
+      }
+      seen += ((if (side == src) "src" else "dst") -> op)
+      val want = fullHashPlan(src, dst)
+      assert(syncPlan(src, dst) === want, s"step $step: $op $n")
+      assert(visibleTree(dst) === visibleTree(src), s"step $step: $op $n")
+    }
+    // the sequence touched both sides with every kind of step
+    assert(seen.map(_._1) === Set("src", "dst"))
+    assert(seen.map(_._2) === Set("insert", "edit", "edit_same_length", "delete"))
+  }
+
+  test("SyncJob: a no-change run submits no Spark job; one new source file submits one") {
+    val src = tempDir("jobs_src")
+    val dst = tempDir("jobs_dst")
+    Seq("a", "b", "sub/c").foreach { n =>
+      Files.createDirectories(src.resolve(n).getParent)
+      Files.writeString(src.resolve(n), n)
+    }
+    syncPlan(src, dst)
+    val (idle, idleJobs) = jobsDuring(syncPlan(src, dst))
+    assert(idleJobs === 0)
+    assert(idle.map(_._2).toSet === Set("skip"))
+    Files.writeString(src.resolve("new"), "fresh")
+    val (one, oneJobs) = jobsDuring(syncPlan(src, dst))
+    assert(oneJobs === 1, "the hash scan of the new file")
+    assert(one.filter(_._2 != "skip").map(r => r._1 -> r._2) === Seq("new" -> "insert"))
+    assert(jobsDuring(syncPlan(src, dst))._2 === 0)
+  }
+
+  test("SyncJob: copies land through hidden temp names; none is left or listed") {
+    import graft.sync.SyncJob
+    val src = tempDir("tmp_src")
+    val dst = tempDir("tmp_dst")
+    Files.createDirectories(src.resolve("sub"))
+    Files.writeString(src.resolve("a"), "alpha")
+    Files.writeString(src.resolve("sub/b"), "beta")
+    Files.writeString(dst.resolve("a"), "stale")
+    syncPlan(src, dst)
+    Files.writeString(src.resolve("a"), "alpha v2")
+    syncPlan(src, dst)
+    val left = {
+      val w = Files.walk(dst)
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(dst.relativize(_).toString).toSet finally w.close()
+    }
+    // no temp file and no checksum file beside the mirror
+    assert(left === Set("a", "sub/b", SyncJob.ManifestName))
+    // a temp name is hidden from the catalog and from the file stream source
+    val land = tempDir("tmp_land").resolve("land")
+    Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.parquet(land.toString)
+    val part = {
+      val l = Files.list(land)
+      try l.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      finally l.close()
+    }
+    val tmp = SyncJob.tempPath(new org.apache.hadoop.fs.Path(
+      land.resolve("late.parquet").toString))
+    Files.copy(part, java.nio.file.Paths.get(tmp.toString))
+    assert(tmp.getName.startsWith("."))
+    assert(Catalog.listVisible(land.toString, spark.sparkContext.hadoopConfiguration)
+      .map(_.name) === Seq(part.getFileName.toString))
+    val drained = graft.stream.Streams.runAvailableNow(
+      graft.stream.Streams.fileSource(spark, land.toString,
+        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")),
+      "sync_tmp_probe")
+    assert(drained.count() === 3)
+  }
+
+  test("SyncJob quick check limit: a same-length edit with its mtime restored goes unseen") {
+    import graft.sync.SyncJob
+    val src = tempDir("lim_src")
+    val dst = tempDir("lim_dst")
+    Files.writeString(src.resolve("a"), "v1")
+    syncPlan(src, dst)
+    val mtime = Files.getLastModifiedTime(src.resolve("a"))
+    Files.writeString(src.resolve("a"), "v2")
+    Files.setLastModifiedTime(src.resolve("a"), mtime)
+    // the manifest vouches for the old md5: the reference's stored-ETag
+    // trust, and the plan differs from a full re-hash
+    assert(syncPlan(src, dst).map(_._2) === Seq("skip"))
+    assert(fullHashPlan(src, dst).map(_._2) === Seq("update"))
+    // deleting the manifest forces the full pass
+    Files.delete(dst.resolve(SyncJob.ManifestName))
+    val want = fullHashPlan(src, dst)
+    assert(syncPlan(src, dst) === want)
+    assert(Files.readString(dst.resolve("a")) === "v2")
   }
 
   test("SyncJob.runHttp: live index scrape with 403 retry/backoff applies end-to-end") {
