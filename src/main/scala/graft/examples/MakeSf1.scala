@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.Harness
 import graft.io.Tables
 
 /** Synthesize an sfN-shaped dataset (N× sf0.1) for the decade bench
@@ -15,12 +15,12 @@ import graft.io.Tables
   *  - relational keys (orders/lineitem/customer/supplier/part,
   *    events users) shift by replica, so join/group cardinalities
   *    scale ×N like real data;
-  *  - document text is token-salted per replica (the ScaleProbe twin
-  *    discipline): each replica keeps the base corpus's own
-  *    intra-replica near-dups (true-dup volume scales ×N, linear),
-  *    but no cross-replica pairs exist — an exact copy ×N would make
-  *    the true pair set quadratic and every dedup query's cost
-  *    unrepresentative;
+  *  - document text is token-salted per replica (the twin discipline
+  *    of the decade legs, BASELINE §12): each replica keeps the base
+  *    corpus's own intra-replica near-dups (true-dup volume scales ×N,
+  *    linear), but no cross-replica pairs exist — an exact copy ×N
+  *    would make the true pair set quadratic and every dedup query's
+  *    cost unrepresentative;
   *  - embeddings get a deterministic per-replica sign pattern, same
   *    rationale;
   *  - region/nation are fixed dimensions (25/5 rows) at every scale,
@@ -28,7 +28,9 @@ import graft.io.Tables
   *
   * Usage:
   *   `sbt "runMain graft.examples.MakeSf1 [outDir] [reps] [tablesCsv]"`
-  * then `SPARK_GRAFT_SF_DIR=outDir sbt "runMain graft.Bench"`.
+  * then `SPARK_GRAFT_SF_DIR=outDir sbt "runMain graft.Bench"`. The
+  * source tables and the session come from [[graft.Harness]]
+  * (`SPARK_GRAFT_SF_DIR`, default sf0.1; `SPARK_GRAFT_CPUS`).
   *
   * Args are POSITIONAL: `reps` defaults to 10 (the sf1 leg). The
   * ×100 capstone leg (VERDICT r9 #2) passes
@@ -40,12 +42,12 @@ import graft.io.Tables
   */
 object MakeSf1 {
   def main(args: Array[String]): Unit = {
-    val src = "/root/testdata/sf0.1"
+    val src = Harness.settings.sfDir
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] = args.drop(2).headOption
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = GraftSession.local(32, 32)
+    val spark = Harness.session()
 
     // With a table subset, pre-existing NON-selected tables in the out
     // dir are left untouched — a prior build at a different reps value

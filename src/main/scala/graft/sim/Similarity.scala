@@ -511,7 +511,7 @@ object Similarity {
     * caught by several bands BEFORE the exact cosine re-check would
     * multiply, and the re-check keeps precision exact.
     *
-    * PARAMETER LAW (measured in ScaleProbe): each band has only
+    * PARAMETER LAW (measured, BASELINE §5 and §12): each band has only
     * `2^rowsPerBand` buckets, so expected bucket occupancy is
     * `n / 2^rowsPerBand` and candidate volume is
     * `bands · 2^rowsPerBand · (n / 2^rowsPerBand)² / 2` — quadratic in n
@@ -524,7 +524,7 @@ object Similarity {
     * recall 1−(1−0.86^16)^4 ≈ 0.6–0.9 with 65 k–16 M buckets per band;
     * at rowsPerBand = 4 a 32 k-vector corpus already degenerates to
     * ~2 000-row buckets and the candidate join costs MORE than the
-    * all-pairs product (819 s vs est. ~60 s at ×16 in ScaleProbe).
+    * all-pairs product (819 s vs est. ~60 s at ×16, BASELINE §5).
     */
   def nearDupPairsLsh(corpus: DataFrame, threshold: Double = 0.5,
                       bands: Int = 8, rowsPerBand: Int = 4,

@@ -1,16 +1,16 @@
 package graft.stream
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
-/** Incrementally-maintained materialized aggregate: a `foreachBatch`
-  * sink that keeps a parquet-backed grouped-sum table up to date as
-  * micro-batches arrive, without ever recomputing history.
+import graft.io.Publish
+
+/** Incrementally-maintained materialized aggregate: [[applyBatch]],
+  * called per micro-batch from a `foreachBatch` sink, keeps a
+  * parquet-backed grouped-sum table up to date as micro-batches
+  * arrive, without ever recomputing history.
   *
   * Storage layout — the minimal snapshot-isolation scheme the big
   * table formats use:
@@ -20,6 +20,8 @@ import org.apache.spark.sql.types.StructType
   *    proportional to |keys| not history length);
   *  - `_latest` is a tiny pointer file, rewritten LAST — readers
   *    resolve it and only ever see a fully-written snapshot;
+  *  - snapshots, pointer and [[vacuum]] all go through the dir's Hadoop
+  *    `FileSystem`, so a `file:`, `hdfs:` or `s3a:` dir holds all three;
   *  - the pointer records the batchId, so a REDELIVERED batch (the
   *    at-least-once case after a crash between sink commit and
   *    checkpoint commit) is recognized and skipped — this is the
@@ -34,15 +36,18 @@ import org.apache.spark.sql.types.StructType
   */
 object IncrementalView {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
+  private def pointer(dir: String) = new Path(dir, "_latest")
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** (version, batchId) from the pointer, if any snapshot committed. */
-  def latest(dir: String): Option[(String, Long)] = {
-    val p = pointerPath(dir)
-    if (!Files.exists(p)) None
+  def latest(spark: SparkSession, dir: String): Option[(String, Long)] = {
+    val p = pointer(dir)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) None
     else {
-      val Array(v, b) = new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8).trim.split(":")
+      val Array(v, b) = Publish.readString(fs, p).trim.split(":")
       Some((v, b.toLong))
     }
   }
@@ -52,23 +57,24 @@ object IncrementalView {
     * never hardcoded) when nothing has committed yet.
     */
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    latest(dir) match {
+    latest(spark, dir) match {
       case Some((v, _)) => spark.read.parquet(s"$dir/$v")
       case None =>
         spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     }
 
-  /** Apply ONE micro-batch to the materialized table — the unit the
-    * sink delegates to, public so the idempotence guard is directly
-    * testable. Returns true when applied, false when skipped as
-    * already-applied (redelivery).
+  /** Apply ONE micro-batch to the materialized table — what a
+    * `foreachBatch` sink calls per batch, e.g.
+    * `Streams.foreachBatchRecompute(stream, applyBatch(_, _, dir, "user_id", "value", "total"))`.
+    * Returns true when applied, false when skipped as already-applied
+    * (redelivery).
     */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
                  keyCol: String, valueCol: String, aggCol: String): Boolean = {
-    val at = latest(dir)
+    val spark = batch.sparkSession
+    val at = latest(spark, dir)
     if (at.exists(_._2 >= batchId)) false
     else {
-      val spark = batch.sparkSession
       val partial = batch.groupBy(col(keyCol))
         .agg(sum(col(valueCol)).as(aggCol))
       // every snapshot is written with the partial's schema (a decimal
@@ -83,15 +89,11 @@ object IncrementalView {
       merged.write.mode("overwrite").parquet(s"$dir/$v")
       // pointer swap LAST — readers never see a partial snapshot. The
       // pointer itself gets the same protection as the snapshot:
-      // write-to-temp + ATOMIC_MOVE, because an in-place truncate-
-      // then-write leaves a window where a concurrent latest() reads
-      // an empty/partial pointer and crashes parsing it.
-      Files.createDirectories(Paths.get(dir))
-      val tmp = Paths.get(dir, "._latest.tmp")
-      Files.write(tmp, s"$v:$batchId".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, pointerPath(dir),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // write-to-temp + rename, because an in-place truncate-then-write
+      // leaves a window where a concurrent latest() reads an
+      // empty/partial pointer and crashes parsing it.
+      val p = pointer(dir)
+      Publish.writeString(fsOf(spark, p), p, s"$v:$batchId")
       true
     }
   }
@@ -101,30 +103,16 @@ object IncrementalView {
     * readers resolving an older pointer finish first — same contract
     * as table-format VACUUM.
     */
-  def vacuum(dir: String, keep: Int = 2): Unit = {
-    val d = Paths.get(dir)
-    if (Files.exists(d)) {
-      val keepSet = latest(dir).map(_._1).toSet
-      d.toFile.listFiles().toSeq.filter(_.getName.startsWith("v"))
+  def vacuum(spark: SparkSession, dir: String, keep: Int = 2): Unit = {
+    val d = new Path(dir)
+    val fs = fsOf(spark, d)
+    if (fs.exists(d)) {
+      val keepSet = latest(spark, dir).map(_._1).toSet
+      fs.listStatus(d).toSeq.map(_.getPath).filter(_.getName.startsWith("v"))
         .sortBy(_.getName.drop(1).toLong)
         .dropRight(keep)
-        .filterNot(f => keepSet(f.getName))
-        .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+        .filterNot(p => keepSet(p.getName))
+        .foreach(fs.delete(_, true))
     }
   }
-
-  /** Attach the incremental grouped-sum sink to `stream`. The
-    * maintained table is `keyCol, aggCol` = running sum of `valueCol`
-    * per key.
-    */
-  def groupedSumSink(stream: DataFrame, dir: String,
-                     keyCol: String = "user_id",
-                     valueCol: String = "value",
-                     aggCol: String = "total")
-  : DataStreamWriter[Row] =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, dir, keyCol, valueCol, aggCol)
-        ()
-    }
 }

@@ -1,16 +1,14 @@
 package graft.sync
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.io.{Catalog, Sinks}
+import graft.io.{Catalog, Publish, Sinks}
 
 /** End-to-end catalog sync: mirror `srcDir` into `dstDir` — the whole of
   * the reference's `sync_files()` (`lambda_functions/sync_and_fetch.py:
@@ -25,7 +23,8 @@ import graft.io.{Catalog, Sinks}
   *  3. classify every key insert / update / skip / delete
   *     ([[CdcMerge.plan]], on the driver);
   *  4. apply: copy insert+update (each to a hidden temp name, then
-  *     renamed into place), delete orphans, rewrite the manifest.
+  *     renamed into place: [[Publish]]), delete orphans, rewrite the
+  *     manifest.
   *
   * Listing, decision and apply run on the driver over keys, like the
   * reference's per-key loop; hashing, the part that reads content, is
@@ -94,8 +93,8 @@ object SyncJob {
     dstFs.mkdirs(new Path(dstDir))
     val copied = plan.filter(d => CdcMerge.fetchActions(d.action)).map { d =>
       val target = new Path(s"$dstDir/${d.name}")
-      d.name -> moveIntoPlace(dstFs, target) { tmp =>
-        FileUtil.copy(srcFs, new Path(s"$srcDir/${d.name}"), unchecked(dstFs),
+      d.name -> Publish.moveIntoPlace(dstFs, target) { tmp =>
+        FileUtil.copy(srcFs, new Path(s"$srcDir/${d.name}"), Publish.unchecked(dstFs),
           tmp, false, true, conf)
       }
     }.toMap
@@ -116,51 +115,13 @@ object SyncJob {
   private val PlanSchema = StructType(Seq("name", "action", "remote_hash",
     "stored_hash").map(StructField(_, StringType)))
 
-  /** Writes `target` through a hidden temp file in its directory, then
-    * renames it into place, so a reader listing the directory never
-    * sees a half-written file. Returns the (length, mtime) `target`
-    * has after the rename. The rename goes through `fs`, which drops a
-    * checksum file an older copy of `target` left.
-    */
-  private def moveIntoPlace(fs: FileSystem, target: Path)(write: Path => Unit)
-  : (Long, Long) = {
-    val tmp = tempPath(target)
-    try {
-      write(tmp)
-      // a rename onto an existing file fails on some file systems
-      // (HDFS): drop the old copy and retry once
-      if (!fs.rename(tmp, target) &&
-          !(fs.delete(target, false) && fs.rename(tmp, target)))
-        throw new java.io.IOException(s"cannot rename $tmp to $target")
-    } finally fs.delete(tmp, false)
-    val st = fs.getFileStatus(target)
-    (st.getLen, st.getModificationTime)
-  }
-
-  /** `fs` without client-side checksum files. The sync writes the mirror
-    * and the manifest through it: a `.crc` file beside a mirrored file
-    * fails every later read of that file once it is edited out of band,
-    * and the sync must read such a file to see the edit.
-    */
-  private def unchecked(fs: FileSystem): FileSystem = fs match {
-    case c: ChecksumFileSystem => c.getRawFileSystem
-    case f => f
-  }
-
-  /** The hidden temp name `target` is written under before its rename. */
-  private[graft] def tempPath(target: Path): Path =
-    new Path(target.getParent,
-      s".${target.getName}.${java.util.UUID.randomUUID()}.graft_tmp")
-
   /** The manifest's rows by key; empty (a full re-hash) when the file is
     * missing or does not parse.
     */
   private def readManifest(fs: FileSystem, manifest: Path): Map[String, Kept] =
     if (!fs.exists(manifest)) Map.empty
     else {
-      val in = fs.open(manifest)
-      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
-      val lines = text.split("\n", -1)
+      val lines = Publish.readString(fs, manifest).split("\n", -1)
       try {
         require(lines.head == ManifestHeader && lines.last.isEmpty)
         lines.slice(1, lines.length - 1).map { l =>
@@ -181,10 +142,7 @@ object SyncJob {
       case (n, k) if !n.exists(c => c == '\n' || c == '\r') =>
         s"${k.md5}\t${k.src._1}\t${k.src._2}\t${k.dst._1}\t${k.dst._2}\t$n\n"
     }.mkString(ManifestHeader + "\n", "", "")
-    moveIntoPlace(fs, manifest) { tmp =>
-      val out = unchecked(fs).create(tmp, true)
-      try out.write(body.getBytes(UTF_8)) finally out.close()
-    }
+    Publish.writeString(fs, manifest, body)
   }
 
   /** The reference's FULL loop (`Task_1_sync_bls_files.py:36-74,

@@ -110,7 +110,7 @@ object QualityModel {
 
   /** Above this dimension the weight vector ships as a
     * `SparkContext.broadcast` instead of a plan literal. Measured
-    * (ScaleProbe `quality`, VERDICT r8 #5): the literal path SURVIVES
+    * (BASELINE §13, VERDICT r8 #5): the literal path SURVIVES
     * codegen at D=2²⁰ (the array is literal DATA — one object
     * reference, never per-element generated code, so no
     * HugeMethodLimit exposure) but pays a corpus-size-INDEPENDENT
@@ -125,11 +125,11 @@ object QualityModel {
 
   /** [[scoreDocs]] with an explicit model — the drop-in point for a
     * real trained weight vector (any dimension; the hash re-buckets to
-    * `w.length`). Also the production-dimension probe surface:
-    * ScaleProbe's `quality` section pushes a 2²⁰-bucket model through
-    * this exact path to MEASURE plan-build, first-run
-    * (codegen+broadcast), and steady-state cost rather than asserting
-    * them (VERDICT r8 #5; numbers in BASELINE.md §12). Weight access
+    * `w.length`). Also the production-dimension surface: a 2²⁰-bucket
+    * model through this exact path was measured for plan-build,
+    * first-run (codegen+broadcast) and steady-state cost (VERDICT r8
+    * #5; numbers in BASELINE.md §13), and TextSpec scores one with
+    * codegen fallback off, so a codegen failure throws. Weight access
     * is a plan literal up to [[LiteralDimMax]] and a broadcast
     * `long[]` above it ([[graft.functions.BroadcastLongArrayGet]]) —
     * bit-identical scores either way (integer arithmetic, same

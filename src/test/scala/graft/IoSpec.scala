@@ -381,7 +381,14 @@ class IoSpec extends SparkSpec {
     Files.createDirectories(src.resolve("sub"))
     Files.writeString(src.resolve("a"), "alpha")
     Files.writeString(src.resolve("sub/b"), "beta")
+    Files.writeString(src.resolve("c"), "gamma")
     Files.writeString(dst.resolve("a"), "stale")
+    // an older copy written through the checksummed local file system
+    // leaves a checksum file, which the update must not leave behind
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val old = local.create(new org.apache.hadoop.fs.Path(dst.resolve("c").toUri))
+    try old.write("stale".getBytes) finally old.close()
+    assert(Files.exists(dst.resolve(".c.crc")))
     syncPlan(src, dst)
     Files.writeString(src.resolve("a"), "alpha v2")
     syncPlan(src, dst)
@@ -391,7 +398,8 @@ class IoSpec extends SparkSpec {
         .map(dst.relativize(_).toString).toSet finally w.close()
     }
     // no temp file and no checksum file beside the mirror
-    assert(left === Set("a", "sub/b", SyncJob.ManifestName))
+    assert(left === Set("a", "sub/b", "c", SyncJob.ManifestName))
+    assert(Files.readString(dst.resolve("c")) === "gamma")
     // a temp name is hidden from the catalog and from the file stream source
     val land = tempDir("tmp_land").resolve("land")
     Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.parquet(land.toString)
@@ -400,7 +408,7 @@ class IoSpec extends SparkSpec {
       try l.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
       finally l.close()
     }
-    val tmp = SyncJob.tempPath(new org.apache.hadoop.fs.Path(
+    val tmp = graft.io.Publish.tempPath(new org.apache.hadoop.fs.Path(
       land.resolve("late.parquet").toString))
     Files.copy(part, java.nio.file.Paths.get(tmp.toString))
     assert(tmp.getName.startsWith("."))
@@ -411,6 +419,27 @@ class IoSpec extends SparkSpec {
         org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")),
       "sync_tmp_probe")
     assert(drained.count() === 3)
+  }
+
+  test("Publish.writeString replaces a file atomically: never seen absent or partial") {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val local = tempDir("publish").resolve("_latest")
+    val target = new org.apache.hadoop.fs.Path(local.toUri)
+    graft.io.Publish.writeString(fs, target, "v0:0")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    @volatile var done = false
+    val reader = new Thread(() => while (!done) {
+      val text = try Files.readString(local)
+        catch { case e: java.io.IOException => s"unreadable: $e" }
+      if (!text.matches("v\\d+:\\d+")) seen.add(text)
+    })
+    reader.start()
+    try (1 to 300).foreach(i => graft.io.Publish.writeString(fs, target, s"v$i:$i"))
+    finally { done = true; reader.join() }
+    assert(seen.isEmpty, seen.asScala.take(3).mkString("; "))
+    assert(Files.readString(local) === "v300:300")
+    // no temp name and no checksum file left beside it
+    assert(local.getParent.toFile.list().toSeq === Seq("_latest"))
   }
 
   test("SyncJob quick check limit: a same-length edit with its mtime restored goes unseen") {

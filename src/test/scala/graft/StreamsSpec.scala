@@ -537,9 +537,13 @@ class StreamsSpec extends SparkSpec {
     val viewDir = tempDir("inc_view").toString
     val ckpt = tempDir("inc_ckpt").toString
     def runOnce(): Unit = {
-      val q = IncrementalView.groupedSumSink(
+      val q = Streams.foreachBatchRecompute(
         Streams.fileSource(spark, landingDir, schema,
-          maxFilesPerTrigger = Some(1)), viewDir)
+          maxFilesPerTrigger = Some(1)),
+        (batch, id) => {
+          IncrementalView.applyBatch(batch, id, viewDir, "user_id", "value", "total")
+          ()
+        })
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -559,10 +563,10 @@ class StreamsSpec extends SparkSpec {
       .groupBy("user_id").agg(sum("value").as("t")).collect()
       .map(r => r.getLong(0) -> math.rint(r.getDouble(1) * 100)).toMap
     assert(got === want)
-    val version = IncrementalView.latest(viewDir)
+    val version = IncrementalView.latest(spark, viewDir)
     runOnce() // same checkpoint, no new files: nothing reapplied
     assert(snapshot() === want)
-    assert(IncrementalView.latest(viewDir) === version)
+    assert(IncrementalView.latest(spark, viewDir) === version)
     // redelivery guard, exercised DIRECTLY: re-applying an old batchId
     // (the crash-between-sink-and-checkpoint case) must be a no-op —
     // the stream rerun above never reaches foreachBatch at all
@@ -570,9 +574,9 @@ class StreamsSpec extends SparkSpec {
     assert(!IncrementalView.applyBatch(staleBatch, batchId = 0,
       viewDir, "user_id", "value", "total"))
     assert(snapshot() === want)
-    assert(IncrementalView.latest(viewDir) === version)
+    assert(IncrementalView.latest(spark, viewDir) === version)
     // a genuinely NEW batch id applies incrementally
-    val extra = IncrementalView.latest(viewDir).get._2 + 1
+    val extra = IncrementalView.latest(spark, viewDir).get._2 + 1
     assert(IncrementalView.applyBatch(staleBatch, extra,
       viewDir, "user_id", "value", "total"))
     val bumped = staleBatch.groupBy("user_id").agg(sum("value").as("t"))
@@ -584,8 +588,31 @@ class StreamsSpec extends SparkSpec {
         s"user $u incremental re-merge")
     }
     // vacuum drops old snapshots but never the committed one
-    IncrementalView.vacuum(viewDir, keep = 1)
+    def snapshots() = new java.io.File(viewDir).list().filter(_.startsWith("v")).toSet
+    assert(snapshots().size > 1)
+    IncrementalView.vacuum(spark, viewDir, keep = 1)
+    assert(snapshots() === Set(s"v$extra"))
     assert(snapshot() === after)
+  }
+
+  test("incremental view over a file: URI dir: pointer inside it, read and vacuum see it") {
+    import spark.implicits._
+    import graft.stream.IncrementalView
+    val local = tempDir("inc_view_uri").resolve("view")
+    val dir = s"file://$local"
+    assert(IncrementalView.applyBatch(
+      Seq((1L, 2.0), (2L, 3.0), (1L, 4.0)).toDF("user_id", "value"), 0, dir,
+      "user_id", "value", "total"))
+    assert(IncrementalView.applyBatch(
+      Seq((2L, 1.0), (3L, 5.0)).toDF("user_id", "value"), 1, dir,
+      "user_id", "value", "total"))
+    assert(Files.isRegularFile(local.resolve("_latest")))
+    val got = IncrementalView.read(spark, dir,
+        org.apache.spark.sql.types.StructType.fromDDL("user_id BIGINT, total DOUBLE"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got === Map(1L -> 6.0, 2L -> 4.0, 3L -> 5.0))
+    IncrementalView.vacuum(spark, dir, keep = 1)
+    assert(local.toFile.list().filter(_.startsWith("v")).toSet === Set("v1"))
   }
 
   test("foreachBatch recompute sees every micro-batch (reference ST3)") {

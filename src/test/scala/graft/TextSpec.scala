@@ -222,6 +222,40 @@ class TextSpec extends SparkSpec {
       "broadcast weight path must equal the literal path")
   }
 
+  test("QualityModel at D=2^20: the broadcast path scores exactly with codegen fallback off") {
+    import graft.text.QualityModel
+    val dim = 1 << 20
+    assert(dim > QualityModel.LiteralDimMax)
+    val w = Array.tabulate(dim)(i =>
+      ((i.toLong * 2654435761L + 987654321L) % 2000001L) - 1000000L)
+    val b = -250000L
+    // the same independent recomputation as the scoreMicro test: each
+    // feature hashed with Spark's xxhash64 into `dim` buckets
+    def want(feats: String*): Long =
+      feats.toDF("t").select(pmod(xxhash64(col("t")), lit(dim)))
+        .collect().map(r => w(r.getLong(0).toInt)).sum + b
+    val path = tempDir("quality_d20").resolve("docs").toString
+    Seq((1L, "Alpha  BETA"), (2L, "gamma"), (3L, ""), (4L, null))
+      .toDF("doc_id", "text").write.parquet(path)
+    val before = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val scored = QualityModel.scoreDocsWith(spark.read.parquet(path), w, b)
+      assert(scored.queryExecution.optimizedPlan.toString
+        .contains("broadcast_weights_get"))
+      val got = scored.select("doc_id", "score_micro").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(1L -> want("alpha", "beta", "alpha beta"),
+        2L -> want("gamma"), 3L -> b, 4L -> b))
+    } finally {
+      before match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+        case None => spark.conf.unset("spark.sql.codegen.fallback")
+      }
+      graft.ops.Materialize.releaseOwned(spark)
+    }
+  }
+
   test("gopherRules: signals on a hand-checkable fixture, integer gate, edge docs") {
     import graft.text.TextAnalysis
     // doc 1: "the the the the" — 4 words, top bigram "the the" = 3/3,
